@@ -28,7 +28,7 @@ if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
 
 from flink_mingo_tail_spark.queries import load_registry
-from flink_mingo_tail_spark.session import build_session
+from flink_mingo_tail_spark.session import LOCAL_CPUS, build_session
 from flink_mingo_tail_spark.tables import TABLE_NAMES, load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -469,7 +469,7 @@ def emit_results(timings, sf, streaming, streaming_jvm, streaming_floor) -> None
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": LOCAL_CPUS,
         "streaming_cdc": streaming,
         "streaming_cdc_jvm": streaming_jvm,
         "streaming_cdc_floor": streaming_floor,

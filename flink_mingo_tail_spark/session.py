@@ -1,9 +1,12 @@
 """SparkSession construction tuned for this engine.
 
-Local test boxes run ``local[32]``; production target is a large
-multi-executor cluster reading ~100 TB, so every knob here is chosen to
-also make sense at that scale (AQE on, skew-join handling on, sane
-shuffle parallelism, Arrow for the Python boundary).
+Local runs size themselves to the machine: ``local[N]`` over the cores
+this process may run on, and a driver heap that is a share of physical
+memory (``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` override
+both). Production target is a large multi-executor cluster reading
+~100 TB, so every other knob here is chosen to also make sense at that
+scale (AQE on, skew-join handling on, sane shuffle parallelism, Arrow
+for the Python boundary).
 """
 
 from __future__ import annotations
@@ -12,21 +15,38 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the local[32] test box; on a real cluster these are
-# overridden by spark-submit conf (shuffle partitions ~ 2-3x total cores).
-_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Share of physical memory given to the driver JVM's heap when
+# SPARK_GRAFT_DRIVER_MEM is unset: the JVM's own default share, which
+# leaves room for the Python workers beside it.
+_DRIVER_MEM_SHARE = 4
+
+
+def _default_cpus() -> int:
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _default_driver_mem() -> str:
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")  # MemTotal
+    return f"{max(1024, (total // _DRIVER_MEM_SHARE) >> 20)}m"
+
+
+# On a real cluster these are overridden by spark-submit conf (shuffle
+# partitions ~ 2-3x total cores).
+LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(_default_cpus())
 
 
 def build_session(app_name: str = "flink-mingo-tail-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Create (or fetch) a SparkSession with scale-aware defaults."""
     builder = (
-        SparkSession.builder.master(f"local[{_LOCAL_CPUS}]")
+        SparkSession.builder.master(f"local[{LOCAL_CPUS}]")
         .appName(app_name)
         # AQE: runtime coalescing, skew-join splitting, join re-planning.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _LOCAL_CPUS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or LOCAL_CPUS))
         # Deterministic timestamp semantics for the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for any pandas_udf / toPandas boundary.
@@ -34,7 +54,7 @@ def build_session(app_name: str = "flink-mingo-tail-spark", *, shuffle_partition
         # Allow custom Python data sources to receive pushed filters
         # (sources/oplog.py implements the reference's server-side $match).
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         # Managed-table warehouse (bucketed tables) outside the repo tree.
         .config(

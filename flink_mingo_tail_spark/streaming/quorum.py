@@ -11,27 +11,57 @@ Four deliberate fixes over the reference (SURVEY.md §4.3):
   `replicaDepth` arrivals, so one dead replica stalls emission forever
   and strands its counter entries. Quorum here defaults to
   ``replica_depth // 2 + 1``.
-* **event-time state TTL** — keys that never reach quorum are evicted
+* **event-time state TTL** — ops that never reach quorum are evicted
   once the watermark passes (op event time + ttl), instead of leaking
-  (`documentCounter` in the reference grows unboundedly). Event-time
-  timers keep micro-batches purely data-driven (processing-time timers
-  would spin empty cleanup batches).
+  (`documentCounter` in the reference grows unboundedly).
 * **offsets commit after sink commit** — inherited from Structured
   Streaming's checkpoint protocol, fixing the reference's
   checkpoint-before-emit loss window.
 * **per-shard replica depth** — the reference sizes every op's counter
   from the FIRST shard's member count (MongoOplogTailMapper.java:64);
   ``shard_depths`` gives each op its own shard's majority instead
-  (joined in as a per-row column — state stays keyed by `h` alone).
+  (joined in as a per-row column, so the state needs no second key).
 
-Spark mapping: keyed state via ``applyInPandasWithState`` on the op id
-``h`` with ``EventTimeTimeout``. State = (arrivals seen, emitted?, first
-payload). The operator sits directly downstream of the source — before
-any wide transformation — mirroring the reference's "dedup before
-fan-out" plan shape (SURVEY.md §4.1), which shrinks the stream
-replica_depth× before any shuffle. Like dropDuplicatesWithinWatermark,
-exactly-once holds for deliveries within the TTL horizon; stragglers
-beyond it restart the count (documented at-least-once tail).
+Spark mapping: ``applyInPandasWithState`` grouped by hash bucket
+``pmod(h, N_BUCKETS)``, not by op id. Each bucket holds ONE state row of
+parallel arrays, one element per live op: ``h``, ``seen`` (arrivals
+counted), ``emitted``, and the first-delivered payload (``ts_t``,
+``ts_i``, ``op``, ``ns``, ``o``), stored together as one Arrow IPC
+stream in a binary column. Once an op is emitted its document (``op``,
+``ns``, ``o``) is cleared: the entry only has to recognise later
+deliveries until it is evicted. One Python call per bucket per
+micro-batch merges all of the batch's deliveries for that bucket and
+emits each op in the call where its count reaches its quorum (the
+uniform one, or the per-row ``__quorum`` of its shard). The per-call
+cost is fixed, so a trigger costs a few calls instead of one per op.
+
+Eviction is in-band and the operator runs with
+``GroupStateTimeout.NoTimeout``: inside the same call, entries with
+``ts_t*1000 + ttl < watermark`` are dropped. There is no timeout phase
+and the watermark never schedules a no-data batch. A bucket that gets no
+data in a trigger is not called, so it keeps its entries until its next
+delivery arrives; that memory is bounded by what the bucket held when it
+was last called. With ops spread over only ``N_BUCKETS`` buckets, any
+live stream reaches every bucket within a few triggers.
+
+Late deliveries are dropped, not counted: a delivery with
+``ts_t*1000 <= watermark`` never reaches the merge. Spark applies that
+late-row filter itself only under ``EventTimeTimeout``, so the function
+does it here. A straggler behind the watermark therefore can neither
+re-emit an evicted op nor start a fresh count for it. Exactly-once holds
+for deliveries inside the watermark delay + TTL horizon; a member that
+lags beyond the watermark delay loses its (redundant) deliveries.
+
+The operator sits directly downstream of the source — before any wide
+transformation — mirroring the reference's "dedup before fan-out" plan
+shape (SURVEY.md §4.1), which shrinks the stream replica_depth× before
+any shuffle.
+
+Checkpoints: the state schema is the bucket layout above, so a
+checkpoint written by the earlier per-op-id form (one state row per
+``h``) cannot be resumed; start that query from a new checkpoint
+location. ``N_BUCKETS`` must not change under a live checkpoint: an op
+re-keyed to another bucket would lose its count and could emit twice.
 
 Batch twin: ``quorum_dedup_batch`` (used by the oracle-checked q62 and
 the replay tests).
@@ -42,11 +72,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BooleanType,
+    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -68,25 +99,45 @@ OP_SCHEMA = StructType(
     ]
 )
 
-_STATE_SCHEMA = StructType(
+_OUT_COLS = [f.name for f in OP_SCHEMA.fields]
+_PAYLOAD_COLS = _OUT_COLS[1:]
+_DOC_COLS = ["op", "ns", "o"]
+
+# State rows per query. Each bucket costs one Python call per trigger;
+# on a 4-core box 16 buckets measured no better than 4 on cdc_tail.
+# Part of the checkpoint's meaning: never change it under a live one.
+N_BUCKETS = 4
+
+# One row per bucket holding the parallel arrays, one element per live
+# op, as a single Arrow IPC stream. Array-typed state columns would work
+# too, but Spark then builds their (MapObjects) state deserializer anew
+# and compiles it in every micro-batch; a binary column has nothing to
+# compile.
+_STATE_SCHEMA = StructType([StructField("ops", BinaryType(), False)])
+_STATE_ARROW = pa.schema(
     [
-        StructField("seen", IntegerType(), False),
-        StructField("emitted", BooleanType(), False),
-        StructField("ts_t", IntegerType(), True),
-        StructField("ts_i", IntegerType(), True),
-        StructField("op", StringType(), True),
-        StructField("ns", StringType(), True),
-        StructField("o", StringType(), True),
+        ("h", pa.int64()),
+        ("seen", pa.int32()),
+        ("emitted", pa.bool_()),
+        ("ts_t", pa.int32()),
+        ("ts_i", pa.int32()),
+        ("op", pa.string()),
+        ("ns", pa.string()),
+        ("o", pa.string()),
     ]
 )
-
-_OUT_COLS = [f.name for f in OP_SCHEMA.fields]
+# Value dtypes of the in-call frame (indexed by `h`): int64 so that
+# ts_t * 1000 cannot overflow.
+_STATE_DTYPES = {
+    "seen": "int64", "emitted": "bool", "ts_t": "int64", "ts_i": "int64",
+    "op": "object", "ns": "object", "o": "object",
+}
 
 # Per-row quorum column name for heterogeneous shard depths (see
 # _with_quorum_col): every delivery of an op carries its shard's quorum,
-# so keyed state stays keyed by `h` alone and no second dimension leaks
-# into the state key space.
+# so the state needs no second key dimension.
 _QUORUM_COL = "__quorum"
+_BUCKET_COL = "__bucket"
 
 
 def _with_quorum_col(ops: DataFrame, default_quorum: int, shard_depths: dict[str, int] | None):
@@ -109,68 +160,69 @@ def _with_quorum_col(ops: DataFrame, default_quorum: int, shard_depths: dict[str
     ).drop("shard")
 
 
-def _quorum_fn(quorum: int, state_ttl_ms: int, per_shard: bool = False):
-    """Build the per-key stateful function (module-level factory so Spark
-    can pickle the closure to executors). ``per_shard`` means the rows
-    carry a __quorum column (heterogeneous shard depths); otherwise the
-    uniform ``quorum`` is baked into the closure.
+def _load_state(state: GroupState) -> pd.DataFrame:
+    """The bucket's live ops as a frame indexed by `h`."""
+    if state.exists:
+        ops = pa.ipc.open_stream(state.get[0]).read_all()
+    else:
+        ops = _STATE_ARROW.empty_table()
+    return ops.to_pandas().astype({"h": "int64", **_STATE_DTYPES}).set_index("h")
 
-    Hot-path notes: this function runs once per KEY per micro-batch
-    (50k+ calls/batch at bench scale), so per-call pandas overhead is
-    the throughput ceiling. Scalars are read with per-column ``.iat[0]``
-    — ``pdf.iloc[0]`` would materialize a mixed-dtype Series per key
-    (~2x slower end-to-end, measured) — and the column presence check is
-    resolved once at plan build, not per key."""
+
+def _dump_state(st: pd.DataFrame) -> bytes:
+    ops = pa.Table.from_pandas(st.reset_index(), schema=_STATE_ARROW, preserve_index=False)
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, _STATE_ARROW) as writer:
+        writer.write_table(ops)
+    return sink.getvalue().to_pybytes()
+
+
+def _quorum_fn(quorum: int, state_ttl_ms: int, per_shard: bool = False):
+    """Build the per-bucket stateful function (module-level factory so
+    Spark can pickle the closure to executors). ``per_shard`` means the
+    rows carry a __quorum column (heterogeneous shard depths); otherwise
+    the uniform ``quorum`` is baked into the closure.
+
+    One call sees every delivery of the bucket in this micro-batch, so
+    the work is a handful of vectorised pandas operations per call, not
+    a Python loop per op."""
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # Sub-quorum straggler (or long-emitted key): evict — the fix
-            # for the reference's unbounded documentCounter leak.
-            state.remove()
-            return
-        seen, emitted, ts_t, ts_i, op, ns, o = (
-            state.get if state.exists else (0, False, None, None, None, None, None)
-        )
-        n_new = 0
-        max_ts_t = 0
-        key_quorum = quorum
-        for pdf in pdfs:
-            n = len(pdf)
-            if n:
-                if per_shard:
-                    key_quorum = int(pdf[_QUORUM_COL].iat[0])
-                if ts_t is None:
-                    ts_t = int(pdf["ts_t"].iat[0])
-                    ts_i = int(pdf["ts_i"].iat[0])
-                    op = pdf["op"].iat[0]
-                    ns = pdf["ns"].iat[0]
-                    o = pdf["o"].iat[0]
-                # numpy path: Series.max() carries ~3x the per-call
-                # overhead, and this runs once per key per batch
-                t = int(pdf["ts_t"].to_numpy().max())
-                if t > max_ts_t:
-                    max_ts_t = t
-                n_new += n
-        seen += n_new
-        if not emitted and seen >= key_quorum:
-            emitted = True
-            yield pd.DataFrame(
-                {
-                    "h": (key[0],),
-                    "ts_t": (ts_t,),
-                    "ts_i": (ts_i,),
-                    "op": (op,),
-                    "ns": (ns,),
-                    "o": (o,),
-                }
-            )
-        state.update((seen, emitted, ts_t, ts_i, op, ns, o))
-        # Event-time TTL: state lives until watermark > op time + ttl.
-        # Guard: Spark requires the timeout to sit beyond the watermark.
         wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(max_ts_t * 1000 + state_ttl_ms, wm + 1))
+        batch = pd.concat(list(pdfs), ignore_index=True)
+        # Late-row drop: Spark filters rows at or behind the watermark
+        # only under EventTimeTimeout, and this operator runs NoTimeout.
+        batch = batch[batch["ts_t"].to_numpy(dtype="int64") * 1000 > wm]
+        st = _load_state(state)
+
+        # Merge: new ops enter with their first-delivered payload, then
+        # every op of the batch adds its arrivals.
+        first = batch.drop_duplicates("h").set_index("h")
+        fresh = first.loc[~first.index.isin(st.index), _PAYLOAD_COLS]
+        if len(fresh):
+            fresh = fresh.assign(seen=0, emitted=False)
+            st = pd.concat([st, fresh[st.columns]]).astype(_STATE_DTYPES)
+        arrivals = batch.groupby("h", sort=False).size()
+        hs = arrivals.index
+        seen = st.loc[hs, "seen"].to_numpy() + arrivals.to_numpy()
+        st.loc[hs, "seen"] = seen
+        need = first.loc[hs, _QUORUM_COL].to_numpy() if per_shard else quorum
+        fire = hs[~st.loc[hs, "emitted"].to_numpy() & (seen >= need)]
+        if len(fire):
+            st.loc[fire, "emitted"] = True
+            yield st.loc[fire, _PAYLOAD_COLS].reset_index()
+            # An emitted op only has to be recognised until it is evicted:
+            # drop its document so that the state carries ids and times.
+            st.loc[fire, _DOC_COLS] = None
+
+        # In-band TTL eviction: no timeout phase, no no-data batch.
+        st = st[st["ts_t"].to_numpy() * 1000 + state_ttl_ms >= wm]
+        if len(st):
+            state.update((_dump_state(st),))
+        elif state.exists:
+            state.remove()
 
     return fn
 
@@ -183,12 +235,13 @@ def quorum_dedup_stream(
     watermark_delay: str = "10 seconds",
     shard_depths: dict[str, int] | None = None,
 ) -> DataFrame:
-    """Streaming quorum dedup keyed by op id `h`.
+    """Streaming quorum dedup: state keyed by ``pmod(h, N_BUCKETS)``,
+    TTL eviction inside the per-bucket call (module docstring).
 
     ``ops`` must carry the OP_SCHEMA columns (extra columns such as
     member_host are dropped — they only exist to multiply deliveries).
     The oplog timestamp seconds (`ts_t`) provide the event-time clock
-    for the watermark and state TTL.
+    for the watermark, the late-delivery drop and the state TTL.
 
     ``shard_depths`` maps shard name -> replica-set size for
     heterogeneous clusters (a 2-member and a 3-member shard in one
@@ -198,18 +251,21 @@ def quorum_dedup_stream(
     Requires a `shard` column on ``ops``.
     """
     q = quorum if quorum is not None else replica_depth // 2 + 1
-    with_time = _with_quorum_col(ops, q, shard_depths).withColumn(
-        "event_ts", F.timestamp_seconds(F.col("ts_t"))
+    with_time = _with_quorum_col(ops, q, shard_depths).withColumns(
+        {
+            "event_ts": F.timestamp_seconds(F.col("ts_t")),
+            _BUCKET_COL: F.pmod(F.col("h"), F.lit(N_BUCKETS)),
+        }
     )
     return (
         with_time.withWatermark("event_ts", watermark_delay)
-        .groupBy("h")
+        .groupBy(_BUCKET_COL)
         .applyInPandasWithState(
             _quorum_fn(q, state_ttl_ms, per_shard=bool(shard_depths)),
             outputStructType=OP_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -250,96 +306,6 @@ def quorum_dedup_batch(
         F.col("first.op").alias("op"),
         F.col("first.ns").alias("ns"),
         F.col("first.o").alias("o"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState variant (Spark 4 stateful API)
-# ---------------------------------------------------------------------------
-# Same semantics as quorum_dedup_stream, built on the newer
-# transformWithStateInPandas processor API (typed value state + event-time
-# timers). Kept alongside the applyInPandasWithState form: the older API
-# remains the broadly-deployed one, the processor API is where Spark's
-# stateful streaming is heading (and what SURVEY.md §2A A6 maps to).
-# NOTE: executing this path needs the RocksDB state store provider AND the
-# `protobuf` Python package (Spark's Python state-server protocol); the
-# test (tests/test_quorum_tws.py) skips where protobuf is unavailable.
-
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle  # noqa: E402
-from pyspark.sql.streaming.stateful_processor import TimerValues  # noqa: E402
-
-
-class QuorumProcessor(StatefulProcessor):
-    """Per-key (op id) processor: count replica arrivals, emit the op
-    exactly once at quorum, evict state via an event-time timer."""
-
-    def __init__(self, quorum: int, state_ttl_ms: int) -> None:
-        self._quorum = quorum
-        self._ttl_ms = state_ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState(
-            "quorum",
-            "seen int, emitted boolean, ts_t int, ts_i int, op string, ns string, o string",
-        )
-
-    def handleInputRows(self, key, rows, timerValues: TimerValues):
-        seen, emitted, ts_t, ts_i, op, ns, o = (
-            self._state.get() if self._state.exists() else (0, False, None, None, None, None, None)
-        )
-        max_event_ms = 0
-        for pdf in rows:
-            if len(pdf) and ts_t is None:
-                first = pdf.iloc[0]
-                ts_t, ts_i, op, ns, o = (
-                    int(first["ts_t"]),
-                    int(first["ts_i"]),
-                    first["op"],
-                    first["ns"],
-                    first["o"],
-                )
-            if len(pdf):
-                max_event_ms = max(max_event_ms, int(pdf["ts_t"].max()) * 1000)
-                seen += len(pdf)
-        if not emitted and seen >= self._quorum:
-            emitted = True
-            yield pd.DataFrame([[key[0], ts_t, ts_i, op, ns, o]], columns=_OUT_COLS)
-        self._state.update((seen, emitted, ts_t, ts_i, op, ns, o))
-        wm = timerValues.getCurrentWatermarkInMs()
-        self._handle.registerTimer(max(max_event_ms + self._ttl_ms, wm + 1))
-
-    def handleExpiredTimer(self, key, timerValues: TimerValues, expiredTimerInfo):
-        self._state.clear()
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def quorum_dedup_stream_tws(
-    ops: DataFrame,
-    replica_depth: int,
-    quorum: int | None = None,
-    state_ttl_ms: int = 60_000,
-    watermark_delay: str = "10 seconds",
-) -> DataFrame:
-    """transformWithStateInPandas form of quorum_dedup_stream (identical
-    emission semantics; requires the RocksDB state store provider, which
-    the caller's session must set — see tests/test_quorum_tws.py)."""
-    q = quorum if quorum is not None else replica_depth // 2 + 1
-    with_time = ops.select(*_OUT_COLS).withColumn(
-        "event_ts", F.timestamp_seconds(F.col("ts_t"))
-    )
-    return (
-        with_time.withWatermark("event_ts", watermark_delay)
-        .groupBy("h")
-        .transformWithStateInPandas(
-            QuorumProcessor(q, state_ttl_ms),
-            outputStructType=OP_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
     )
 
 

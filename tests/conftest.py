@@ -19,11 +19,12 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # gate (`python -m pytest tests/ -x -q`) has a window of roughly ten
 # minutes and was cut off at 16% in round 14, leaving VERIFY red on a
 # green tree. A WHOLE-SUITE run therefore executes the DRIVER TIER by
-# default: schema pins, physical-plan pins, and the oracle-parity +
+# default: schema pins, physical-plan pins, the oracle-parity +
 # output-contract passes (minus the scratch-commit-bound ingest/index
 # simulations, whose minutes-long walls measure parquet commit cadence,
 # not correctness — every one of them stays in the full tier and in the
-# driver's own 50-query hash pass).
+# driver's own 50-query hash pass), and the CDC core's tests (about
+# 2.5 min on 4 cores).
 #
 # The FULL tier (everything) runs when SPARK_GRAFT_FULL_TESTS=1 —
 # scripts/preflight.py sets it, so the round gate still requires all
@@ -39,6 +40,13 @@ _DRIVER_TIER_FILES = {
     "test_output_contract.py", # driver-safe output schemas (fast slice)
     "test_guards.py",
     "test_preflight_gate.py",
+    # the CDC core: source, filter, quorum, envelope, sinks
+    "test_streaming.py",
+    "test_oplog_source.py",
+    "test_es_datasource.py",
+    "test_connectors.py",
+    "test_change_stream_contract.py",
+    "test_streaming_extras.py",
 }
 
 # Queries whose parity/contract tests are scratch-commit- or

@@ -257,8 +257,8 @@ def test_two_sink_topology(spark, tmpdirs):
 def test_quorum_state_ttl_evicts_stragglers(spark, tmpdirs):
     """Sub-quorum keys are evicted once the watermark passes their
     event-time TTL instead of leaking (fix for ref §4.3.1). Observable
-    behavior: after eviction, a late redelivery starts a fresh count and
-    still does not emit."""
+    behavior: after eviction, a redelivery behind the watermark is
+    dropped and does not emit."""
     src, _, ck = tmpdirs
     straggler = OplogCase(n_ops=1, deliveries={0: (MEMBERS[0],)}, include_noise=False)
     rows = op_rows(straggler)
@@ -286,6 +286,39 @@ def test_quorum_state_ttl_evicts_stragglers(spark, tmpdirs):
         q.stop()
     hs = sorted(r.h for r in spark.sql("SELECT h FROM ttl_out").collect())
     assert hs == [5000], f"straggler leaked an emission: {hs}"
+
+
+def test_quorum_late_members_after_eviction_do_not_emit(spark, tmpdirs):
+    """One member delivers an op; a wave 300 s later pushes the
+    watermark past the op's time + TTL; then the other two members
+    deliver it. Their deliveries are behind the watermark and are
+    dropped, so the op can neither re-emit nor start a fresh count that
+    reaches quorum: only the wave's ops emit."""
+    src, _, ck = tmpdirs
+    case = OplogCase(n_ops=1, include_noise=False)
+    rows = op_rows(case)
+    write_batch(spark, rows[rows.member_host == MEMBERS[0]], src)
+    deduped = build_cdc_stream(
+        _read_oplog_stream(spark, src), replica_depth=3, state_ttl_ms=1000
+    )
+    q = (
+        deduped.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("late_members_out")
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        wave = OplogCase(n_ops=3, h_base=5000, ts_base=case.ts_base + 300, include_noise=False)
+        write_batch(spark, op_rows(wave), src)
+        q.processAllAvailable()
+        write_batch(spark, rows[rows.member_host != MEMBERS[0]], src)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    hs = sorted(r.h for r in spark.sql("SELECT h FROM late_members_out").collect())
+    assert hs == [5000, 5001, 5002], f"late members emitted an evicted op: {hs}"
 
 
 def test_quorum_agg_variant_emission_set(spark, tmpdirs):
