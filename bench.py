@@ -312,40 +312,26 @@ def bench_streaming_pipeline(spark, variant: str = "keyed_state", n_ops: int = 5
     was 9 cursors into a 128-slot queue with per-record ES flush
     (BASELINE.md); this measures the Spark twin end to end.
 
-    variants: 'keyed_state' (applyInPandasWithState — per-op latency),
-    'jvm_agg' (windowed aggregation — throughput; see
-    quorum_dedup_stream_agg), and 'passthrough' (source → filter → sink
-    with NO dedup — the harness floor; quorum cost is the delta)."""
+    variants: 'keyed_state' (the quorum_dedup_stream operator) and
+    'passthrough' (source → filter → sink with NO dedup — the harness
+    floor; quorum cost is the delta)."""
     import shutil
     import tempfile
 
-    import pandas as pd
-
     from flink_mingo_tail_spark.streaming.pipeline import oplog_filter
-    from flink_mingo_tail_spark.streaming.quorum import (
-        quorum_dedup_stream,
-        quorum_dedup_stream_agg,
-    )
+    from flink_mingo_tail_spark.streaming.quorum import quorum_dedup_stream
     from flink_mingo_tail_spark.streaming.replay import OplogCase, op_rows, write_batch
 
     tmp = tempfile.mkdtemp(prefix="fmts-bench-stream-")
     try:
         src, ck = f"{tmp}/src", f"{tmp}/ck"
         write_batch(spark, op_rows(OplogCase(n_ops=n_ops, include_noise=False)), src)
-        if variant == "jvm_agg":
-            # sentinel op in the event-time future closes the replay windows
-            sentinel = op_rows(
-                OplogCase(n_ops=1, h_base=10_000_000, ts_base=1_700_600_000, include_noise=False)
-            )
-            write_batch(spark, pd.DataFrame(sentinel), src)
         stream = spark.readStream.schema(
             "ts_t int, ts_i int, h long, op string, ns string, fromMigrate boolean, "
             "o string, o2 string, shard string, member_host string"
         ).parquet(src)
         filtered = oplog_filter(stream)
-        if variant == "jvm_agg":
-            deduped = quorum_dedup_stream_agg(filtered, replica_depth=3)
-        elif variant == "passthrough":
+        if variant == "passthrough":
             deduped = filtered
         else:
             deduped = quorum_dedup_stream(filtered, replica_depth=3)
@@ -362,7 +348,7 @@ def bench_streaming_pipeline(spark, variant: str = "keyed_state", n_ops: int = 5
         finally:
             q.stop()
         elapsed = time.perf_counter() - start
-        emitted = spark.read.parquet(f"{tmp}/out").filter("h < 10000000").count()
+        emitted = spark.read.parquet(f"{tmp}/out").count()
         expect = n_ops * 3 if variant == "passthrough" else n_ops
         assert emitted == expect, f"streaming bench lost ops ({variant}): {emitted}/{expect}"
         return {
@@ -397,13 +383,11 @@ def main() -> None:
     # min-of-3 on a quiet JVM. 'passthrough' measures the identical
     # pipeline with no dedup operator — the harness floor — so the
     # quorum operator's own cost is reported as the delta.
-    for variant in ("passthrough", "jvm_agg", "keyed_state"):
+    for variant in ("passthrough", "keyed_state"):
         bench_streaming_pipeline(spark, variant, n_ops=2_000)
     streaming_floor = _best_streaming(spark, "passthrough")
-    streaming_jvm = _best_streaming(spark, "jvm_agg")
     streaming = _best_streaming(spark, "keyed_state")
-    for d in (streaming, streaming_jvm):
-        d["quorum_overhead_sec"] = round(d["wall_sec"] - streaming_floor["wall_sec"], 3)
+    streaming["quorum_overhead_sec"] = round(streaming["wall_sec"] - streaming_floor["wall_sec"], 3)
 
     # Warm-up at the smallest SF: compiles every plan's codegen, spins up
     # Python/Arrow workers, and touches the file index — so the timed runs
@@ -437,12 +421,11 @@ def main() -> None:
         timings,
         sf=float(sf) if sf.replace(".", "").isdigit() else sf,
         streaming=streaming,
-        streaming_jvm=streaming_jvm,
         streaming_floor=streaming_floor,
     )
 
 
-def emit_results(timings, sf, streaming, streaming_jvm, streaming_floor) -> None:
+def emit_results(timings, sf, streaming, streaming_floor) -> None:
     """Print the full per-query detail on its OWN stdout line (and a
     sidecar file), then the driver-facing summary as the FINAL line.
 
@@ -471,7 +454,6 @@ def emit_results(timings, sf, streaming, streaming_jvm, streaming_floor) -> None
         "sf": sf,
         "cpus": LOCAL_CPUS,
         "streaming_cdc": streaming,
-        "streaming_cdc_jvm": streaming_jvm,
         "streaming_cdc_floor": streaming_floor,
     }
     detail_path = os.path.join(REPO_DIR, "bench_detail.json")
@@ -492,7 +474,6 @@ def emit_results(timings, sf, streaming, streaming_jvm, streaming_floor) -> None
         "n_queries": len(timings),
         "queries_detail": detail_path or "see previous stdout line",
         "streaming_cdc_ops_per_sec": streaming.get("ops_per_sec"),
-        "streaming_cdc_jvm_ops_per_sec": streaming_jvm.get("ops_per_sec"),
         "streaming_cdc_floor_ops_per_sec": streaming_floor.get("ops_per_sec"),
     }
     line = json.dumps(summary)

@@ -1,10 +1,10 @@
 """Live-cluster adapters for the hermetic CDC pipeline.
 
-The engine's source/sink twins are hermetic by design (`oplog_sim` over
-member JSONL logs, parquet "index" stand-in) so every test runs without
-a MongoDB or Elasticsearch deployment. This module is the documented
-swap-in seam to the real systems the reference talks to
-(ShardSetFinder.java:44-56, ElasticsearchEmbeddedNodeSink.java:47-66):
+The engine's source and sink run hermetically by design (`oplog_sim`
+over member JSONL logs; the ``es_bulk`` writer's ``transport_dir`` mode)
+so every test runs without a MongoDB or Elasticsearch deployment. This
+module is the documented swap-in seam to the real systems the reference
+talks to (ShardSetFinder.java:44-56, ElasticsearchEmbeddedNodeSink.java:47-66):
 
 * ``mongo_change_stream_source`` — the public MongoDB Spark Connector
   (``format("mongodb")``, change-stream mode) normalized onto
@@ -16,13 +16,14 @@ swap-in seam to the real systems the reference talks to
   becomes a no-op safety net rather than a correctness requirement
   (replica_depth=1), and the engine's quorum path remains for
   per-member tailing topologies.
-* ``make_es_bulk_writer`` — a foreachBatch sink that ships each
-  micro-batch as ONE Elasticsearch ``_bulk`` request (the reference
-  flushed per record, bulk-size 1 — its §4.3 throughput defect). Pure
-  stdlib HTTP; a transport hook makes it unit-testable offline.
+* ``es_bulk_payload`` / ``post_with_retry`` — the Elasticsearch
+  ``_bulk`` body and the retrying stdlib HTTP POST that the ``es_bulk``
+  DataSource writer (`streaming/es_datasource.py`) ships each chunk
+  with (the reference flushed per record, bulk-size 1 — its §4.3
+  throughput defect).
 
-Neither adapter is importable-by-accident into the hermetic paths:
-everything here degrades with a clear error when the live dependency
+The change-stream source is not importable-by-accident into the
+hermetic paths: it fails with a clear error when the live dependency
 (connector jar / reachable cluster) is absent.
 """
 
@@ -184,10 +185,10 @@ def post_with_retry(
 ) -> None:
     """One logical POST with capped exponential backoff + equal jitter on
     transient failures (RETRYABLE_STATUSES / dropped connections); raises
-    on non-retryable status or after ``max_attempts``. Shared by the
-    foreachBatch sink and the ``es_bulk`` DataSource writer — retries are
-    safe for both because every bulk action carries an explicit ``_id``
-    (idempotent upsert)."""
+    on non-retryable status or after ``max_attempts``. Used by the
+    ``es_bulk`` DataSource writer for its bulk and refresh requests —
+    retries are safe because every bulk action carries an explicit
+    ``_id`` (idempotent upsert)."""
     import random
     import time as _time
 
@@ -216,68 +217,3 @@ def post_with_retry(
         ceiling = min(backoff_cap_sec, backoff_base_sec * (2 ** (attempt - 1)))
         sleep(ceiling * (0.5 + 0.5 * random.random()))
 
-
-def make_es_bulk_writer(
-    es_url: str,
-    index: str,
-    transport: Callable[[str, bytes, str], int] | None = None,
-    max_docs_per_request: int = 5_000,
-    max_attempts: int = 5,
-    backoff_base_sec: float = 0.5,
-    backoff_cap_sec: float = 30.0,
-    sleeper: Callable[[float], None] | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: every partition POSTs its own ceil(n/max_docs)
-    ``_bulk`` requests EXECUTOR-SIDE via ``foreachPartition`` — no
-    driver collect anywhere between source and sink, so ingest
-    bandwidth scales with the executor count instead of serializing
-    through one process (the round-2 scale-killer; the reference was
-    worse still — it flushed per record,
-    ElasticsearchEmbeddedNodeSink.java:47-66). Rows stream through a
-    bounded buffer, so a partition never materializes in memory either.
-
-    Transient throttling (HTTP 429/502/503/504, or a dropped
-    connection) retries in-task with capped exponential backoff +
-    equal jitter, up to ``max_attempts``; only then does the batch
-    fail over to Spark's task retry. The retries are SAFE to repeat
-    because every action carries an explicit ``_id`` (the op hash
-    ``h``) — re-indexing the same chunk is an idempotent upsert, never
-    a duplicate document. Production ingest sees transient 429s as a
-    matter of course (the round-3 verdict's "What's missing" #2); a
-    single throttle must not kill a micro-batch.
-
-    ``transport`` is injectable for offline tests (it is pickled into
-    the task closure, so it must be a module-level function or
-    self-contained closure); default is a plain HTTP POST to
-    ``{es_url}/_bulk``. ``sleeper`` is injectable the same way so tests
-    don't wait out real backoff.
-    """
-    post = transport or _http_post
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        def send_partition(rows) -> None:
-            def flush(chunk: list[dict]) -> None:
-                post_with_retry(
-                    post,
-                    f"{es_url}/_bulk",
-                    es_bulk_payload(chunk, index).encode(),
-                    "application/x-ndjson",
-                    max_attempts=max_attempts,
-                    backoff_base_sec=backoff_base_sec,
-                    backoff_cap_sec=backoff_cap_sec,
-                    sleeper=sleeper,
-                    label=f"batch {batch_id}",
-                )
-
-            buf: list[dict] = []
-            for r in rows:
-                buf.append(r.asDict(recursive=True))
-                if len(buf) >= max_docs_per_request:
-                    flush(buf)
-                    buf = []
-            if buf:
-                flush(buf)
-
-        batch_df.foreachPartition(send_partition)
-
-    return write_batch

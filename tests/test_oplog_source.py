@@ -1,9 +1,11 @@
 """Custom `oplog_sim` DataSource: partition-per-member batch scan,
 filter pushdown, offset-tracked tailing stream, and the full
-source→filter→quorum→sink topology (the reference's entire job,
+source→filter→quorum→envelope→es_bulk topology (the reference's entire job,
 MongoDBOplogTail.java:36-42, end to end)."""
 
 from __future__ import annotations
+
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +15,8 @@ from flink_mingo_tail_spark.sources.oplog import (
     register,
     write_member_logs,
 )
-from flink_mingo_tail_spark.streaming.pipeline import build_cdc_stream, oplog_filter
+from flink_mingo_tail_spark.streaming.es_datasource import ESBulkDataSource
+from flink_mingo_tail_spark.streaming.pipeline import build_cdc_stream, envelope, oplog_filter
 from flink_mingo_tail_spark.streaming.replay import MEMBERS, OplogCase, op_rows
 
 
@@ -76,26 +79,34 @@ def test_stream_tails_new_appends(spark, log_dir, tmp_path):
 
 def test_full_cdc_topology_from_custom_source(spark, log_dir, tmp_path):
     """The reference's whole job on Spark: oplog_sim source (per-member
-    partitions) → pushed-down filter → majority-quorum dedup → sink;
-    every committed op appears exactly once despite 3x delivery."""
+    partitions) → pushed-down filter → majority-quorum dedup → envelope
+    → es_bulk sink; every committed op is indexed exactly once despite
+    3x delivery, and the sub-majority op never is."""
     case = OplogCase(n_ops=15, deliveries={7: (MEMBERS[0],)})  # op 7: sub-majority
     write_member_logs(op_rows(case), log_dir)
     register(spark)
+    spark.dataSource.register(ESBulkDataSource)
+    outdir = tmp_path / "es"
+    outdir.mkdir()
     stream = spark.readStream.format("oplog_sim").option("path", log_dir).load()
-    deduped = build_cdc_stream(stream, replica_depth=3)
     q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("cdc_out")
+        envelope(build_cdc_stream(stream, replica_depth=3))
+        .writeStream.format("es_bulk")
+        .option("transport_dir", str(outdir))
         .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("append")
         .start()
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    hs = sorted(r.h for r in spark.sql("SELECT h FROM cdc_out").collect())
-    assert hs == [1000 + i for i in range(15) if i != 7]
+    ids = [
+        json.loads(action)["index"]["_id"]
+        for req in outdir.glob("req-*.ndjson")
+        for action in req.read_text().strip().split("\n")[2::2]
+    ]
+    assert sorted(ids) == sorted(str(1000 + i) for i in range(15) if i != 7)
 
 
 def test_member_name_roundtrip_hyphenated_host(spark, log_dir):

@@ -1,6 +1,5 @@
 """Streaming-parity tests (SURVEY.md §5.2 items 2-3): quorum dedup
-replay, checkpoint resume, watermarked windows, dedup-within-watermark,
-two-sink topology.
+replay, checkpoint resume, watermarked windows, dedup-within-watermark.
 """
 
 from __future__ import annotations
@@ -10,11 +9,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from flink_mingo_tail_spark.streaming.pipeline import (
-    build_cdc_stream,
-    oplog_filter,
-    start_two_sink_topology,
-)
+from flink_mingo_tail_spark.streaming.pipeline import build_cdc_stream, oplog_filter
 from flink_mingo_tail_spark.streaming.quorum import quorum_dedup_batch, quorum_dedup_stream
 from flink_mingo_tail_spark.streaming.replay import (
     MEMBERS,
@@ -235,25 +230,6 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     assert hs == [1, 2]
 
 
-def test_two_sink_topology(spark, tmpdirs):
-    """A12 parity: one deduped stream fanned into two sinks per
-    micro-batch (parquet index + JSON envelope log)."""
-    src, out, ck = tmpdirs
-    case = OplogCase(n_ops=6)
-    write_batch(spark, op_rows(case), src)
-    deduped = build_cdc_stream(_read_oplog_stream(spark, src), replica_depth=3)
-    [q] = start_two_sink_topology(deduped, out, ck)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    index = spark.read.parquet(f"{out}/index")
-    console = spark.read.json(f"{out}/console")
-    assert sorted(r.h for r in index.select("h").collect()) == [1000 + i for i in range(6)]
-    assert console.count() == 6
-    assert set(console.columns) == {"h", "data"}
-
-
 def test_quorum_state_ttl_evicts_stragglers(spark, tmpdirs):
     """Sub-quorum keys are evicted once the watermark passes their
     event-time TTL instead of leaking (fix for ref §4.3.1). Observable
@@ -319,50 +295,6 @@ def test_quorum_late_members_after_eviction_do_not_emit(spark, tmpdirs):
         q.stop()
     hs = sorted(r.h for r in spark.sql("SELECT h FROM late_members_out").collect())
     assert hs == [5000, 5001, 5002], f"late members emitted an evicted op: {hs}"
-
-
-def test_quorum_agg_variant_emission_set(spark, tmpdirs):
-    """Pure-JVM windowed-agg quorum (quorum_dedup_stream_agg): same
-    emission set as the keyed-state operator — majority emits once,
-    sub-majority never — with emission gated on window close (a newer
-    sentinel wave advances the watermark to flush the replay)."""
-    from flink_mingo_tail_spark.streaming.quorum import quorum_dedup_stream_agg
-
-    src, _, ck = tmpdirs
-    case = OplogCase(
-        n_ops=12,
-        deliveries={10: (MEMBERS[0],), 11: (MEMBERS[0], MEMBERS[1])},
-        duplicated=(0,),
-        include_noise=False,
-    )
-    write_batch(spark, op_rows(case), src)
-
-    deduped = quorum_dedup_stream_agg(
-        oplog_filter(_read_oplog_stream(spark, src)), replica_depth=3
-    )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("qagg_out")
-        .option("checkpointLocation", ck)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # sentinel wave far in event-time future: closes the replay's window
-        write_batch(
-            spark,
-            op_rows(OplogCase(n_ops=1, h_base=9999, ts_base=1_700_000_600, include_noise=False)),
-            src,
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    hs = sorted(r.h for r in spark.sql("SELECT h FROM qagg_out").collect())
-    # duplicated delivery of op 0 (4 arrivals) still emits once; op 10
-    # (1 arrival) never; sentinel itself not yet flushed (window open)
-    assert hs == sorted(1000 + i for i in range(12) if i != 10), hs
 
 
 def test_quorum_per_shard_replica_depth(spark, tmpdirs):
