@@ -1,15 +1,79 @@
 """Live-adapter seams (streaming/connectors.py), tested hermetically:
-the change-event normalization is a pure projection. The ES bulk
-helpers are exercised through the es_bulk writer
-(tests/test_es_datasource.py)."""
+the change-event normalization is a pure projection, and the ES bulk
+helpers are exercised through the es_bulk writer in transport_dir mode
+(request files instead of HTTP POSTs)."""
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.sources.oplog import OPLOG_SOURCE_SCHEMA
 from flink_mingo_tail_spark.streaming.connectors import normalize_change_events
+from flink_mingo_tail_spark.streaming.es_datasource import ESBulkDataSource
 from flink_mingo_tail_spark.streaming.pipeline import oplog_filter
+
+
+def _write_es_bulk(df, outdir, **options):
+    df.sparkSession.dataSource.register(ESBulkDataSource)
+    writer = df.write.format("es_bulk").option("transport_dir", outdir)
+    for key, value in options.items():
+        writer = writer.option(key, value)
+    writer.mode("append").save()
+    return sorted(f for f in os.listdir(outdir) if f.startswith("req-"))
+
+
+def _request_lines(outdir, reqs):
+    return [
+        ln
+        for fn in reqs
+        for ln in open(os.path.join(outdir, fn), "rb").read().decode().strip().split("\n")[2:]
+    ]
+
+
+def test_es_bulk_writer_batches_through_transport(spark, tmp_path):
+    """Executor-side requests: one request per max_docs_per_request chunk
+    within a partition, NDJSON action/source pairs, {'data': doc}
+    envelope."""
+    outdir = str(tmp_path / "reqs")
+    os.makedirs(outdir)
+    batch = spark.createDataFrame(
+        [(1, "i", "test.grades"), (2, "i", "test.grades"), (3, "d", "test.grades")],
+        schema="h long, op string, ns string",
+    ).coalesce(1)
+    reqs = _write_es_bulk(
+        batch, outdir, url="http://es:9200", index="oplog-index", max_docs_per_request=2
+    )
+
+    assert len(reqs) == 2  # one partition, 3 docs, 2 per request
+    payload = open(os.path.join(outdir, reqs[0]), "rb").read().decode()
+    url, ctype, *lines = payload.strip().split("\n")
+    assert url == "http://es:9200/_bulk" and ctype == "application/x-ndjson"
+    all_lines = _request_lines(outdir, reqs)
+    assert len(all_lines) == 6  # 3 docs x (action + source)
+    action, source = json.loads(all_lines[0]), json.loads(all_lines[1])
+    assert action["index"]["_index"] == "oplog-index"
+    assert set(source) == {"data"} and source["data"]["ns"] == "test.grades"
+
+
+def test_es_bulk_writer_parallel_partitions(spark, tmp_path):
+    """Each partition issues its own requests — the no-driver-collect
+    contract: request count == partition count when chunks fit."""
+    outdir = str(tmp_path / "reqs")
+    os.makedirs(outdir)
+    batch = spark.createDataFrame(
+        [(i, "i", "test.grades") for i in range(8)], schema="h long, op string, ns string"
+    ).repartition(4)
+    reqs = _write_es_bulk(
+        batch, outdir, url="http://es:9200", index="idx", max_docs_per_request=100
+    )
+    # one request per NON-EMPTY partition (an empty partition sends
+    # nothing); all 8 docs must arrive across >1 parallel request
+    assert 1 < len(reqs) <= 4
+    n_actions = sum(1 for ln in _request_lines(outdir, reqs) if '"index"' in ln)
+    assert n_actions == 8
 
 
 def test_normalize_change_events_matches_oplog_schema(spark):
