@@ -69,10 +69,16 @@ analytics surface, engineered for the 100 TB target.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.tables import spread
+
+# Spec columns and aliases are pasted unquoted into generated column
+# names and SQL string literals, so they must be plain identifiers.
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 def _pick_sql(alias: str, rank: str) -> str:
@@ -110,6 +116,10 @@ def exact_percentiles(
     n-way join of per-spec results; a group that is small for any spec
     is cheap to sort for all of them).
     """
+    for col, _, alias in specs:
+        for ident in (col, alias):
+            if not _IDENT.fullmatch(ident):
+                raise ValueError(f"exact_percentiles: {ident!r} is not a plain SQL identifier")
     margin = 4.0 / accuracy
 
     # ONE approx sketch per distinct column, not per spec: a GK sketch

@@ -5,14 +5,16 @@ over files instead of live mongod:
 * **topology discovery** (ref ShardSetFinder.java:44-56): the source
   enumerates one JSONL log per replica member under `path` at planning
   time — the Spark analog of reading `config.shards` once at startup.
-* **partition per replica member** (ref: one tailing cursor + thread per
-  member, MongoDBOplogSource.java:81): `partitions()` returns one
-  InputPartition per member log, so each Spark task owns exactly one
-  member's ordered stream.
+* **partition per replica member, batch reads only** (ref: one tailing
+  cursor + thread per member, MongoDBOplogSource.java:81): the batch
+  reader's `partitions()` returns one InputPartition per member log, so
+  each Spark task owns exactly one member's ordered stream. The stream
+  reader is a `SimpleDataSourceStreamReader`: every micro-batch reads
+  every member log in one driver-side Python process.
 * **filter pushdown** (ref: server-side $match,
-  MongoOplogTailMapper.java:90-98): `pushFilters` accepts the
-  ns/op/fromMigrate/ts predicates and evaluates them inside the reader —
-  rows are dropped before they ever reach the engine.
+  MongoOplogTailMapper.java:90-98): the batch reader's `pushFilters`
+  accepts the ns/op/fromMigrate/ts predicates and evaluates them inside
+  the reader — rows are dropped before they ever reach the engine.
 * **offset-tracked streaming** (ref: per-host `time_d.repl_time`
   checkpoint, MongoDBOplogSource.java:130-139): the stream reader's
   offset is a per-member line-count map `{member: lines_consumed}` —

@@ -77,7 +77,7 @@ FLAGSHIP = {
 }
 
 #: hand-maintained PLANS.md sections that must survive regeneration
-#: (scripts/preflight.py reads "## Bench delta notes" as its gate input)
+#: ("## Bench delta notes" is the history of accepted timing deltas)
 PRESERVED_SECTIONS = (
     "## Runtime bloom-filter join pruning (scale feature, test-pinned)",
     "## Bench delta notes",

@@ -80,7 +80,10 @@ def main() -> None:
             ).collect(),
         }
         for plan, run in plans.items():
-            spark._jvm.System.gc()  # probe hygiene (see scale_probe.py)
+            # probe hygiene: Spark's ContextCleaner frees shuffle and
+            # broadcast state lazily on GC, so a later plan would
+            # otherwise inherit an earlier one's heap pressure
+            spark._jvm.System.gc()
             best = min(
                 (lambda t0=time.time(): (run(), time.time() - t0)[1])() for _ in range(3)
             )

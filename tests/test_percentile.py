@@ -4,6 +4,7 @@ bitwise, across discrete/continuous columns, tiny groups, and stressed
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.operators.percentile import exact_percentiles
@@ -100,3 +101,11 @@ def test_tiny_groups_and_extremes(spark):
     _assert_bitwise_equal(
         df, ["k"], [("v", 0.0, "pmin"), ("v", 0.5, "p50"), ("v", 1.0, "pmax")]
     )
+
+
+def test_rejects_sql_unsafe_identifiers(spark):
+    # columns and aliases are pasted unquoted into the generated SQL, so
+    # a non-identifier must fail at entry, naming itself
+    li = load_table(spark, SF_ORACLE, "lineitem")
+    with pytest.raises(ValueError, match="p-50"):
+        exact_percentiles(li, ["l_returnflag"], [("l_quantity", 0.5, "p-50")])

@@ -1,86 +1,13 @@
-"""Unit tests for the preflight bench-delta gate (scripts/preflight.py).
-
-Pure-Python: no Spark session. The gate's job is to make per-query perf
-regressions block the round snapshot unless acknowledged in PLANS.md.
-"""
+"""PLANS.md regeneration keeps its hand-maintained sections
+(scripts/dump_plans.py). Pure-Python: no Spark session."""
 
 from __future__ import annotations
-
-import importlib.util
-import os
-
-_SPEC = importlib.util.spec_from_file_location(
-    "preflight",
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts", "preflight.py"),
-)
-preflight = importlib.util.module_from_spec(_SPEC)
-_SPEC.loader.exec_module(preflight)
-
-
-def _bench(queries, sf=0.1, **extra):
-    return {"metric": "m", "value": sum(queries.values()), "unit": "sec", "queries": queries, "sf": sf, **extra}
-
-
-def test_no_flag_when_within_ratio():
-    prior = _bench({"q01": 1.0, "q02": 0.5})
-    new = _bench({"q01": 1.4, "q02": 0.6})
-    assert preflight.bench_deltas(new, prior) == []
-
-
-def test_flags_ratio_and_absolute_breach():
-    prior = _bench({"q01": 1.0})
-    new = _bench({"q01": 1.9})
-    flagged = preflight.bench_deltas(new, prior)
-    assert len(flagged) == 1 and flagged[0].startswith("q01:")
-
-
-def test_subsecond_noise_band_not_flagged():
-    # 2x ratio but only +0.2s absolute: inside the documented noise band
-    prior = _bench({"q55": 0.2})
-    new = _bench({"q55": 0.4})
-    assert preflight.bench_deltas(new, prior) == []
-
-
-def test_different_sf_skips_comparison():
-    prior = _bench({"q01": 1.0}, sf=0.1)
-    new = _bench({"q01": 9.0}, sf=0.001)
-    assert preflight.bench_deltas(new, prior) == []
-
-
-def test_new_query_without_prior_row_ignored():
-    prior = _bench({"q01": 1.0})
-    new = _bench({"q01": 1.0, "q120": 5.0})
-    assert preflight.bench_deltas(new, prior) == []
-
-
-def test_streaming_ops_per_sec_regression_flagged():
-    prior = _bench({"q01": 1.0}, streaming_cdc={"ops_per_sec": 3000.0, "wall_sec": 16.7})
-    new = _bench({"q01": 1.0}, streaming_cdc={"ops_per_sec": 1500.0, "wall_sec": 33.3})
-    flagged = preflight.bench_deltas(new, prior)
-    assert len(flagged) == 1 and flagged[0].startswith("streaming_cdc:")
-
-
-def test_acknowledgement_section_parsing(tmp_path, monkeypatch):
-    plans = tmp_path / "PLANS.md"
-    plans.write_text(
-        "# PLANS\n\n## q01_pricing_summary\n\nstuff\n\n"
-        "## Bench delta notes\n\n- q33_running_sum: window reorder, see diff\n\n"
-        "## q02_filter_project_topk\n\nmore\n"
-    )
-    monkeypatch.setattr(preflight, "REPO_DIR", str(tmp_path))
-    flagged = [
-        "q33_running_sum: 1.0s -> 2.0s (2.00x)",
-        "q01_pricing_summary: 1.0s -> 2.0s (2.00x)",
-    ]
-    unacked = preflight.acknowledged_in_plans(flagged)
-    # q33 is noted inside the section; q01 appears only OUTSIDE it
-    assert unacked == ["q01_pricing_summary: 1.0s -> 2.0s (2.00x)"]
 
 
 def test_dump_plans_preserves_bench_delta_notes(tmp_path):
     # regenerating PLANS.md must carry over the hand-maintained notes
-    # section the bench-delta gate reads — a regen that dropped it would
-    # silently disarm previously-acknowledged regressions
+    # section — it is the record of why past timing deltas were
+    # accepted, and a regen that dropped it would erase that history
     from scripts import dump_plans
 
     plans = tmp_path / "PLANS.md"
@@ -96,26 +23,3 @@ def test_dump_plans_preserves_bench_delta_notes(tmp_path):
     assert dump_plans.preserved_tail(str(tmp_path / "nope.md")) == ""
     plans.write_text("# PLANS\nno notes section\n")
     assert dump_plans.preserved_tail(str(plans)) == ""
-
-
-def test_find_prior_bench_unwraps_driver_envelope(tmp_path, monkeypatch):
-    # the driver records BENCH_r*.json as a pretty-printed envelope with
-    # the bench line under "parsed" — the gate must unwrap it (it
-    # previously read only the file's last line and silently found no
-    # prior bench, never firing)
-    import json
-
-    envelope = {
-        "n": 3, "rc": 0, "sf": 0.1, "tail": "...",
-        "parsed": {"metric": "m", "value": 1.0, "sf": 0.1,
-                   "queries": {"q01": 1.25}},
-    }
-    (tmp_path / "BENCH_r03.json").write_text(json.dumps(envelope, indent=2))
-    monkeypatch.setattr(preflight, "REPO_DIR", str(tmp_path))
-    prior = preflight.find_prior_bench()
-    assert prior is not None and prior["queries"] == {"q01": 1.25}
-    # raw one-line bench.py output still parses
-    (tmp_path / "BENCH_r04.json").write_text(
-        json.dumps({"metric": "m", "value": 1.0, "sf": 0.1, "queries": {"q01": 2.0}})
-    )
-    assert preflight.find_prior_bench()["queries"] == {"q01": 2.0}
