@@ -16,10 +16,17 @@ over files instead of live mongod:
   accepts the ns/op/fromMigrate/ts predicates and evaluates them inside
   the reader — rows are dropped before they ever reach the engine.
 * **offset-tracked streaming** (ref: per-host `time_d.repl_time`
-  checkpoint, MongoDBOplogSource.java:130-139): the stream reader's
-  offset is a per-member line-count map `{member: lines_consumed}` —
-  exactly the per-host high-water mark, but committed by Structured
-  Streaming AFTER the sink commit (fixing §4.3.2).
+  checkpoint, MongoDBOplogSource.java:130-139; the tailable cursor
+  resumes after it, MongoOplogTailMapper.java:75-98): the stream
+  reader's offset is `{"lines": {member: complete lines consumed},
+  "bytes": {member: byte position after them}}`, committed by
+  Structured Streaming AFTER the sink commit (fixing §4.3.2). Every read
+  goes through `_read_log`, which seeks to a byte position and parses
+  only the complete lines after it, so an idle trigger costs the same
+  however long the logs grow and a restart replays exactly the logged
+  byte range. A log shorter than its committed position (truncated or
+  rotated), or a line-count offset of the former reader, raises
+  `ValueError`: start such a query from a new checkpoint location.
 
 File layout: `<path>/<member>.jsonl`, one JSON object per line in
 `$natural` (append) order, fields per FIXTURES.md §A1.
@@ -49,7 +56,7 @@ OPLOG_SOURCE_SCHEMA = (
     "ts_t int, ts_i int, h long, op string, ns string, fromMigrate boolean, "
     "o string, o2 string, shard string, member_host string"
 )
-_FIELDS = ["ts_t", "ts_i", "h", "op", "ns", "fromMigrate", "o", "o2", "shard", "member_host"]
+_FIELDS = [col.split()[0] for col in OPLOG_SOURCE_SCHEMA.split(",")]
 
 
 def member_log_path(base: str, member: str) -> str:
@@ -78,15 +85,50 @@ def _discover_members(base: str) -> list[str]:
     return [unquote(n[: -len(".jsonl")]) for n in names]
 
 
-def _parse_line(line: str) -> tuple:
+def _parse_line(line: bytes) -> tuple:
     doc = json.loads(line)
     return tuple(doc.get(f) for f in _FIELDS)
+
+
+def _read_log(
+    base: str, member: str, start: int = 0, end: int | None = None
+) -> Iterator[tuple[int, tuple]]:
+    """Yield ``(byte position after the line, parsed row)`` for each
+    complete line of ``member``'s log in the byte range ``[start, end)``.
+    ``end`` defaults to just after the last ``\\n``: a trailing line still
+    being written is left for a later read. A log shorter than the range
+    was truncated or rotated under a committed offset."""
+    with open(member_log_path(base, member), "rb") as f:
+        size = os.fstat(f.fileno()).st_size
+        if size < (end or start):
+            raise ValueError(
+                f"oplog_sim: the log of member {member!r} ({size} bytes) is shorter than "
+                f"its committed position {end or start}: truncated or rotated"
+            )
+        f.seek(start)
+        pos = start
+        for line in f:
+            if (end is not None and pos >= end) or not line.endswith(b"\n"):
+                return
+            pos += len(line)
+            yield pos, _parse_line(line)
+
+
+def _byte_positions(offset: dict) -> dict[str, int]:
+    """The per-member byte positions of a stream offset (a copy)."""
+    positions = dict(offset.get("bytes", {}))
+    for member, n_lines in offset.get("lines", {}).items():
+        if n_lines and member not in positions:
+            raise ValueError(
+                f"oplog_sim: the offset of member {member!r} has a line count but no byte "
+                f"position (a line-count checkpoint); start from a new checkpoint location"
+            )
+    return positions
 
 
 @dataclass
 class MemberPartition(InputPartition):
     member: str
-    path: str
 
 
 class _PushedPredicates:
@@ -142,24 +184,21 @@ class OplogSimBatchReader(DataSourceReader):
                 yield f  # unsupported → Spark evaluates it post-scan
 
     def partitions(self) -> list[MemberPartition]:
-        return [
-            MemberPartition(m, member_log_path(self.base, m)) for m in _discover_members(self.base)
-        ]
+        return [MemberPartition(m) for m in _discover_members(self.base)]
 
     def read(self, partition: MemberPartition) -> Iterator[tuple]:
-        with open(partition.path) as f:
-            for line in f:
-                row = _parse_line(line)
-                if self.pushed.matches(row):
-                    yield row
+        for _, row in _read_log(self.base, partition.member):
+            if self.pushed.matches(row):
+                yield row
 
 
 class OplogSimStreamReader(SimpleDataSourceStreamReader):
-    """Tailing reader: offset = per-member consumed line counts (the
-    `repl_time` high-water map). Each micro-batch drains every member's
-    new suffix — the fan-in merge the reference does with RxJava +
-    ArrayBlockingQueue (MongoDBOplogSource.java:96-107) falls out of
-    Spark's own batch planning here."""
+    """Tailing reader: the offset holds each member's consumed line count
+    and byte position (the `repl_time` high-water map). Each micro-batch
+    drains every member's new complete lines — the fan-in merge the
+    reference does with RxJava + ArrayBlockingQueue
+    (MongoDBOplogSource.java:96-107) falls out of Spark's own batch
+    planning here."""
 
     def __init__(self, options) -> None:
         self.base = options.get("path")
@@ -167,36 +206,28 @@ class OplogSimStreamReader(SimpleDataSourceStreamReader):
             raise ValueError("oplog_sim requires option('path', <dir of member logs>)")
 
     def initialOffset(self) -> dict:
-        return {"lines": dict.fromkeys(_discover_members(self.base), 0)}
-
-    def _read_from(self, start_lines: dict) -> tuple[list[tuple], dict]:
-        rows: list[tuple] = []
-        new_lines: dict[str, int] = dict(start_lines)
-        for member in _discover_members(self.base):
-            start = int(start_lines.get(member, 0))
-            path = member_log_path(self.base, member)
-            with open(path) as f:
-                lines = f.readlines()
-            complete = [ln for ln in lines if ln.endswith("\n")]
-            rows.extend(_parse_line(ln) for ln in complete[start:])
-            new_lines[member] = len(complete)
-        return rows, {"lines": new_lines}
+        members = _discover_members(self.base)
+        return {"lines": dict.fromkeys(members, 0), "bytes": dict.fromkeys(members, 0)}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        rows, end = self._read_from(start.get("lines", {}))
-        return iter(rows), end
+        positions = _byte_positions(start)
+        lines = dict(start.get("lines", {}))
+        rows: list[tuple] = []
+        for member in _discover_members(self.base):
+            # A member log that first appears mid-stream starts at byte 0.
+            for pos, row in _read_log(self.base, member, positions.get(member, 0)):
+                rows.append(row)
+                lines[member] = lines.get(member, 0) + 1
+                positions[member] = pos
+        # An iterator over a list: PySpark copies the cached iterator
+        # (copy.copy), which a generator does not support.
+        return iter(rows), {"lines": lines, "bytes": positions}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        start_lines = start.get("lines", {})
-        end_lines = end.get("lines", {})
-        rows: list[tuple] = []
-        for member, end_n in end_lines.items():
-            s = int(start_lines.get(member, 0))
-            path = member_log_path(self.base, member)
-            with open(path) as f:
-                lines = f.readlines()
-            rows.extend(_parse_line(ln) for ln in lines[s : int(end_n)])
-        return iter(rows)
+        positions = _byte_positions(start)
+        for member, stop in _byte_positions(end).items():
+            for _, row in _read_log(self.base, member, positions.get(member, 0), stop):
+                yield row
 
 
 class OplogSimDataSource(DataSource):

@@ -35,8 +35,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_mingo_tail_spark.sources.oplog import OPLOG_SOURCE_SCHEMA  # noqa: F401  (schema contract)
-
 #: options forwarded to the MongoDB Spark Connector (v10+) stream reader.
 _MONGO_FORMAT = "mongodb"
 

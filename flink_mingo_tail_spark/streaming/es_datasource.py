@@ -84,8 +84,10 @@ def _file_post(transport_dir: str, url: str, body: bytes, content_type: str) -> 
     return 200
 
 
-class _BulkWriterCore:
-    """Shared executor/driver logic for the batch and stream writers.
+class ESBulkBatchWriter(DataSourceWriter):
+    """The one ``es_bulk`` writer: executor-side ``write`` and the
+    driver-side publish/abort of the commit protocol.
+    ``ESBulkStreamWriter`` only adds the ``batchId`` signatures.
 
     The writer object is pickled into every task, so all configuration
     is plain-data attributes parsed once from the DataSource options."""
@@ -138,7 +140,7 @@ class _BulkWriterCore:
             flush(buf)
         return BulkCommit(n_docs=n_docs, n_requests=n_requests, n_bytes=n_bytes)
 
-    def _publish(self, messages, batch_id: int | None) -> None:
+    def commit(self, messages, batch_id: int | None = None) -> None:
         """Driver-side publish point — runs only after every partition
         returned a commit message. Totals the receipts and refreshes the
         index so the batch becomes searchable as one unit."""
@@ -166,7 +168,7 @@ class _BulkWriterCore:
                 label=f"refresh {self.index}",
             )
 
-    def _record_abort(self, messages, batch_id: int | None) -> None:
+    def abort(self, messages, batch_id: int | None = None) -> None:
         """Indexed-but-uncommitted documents are upsert-idempotent by
         ``_id``, so abort only records the receipts for observability
         (and, in hermetic mode, for the protocol tests)."""
@@ -177,32 +179,15 @@ class _BulkWriterCore:
                 json.dump({"batch_id": batch_id, "partitions_completed": done}, f)
 
 
-class ESBulkBatchWriter(DataSourceWriter):
-    def __init__(self, options) -> None:
-        self._core = _BulkWriterCore(options)
-
-    def write(self, iterator: Iterator[Row]) -> BulkCommit:
-        return self._core.write(iterator)
-
-    def commit(self, messages) -> None:
-        self._core._publish(messages, batch_id=None)
-
-    def abort(self, messages) -> None:
-        self._core._record_abort(messages, batch_id=None)
-
-
-class ESBulkStreamWriter(DataSourceStreamWriter):
-    def __init__(self, options) -> None:
-        self._core = _BulkWriterCore(options)
-
-    def write(self, iterator: Iterator[Row]) -> BulkCommit:
-        return self._core.write(iterator)
+class ESBulkStreamWriter(ESBulkBatchWriter, DataSourceStreamWriter):
+    """Per-micro-batch commit: the receipt and abort files carry the
+    batch id."""
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
-        self._core._publish(messages, batch_id=batchId)
+        super().commit(messages, batch_id=batchId)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
-        self._core._record_abort(messages, batch_id=batchId)
+        super().abort(messages, batch_id=batchId)
 
 
 class ESBulkDataSource(DataSource):

@@ -9,8 +9,8 @@ Four deliberate fixes over the reference (SURVEY.md §4.3):
 
 * **majority quorum, not all-members** — the reference requires
   `replicaDepth` arrivals, so one dead replica stalls emission forever
-  and strands its counter entries. Quorum here defaults to
-  ``replica_depth // 2 + 1``.
+  and strands its counter entries. Quorum here is the majority,
+  ``replica_depth // 2 + 1`` (``_shard_quorum``).
 * **event-time state TTL** — ops that never reach quorum are evicted
   once the watermark passes (op event time + ttl), instead of leaking
   (`documentCounter` in the reference grows unboundedly).
@@ -20,7 +20,7 @@ Four deliberate fixes over the reference (SURVEY.md §4.3):
 * **per-shard replica depth** — the reference sizes every op's counter
   from the FIRST shard's member count (MongoOplogTailMapper.java:64);
   ``shard_depths`` gives each op its own shard's majority instead
-  (joined in as a per-row column, so the state needs no second key).
+  (every delivery carries it as ``__quorum``; no second state key).
 
 Spark mapping: ``applyInPandasWithState`` grouped by hash bucket
 ``pmod(h, N_BUCKETS)``, not by op id. Each bucket holds ONE state row of
@@ -31,9 +31,9 @@ stream in a binary column. Once an op is emitted its document (``op``,
 ``ns``, ``o``) is cleared: the entry only has to recognise later
 deliveries until it is evicted. One Python call per bucket per
 micro-batch merges all of the batch's deliveries for that bucket and
-emits each op in the call where its count reaches its quorum (the
-uniform one, or the per-row ``__quorum`` of its shard). The per-call
-cost is fixed, so a trigger costs a few calls instead of one per op.
+emits each op in the call where its count reaches its ``__quorum``.
+The per-call cost is fixed, so a trigger costs a few calls instead of
+one per op.
 
 Eviction is in-band and the operator runs with
 ``GroupStateTimeout.NoTimeout``: inside the same call, entries with
@@ -63,8 +63,8 @@ checkpoint written by the earlier per-op-id form (one state row per
 location. ``N_BUCKETS`` must not change under a live checkpoint: an op
 re-keyed to another bucket would lose its count and could emit twice.
 
-Batch twin: ``quorum_dedup_batch`` (used by the oracle-checked q62 and
-the replay tests).
+Batch twin: ``quorum_dedup_batch``, the same emission rule over a
+bounded replay; the tests compare the stream's emission set against it.
 """
 
 from __future__ import annotations
@@ -133,37 +133,30 @@ _STATE_DTYPES = {
     "op": "object", "ns": "object", "o": "object",
 }
 
-# Per-row quorum column name for heterogeneous shard depths (see
-# _with_quorum_col): every delivery of an op carries its shard's quorum,
-# so the state needs no second key dimension.
+# Per-row quorum column: every delivery of an op carries its shard's
+# quorum, so the state needs no second key dimension.
 _QUORUM_COL = "__quorum"
 _BUCKET_COL = "__bucket"
 
+# Event-time slack of the watermark behind the newest `ts_t` seen.
+WATERMARK_DELAY = "10 seconds"
 
-def _shard_quorum(shard_depths: dict[str, int], default_quorum: int):
-    """Per-row quorum expression: the majority of the row's own shard
-    (map lookup on the `shard` column — the fix for the reference's
-    first-shard-only replicaDepth, MongoOplogTailMapper.java:64 /
-    SURVEY §4.3.3), or ``default_quorum`` for a shard not in the map.
-    A tiny literal map stays in codegen; no join, no shuffle, no driver
-    state."""
+
+def _shard_quorum(replica_depth: int, shard_depths: dict[str, int] | None):
+    """Per-row quorum expression, the one majority rule: the majority of
+    the row's own shard (map lookup on the `shard` column — the fix for
+    the reference's first-shard-only replicaDepth,
+    MongoOplogTailMapper.java:64 / SURVEY §4.3.3), else of
+    ``replica_depth``. A tiny literal map stays in codegen; no join, no
+    shuffle, no driver state."""
+    majority = F.lit(replica_depth // 2 + 1)
+    if not shard_depths:
+        return majority
     pairs = []
     for shard, depth in sorted(shard_depths.items()):
         pairs += [F.lit(shard), F.lit(depth // 2 + 1)]
     lookup = F.try_element_at(F.create_map(*pairs), F.col("shard"))
-    return F.coalesce(lookup, F.lit(default_quorum))
-
-
-def _with_quorum_col(ops: DataFrame, default_quorum: int, shard_depths: dict[str, int] | None):
-    """Attach the per-row quorum column for per-shard depths. The
-    uniform case attaches NO column at all: the quorum is baked into the
-    Python closure instead, keeping one int64 per delivery out of the
-    Arrow transfer (measurable at bench scale — 150k deliveries/batch)."""
-    if not shard_depths:
-        return ops.select(*_OUT_COLS)
-    return ops.select(*_OUT_COLS, "shard").withColumn(
-        _QUORUM_COL, _shard_quorum(shard_depths, default_quorum)
-    ).drop("shard")
+    return F.coalesce(lookup, majority)
 
 
 def _load_state(state: GroupState) -> pd.DataFrame:
@@ -183,11 +176,10 @@ def _dump_state(st: pd.DataFrame) -> bytes:
     return sink.getvalue().to_pybytes()
 
 
-def _quorum_fn(quorum: int, state_ttl_ms: int, per_shard: bool = False):
+def _quorum_fn(state_ttl_ms: int):
     """Build the per-bucket stateful function (module-level factory so
-    Spark can pickle the closure to executors). ``per_shard`` means the
-    rows carry a __quorum column (heterogeneous shard depths); otherwise
-    the uniform ``quorum`` is baked into the closure.
+    Spark can pickle the closure to executors). Each row carries its
+    op's quorum in ``__quorum``.
 
     One call sees every delivery of the bucket in this micro-batch, so
     the work is a handful of vectorised pandas operations per call, not
@@ -214,7 +206,7 @@ def _quorum_fn(quorum: int, state_ttl_ms: int, per_shard: bool = False):
         hs = arrivals.index
         seen = st.loc[hs, "seen"].to_numpy() + arrivals.to_numpy()
         st.loc[hs, "seen"] = seen
-        need = first.loc[hs, _QUORUM_COL].to_numpy() if per_shard else quorum
+        need = first.loc[hs, _QUORUM_COL].to_numpy()
         fire = hs[~st.loc[hs, "emitted"].to_numpy() & (seen >= need)]
         if len(fire):
             st.loc[fire, "emitted"] = True
@@ -236,9 +228,7 @@ def _quorum_fn(quorum: int, state_ttl_ms: int, per_shard: bool = False):
 def quorum_dedup_stream(
     ops: DataFrame,
     replica_depth: int,
-    quorum: int | None = None,
     state_ttl_ms: int = 60_000,
-    watermark_delay: str = "10 seconds",
     shard_depths: dict[str, int] | None = None,
 ) -> DataFrame:
     """Streaming quorum dedup: state keyed by ``pmod(h, N_BUCKETS)``,
@@ -256,18 +246,17 @@ def quorum_dedup_stream(
     shard's depth (MongoOplogTailMapper.java:64, SURVEY §4.3.3).
     Requires a `shard` column on ``ops``.
     """
-    q = quorum if quorum is not None else replica_depth // 2 + 1
-    with_time = _with_quorum_col(ops, q, shard_depths).withColumns(
-        {
-            "event_ts": F.timestamp_seconds(F.col("ts_t")),
-            _BUCKET_COL: F.pmod(F.col("h"), F.lit(N_BUCKETS)),
-        }
+    keyed = ops.select(
+        *_OUT_COLS,
+        _shard_quorum(replica_depth, shard_depths).alias(_QUORUM_COL),
+        F.timestamp_seconds(F.col("ts_t")).alias("event_ts"),
+        F.pmod(F.col("h"), F.lit(N_BUCKETS)).alias(_BUCKET_COL),
     )
     return (
-        with_time.withWatermark("event_ts", watermark_delay)
+        keyed.withWatermark("event_ts", WATERMARK_DELAY)
         .groupBy(_BUCKET_COL)
         .applyInPandasWithState(
-            _quorum_fn(q, state_ttl_ms, per_shard=bool(shard_depths)),
+            _quorum_fn(state_ttl_ms),
             outputStructType=OP_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
@@ -279,20 +268,17 @@ def quorum_dedup_stream(
 def quorum_dedup_batch(
     ops: DataFrame,
     replica_depth: int,
-    quorum: int | None = None,
     shard_depths: dict[str, int] | None = None,
 ) -> DataFrame:
     """Batch twin (same emission set on a bounded replay): group by op id,
     emit the first-delivered payload of every op with >= quorum arrivals.
     One hash-shuffle on `h` — the replay/backfill path at scale.
     ``shard_depths``: see quorum_dedup_stream."""
-    q = quorum if quorum is not None else replica_depth // 2 + 1
-    per_row_q = _shard_quorum(shard_depths, q) if shard_depths else F.lit(q)
     w_first = F.struct(
         F.col("member_host"), F.col("ts_t"), F.col("ts_i"), F.col("op"), F.col("ns"), F.col("o")
     )
     agg = (
-        ops.withColumn("__q", per_row_q)
+        ops.withColumn("__q", _shard_quorum(replica_depth, shard_depths))
         .groupBy("h")
         .agg(F.count("*").alias("seen"), F.min(w_first).alias("first"), F.max("__q").alias("__q"))
         .filter(F.col("seen") >= F.col("__q"))

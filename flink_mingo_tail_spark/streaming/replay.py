@@ -18,6 +18,7 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 
+from flink_mingo_tail_spark.sources.oplog import OPLOG_SOURCE_SCHEMA
 from flink_mingo_tail_spark.streaming.pipeline import CHECKPOINT_NS
 
 MEMBERS = ("m0:27017", "m1:27017", "m2:27017")
@@ -109,20 +110,8 @@ def op_rows(case: OplogCase) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-OPLOG_DDL = (
-    "ts_t int, ts_i int, h long, op string, ns string, fromMigrate boolean, "
-    "o string, o2 string, shard string, member_host string"
-)
-
-
 def write_batch(spark, pdf: pd.DataFrame, dir_path: str) -> None:
-    """Append one replay batch as a parquet file set for file-stream pickup.
-
-    Small batches collapse to one file (deterministic single-file pickup
-    in tests); large replay batches split into ~50k-row tasks — a single
-    coalesce(1) funneled the 150k-row bench batch through one 27 MB task
-    (round-1 bench warning)."""
-    n_parts = max(1, len(pdf) // 50_000)
-    df = spark.createDataFrame(pdf, schema=OPLOG_DDL)
-    df = df.coalesce(1) if n_parts == 1 else df.repartition(n_parts)
-    df.write.mode("append").parquet(dir_path)
+    """Append one replay batch as one parquet file, so that a file-stream
+    source picks it up whole and deterministically."""
+    df = spark.createDataFrame(pdf, schema=OPLOG_SOURCE_SCHEMA)
+    df.coalesce(1).write.mode("append").parquet(dir_path)

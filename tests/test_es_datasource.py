@@ -175,7 +175,7 @@ class _StubPost:
 
 def _stubbed_writer(post: _StubPost, **options) -> ESBulkBatchWriter:
     writer = ESBulkBatchWriter({"backoff_base_sec": 0, **options})
-    writer._core._post = post
+    writer._post = post
     return writer
 
 
@@ -220,12 +220,13 @@ def test_cdc_pipeline_through_es_bulk_stream_writer(registered, tmp_path):
     commit barrier fires per micro-batch with matching doc totals."""
     from flink_mingo_tail_spark.streaming.pipeline import oplog_filter
     from flink_mingo_tail_spark.streaming.quorum import quorum_dedup_stream
-    from flink_mingo_tail_spark.streaming.replay import OPLOG_DDL, OplogCase, op_rows, write_batch
+    from flink_mingo_tail_spark.sources.oplog import OPLOG_SOURCE_SCHEMA
+    from flink_mingo_tail_spark.streaming.replay import OplogCase, op_rows, write_batch
 
     src, ck, outdir = str(tmp_path / "src"), str(tmp_path / "ck"), str(tmp_path / "es")
     os.makedirs(outdir)
     write_batch(registered, op_rows(OplogCase(n_ops=60)), src)
-    stream = registered.readStream.schema(OPLOG_DDL).parquet(src)
+    stream = registered.readStream.schema(OPLOG_SOURCE_SCHEMA).parquet(src)
     deduped = quorum_dedup_stream(oplog_filter(stream), replica_depth=3)
     q = (
         deduped.writeStream.format("es_bulk")

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.sources.oplog import (
     OPLOG_SOURCE_SCHEMA,
+    OplogSimStreamReader,
+    member_log_path,
     register,
     write_member_logs,
 )
@@ -134,3 +136,83 @@ def test_member_name_roundtrip_hyphenated_host(spark, log_dir):
         .option("path", log_dir).load()
     )
     assert [r.member_host for r in df.collect()] == [member]
+
+
+# --- the stream reader's byte-range offsets, driven directly (no Spark job) ---
+
+
+def test_stream_reads_replay_exactly_between_offsets(log_dir):
+    """Two reads with an append between them; replaying each
+    [start, end) returns exactly the rows the read returned."""
+    write_member_logs(op_rows(OplogCase(n_ops=4)), log_dir)
+    reader = OplogSimStreamReader({"path": log_dir})
+    start = reader.initialOffset()
+    rows1, mid = reader.read(start)
+    rows1 = list(rows1)
+    write_member_logs(op_rows(OplogCase(n_ops=3, h_base=2000, ts_base=1_700_000_100)), log_dir)
+    rows2, end = reader.read(mid)
+    rows2 = list(rows2)
+    assert len(rows1) == 4 * 3 + 3 and len(rows2) == 3 * 3 + 3
+    assert {r[2] for r in rows2} == {2000, 2001, 2002, 2004, 2005, 2006}  # 3 ops + 3 noise rows
+    assert sum(end["lines"].values()) == len(rows1) + len(rows2)
+    assert list(reader.readBetweenOffsets(start, mid)) == rows1
+    assert list(reader.readBetweenOffsets(mid, end)) == rows2
+    idle, again = reader.read(end)
+    assert list(idle) == [] and again == end
+
+
+def test_stream_leaves_partial_trailing_line_for_later(log_dir):
+    """A trailing line without its newline is not consumed; once the
+    newline is written it is read exactly once."""
+    case = OplogCase(n_ops=2, members=MEMBERS[:1], include_noise=False)
+    write_member_logs(op_rows(case), log_dir)
+    path = member_log_path(log_dir, MEMBERS[0])
+    line = json.dumps({"ts_t": 1_700_000_050, "ts_i": 1, "h": 77, "op": "i", "ns": "test.grades"})
+    with open(path, "a") as f:
+        f.write(line[:20])
+    reader = OplogSimStreamReader({"path": log_dir})
+    rows, off = reader.read(reader.initialOffset())
+    assert [r[2] for r in rows] == [1000, 1001]
+    assert off["lines"] == {MEMBERS[0]: 2}
+    with open(path, "a") as f:
+        f.write(line[20:] + "\n")
+    rows, off2 = reader.read(off)
+    assert [r[2] for r in rows] == [77]
+    rows, off3 = reader.read(off2)
+    assert list(rows) == [] and off3 == off2
+    assert [r[2] for r in reader.readBetweenOffsets(off, off2)] == [77]
+
+
+def test_stream_reads_member_log_created_mid_stream_from_start(log_dir):
+    case = OplogCase(n_ops=2, members=MEMBERS[:2], include_noise=False)
+    write_member_logs(op_rows(case), log_dir)
+    reader = OplogSimStreamReader({"path": log_dir})
+    start = reader.initialOffset()
+    assert set(start["bytes"]) == set(MEMBERS[:2])
+    _, off = reader.read(start)
+    late = OplogCase(n_ops=2, members=MEMBERS[2:], include_noise=False)
+    write_member_logs(op_rows(late), log_dir)
+    rows, end = reader.read(off)
+    rows = list(rows)
+    assert [(r[2], r[9]) for r in rows] == [(1000, MEMBERS[2]), (1001, MEMBERS[2])]
+    assert end["lines"][MEMBERS[2]] == 2
+    assert list(reader.readBetweenOffsets(off, end)) == rows
+
+
+def test_stream_truncated_member_log_raises(log_dir):
+    """A log shorter than its committed byte position (truncated or
+    rotated) is an error, not a silent rewind of the offset."""
+    write_member_logs(op_rows(OplogCase(n_ops=3, include_noise=False)), log_dir)
+    reader = OplogSimStreamReader({"path": log_dir})
+    _, off = reader.read(reader.initialOffset())
+    with open(member_log_path(log_dir, MEMBERS[1]), "w") as f:
+        f.write("")
+    with pytest.raises(ValueError, match="m1:27017"):
+        reader.read(off)
+
+
+def test_stream_line_count_offset_raises(log_dir):
+    """An offset of the former line-count reader cannot be resumed."""
+    write_member_logs(op_rows(OplogCase(n_ops=6, include_noise=False)), log_dir)
+    with pytest.raises(ValueError, match="new checkpoint location"):
+        OplogSimStreamReader({"path": log_dir}).read({"lines": {MEMBERS[0]: 5}})

@@ -9,11 +9,11 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from flink_mingo_tail_spark.sources.oplog import OPLOG_SOURCE_SCHEMA, register, write_member_logs
 from flink_mingo_tail_spark.streaming.pipeline import build_cdc_stream, oplog_filter
 from flink_mingo_tail_spark.streaming.quorum import quorum_dedup_batch, quorum_dedup_stream
 from flink_mingo_tail_spark.streaming.replay import (
     MEMBERS,
-    OPLOG_DDL,
     OplogCase,
     op_rows,
     write_batch,
@@ -21,7 +21,7 @@ from flink_mingo_tail_spark.streaming.replay import (
 
 
 def _read_oplog_stream(spark, dir_path: str):
-    return spark.readStream.schema(OPLOG_DDL).parquet(dir_path)
+    return spark.readStream.schema(OPLOG_SOURCE_SCHEMA).parquet(dir_path)
 
 
 @pytest.fixture()
@@ -77,7 +77,7 @@ def test_quorum_batch_twin_matches_stream_semantics(spark):
         deliveries={3: (MEMBERS[0],), 5: (MEMBERS[0], MEMBERS[1])},
         duplicated=(1,),
     )
-    df = spark.createDataFrame(op_rows(case), schema=OPLOG_DDL)
+    df = spark.createDataFrame(op_rows(case), schema=OPLOG_SOURCE_SCHEMA)
     result = quorum_dedup_batch(oplog_filter(df), replica_depth=3).collect()
     hs = sorted(r.h for r in result)
     assert hs == sorted(1000 + i for i in range(8) if i != 3)
@@ -85,16 +85,35 @@ def test_quorum_batch_twin_matches_stream_semantics(spark):
     assert len([h for h in hs if h == 1001]) == 1
 
 
-def test_quorum_resume_from_checkpoint(spark, tmpdirs):
+@pytest.mark.parametrize("feed", ["parquet", "oplog_sim"])
+def test_quorum_resume_from_checkpoint(spark, tmpdirs, feed):
     """Kill/restart with the same checkpoint: no loss, no duplicates
-    (fixes ref §4.3.2 checkpoint-before-emit)."""
+    (fixes ref §4.3.2 checkpoint-before-emit). Fed by parquet files or
+    by the `oplog_sim` member logs, whose byte offsets then go through
+    the stop and restart; the late member's log only appears after the
+    stop."""
     src, out, ck = tmpdirs
     case = OplogCase(n_ops=10, include_noise=False)
     rows = op_rows(case)
-    write_batch(spark, rows[rows.member_host != MEMBERS[2]], src)
+    if feed == "parquet":
+        def append(pdf):
+            write_batch(spark, pdf, src)
+
+        def read_stream():
+            return _read_oplog_stream(spark, src)
+    else:
+        register(spark)
+
+        def append(pdf):
+            write_member_logs(pdf, src)
+
+        def read_stream():
+            return spark.readStream.format("oplog_sim").option("path", src).load()
+
+    append(rows[rows.member_host != MEMBERS[2]])
 
     def start_query():
-        deduped = build_cdc_stream(_read_oplog_stream(spark, src), replica_depth=3)
+        deduped = build_cdc_stream(read_stream(), replica_depth=3)
         return (
             deduped.writeStream.outputMode("append")
             .format("parquet")
@@ -114,12 +133,14 @@ def test_quorum_resume_from_checkpoint(spark, tmpdirs):
     # restart from the same checkpoint: only the late member's deliveries
     # are new; previously emitted ops must NOT re-emit (no duplicates), and
     # nothing may be lost.
-    write_batch(spark, rows[rows.member_host == MEMBERS[2]], src)
+    append(rows[rows.member_host == MEMBERS[2]])
     q = start_query()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+    # the restarted query read exactly the late member's 10 deliveries
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 10
     after = sorted(r.h for r in spark.read.parquet(out).select("h").collect())
     assert after == first, f"resume broke exactly-once: {after}"
 
@@ -324,7 +345,7 @@ def test_quorum_per_shard_replica_depth(spark, tmpdirs):
         n_ops=1, shard="s1", members=m1, h_base=1000, include_noise=False,
     )
     rows = pd.concat([op_rows(c) for c in (case5, case3, case1)], ignore_index=True)
-    df = spark.createDataFrame(rows, schema=OPLOG_DDL)
+    df = spark.createDataFrame(rows, schema=OPLOG_SOURCE_SCHEMA)
     depths = {"s5": 5, "s0": 3, "s1": 1}
 
     got_batch = quorum_dedup_batch(oplog_filter(df), replica_depth=3, shard_depths=depths)

@@ -8,7 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from flink_mingo_tail_spark.streaming.replay import OplogCase, OPLOG_DDL, op_rows, write_batch
+from flink_mingo_tail_spark.sources.oplog import OPLOG_SOURCE_SCHEMA
+from flink_mingo_tail_spark.streaming.replay import OplogCase, op_rows, write_batch
 
 
 def test_rate_source_smoke(spark):
@@ -42,7 +43,7 @@ def test_console_sink_runs(spark, tmp_path):
     driver stdout; the assertion is clean start/processing/stop)."""
     src = str(tmp_path / "src")
     write_batch(spark, op_rows(OplogCase(n_ops=3, include_noise=False)), src)
-    stream = spark.readStream.schema(OPLOG_DDL).parquet(src)
+    stream = spark.readStream.schema(OPLOG_SOURCE_SCHEMA).parquet(src)
     q = (
         stream.writeStream.outputMode("append")
         .format("console")
@@ -163,7 +164,7 @@ def test_max_files_per_trigger_backpressure(spark, tmp_path):
             src,
         )
     stream = (
-        spark.readStream.schema(OPLOG_DDL).option("maxFilesPerTrigger", "1").parquet(src)
+        spark.readStream.schema(OPLOG_SOURCE_SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
     batch_sizes = []
     q = (
@@ -455,7 +456,7 @@ def test_observed_metrics_via_listener(spark, tmp_path):
     listener = PipelineMetricsListener()
     spark.streams.addListener(listener)
     try:
-        stream = spark.readStream.schema(OPLOG_DDL).parquet(src)
+        stream = spark.readStream.schema(OPLOG_SOURCE_SCHEMA).parquet(src)
         observed = instrument(build_cdc_stream(stream, replica_depth=3), "cdc")
         q = (
             observed.writeStream.outputMode("append")
@@ -509,7 +510,11 @@ def test_available_now_trigger_drains_and_stops(spark, tmp_path):
         Parquet sink, not memory: the memory sink cannot recover from a
         checkpoint, and resuming the same checkpoint across runs is the
         entire point of the pattern."""
-        stream = spark.readStream.schema(OPLOG_DDL).option("maxFilesPerTrigger", "1").parquet(src)
+        stream = (
+            spark.readStream.schema(OPLOG_SOURCE_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
         q = (
             build_cdc_stream(stream, replica_depth=3)
             .writeStream.outputMode("append")
