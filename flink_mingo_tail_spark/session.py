@@ -51,9 +51,6 @@ def build_session(app_name: str = "flink-mingo-tail-spark", *, shuffle_partition
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for any pandas_udf / toPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Allow custom Python data sources to receive pushed filters
-        # (sources/oplog.py implements the reference's server-side $match).
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         # Managed-table warehouse (bucketed tables) outside the repo tree.
@@ -86,8 +83,4 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     # (try_element_at guards, strict casts); pin it in case the caller's
     # session was built with ANSI off.
     spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # static conf on some builds; only the custom source needs it
     return spark

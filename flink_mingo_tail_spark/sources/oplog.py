@@ -11,10 +11,11 @@ over files instead of live mongod:
   each Spark task owns exactly one member's ordered stream. The stream
   reader is a `SimpleDataSourceStreamReader`: every micro-batch reads
   every member log in one driver-side Python process.
-* **filter pushdown** (ref: server-side $match,
-  MongoOplogTailMapper.java:90-98): the batch reader's `pushFilters`
-  accepts the ns/op/fromMigrate/ts predicates and evaluates them inside
-  the reader — rows are dropped before they ever reach the engine.
+* **no reader-side filtering** (ref: server-side $match,
+  MongoOplogTailMapper.java:90-98): the readers return every logged
+  entry; the ns/op/fromMigrate/ts conjunction is evaluated only by
+  `streaming/pipeline.py:oplog_filter`, as a Catalyst `Filter` in the
+  scan's own codegen stage.
 * **offset-tracked streaming** (ref: per-host `time_d.repl_time`
   checkpoint, MongoDBOplogSource.java:130-139; the tailable cursor
   resumes after it, MongoOplogTailMapper.java:75-98): the stream
@@ -43,12 +44,7 @@ from urllib.parse import quote, unquote
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
     InputPartition,
-    IsNotNull,
-    IsNull,
     SimpleDataSourceStreamReader,
 )
 
@@ -131,65 +127,18 @@ class MemberPartition(InputPartition):
     member: str
 
 
-class _PushedPredicates:
-    """The subset of the reference's $match conjunction we evaluate
-    reader-side; anything else is left for Spark to re-check."""
-
-    def __init__(self) -> None:
-        self.min_ts_t: int | None = None
-        self.op_eq: str | None = None
-        self.ns_eq: str | None = None
-        self.from_migrate_null = False
-
-    def try_push(self, f: Filter) -> bool:
-        if isinstance(f, GreaterThan) and f.attribute == ("ts_t",) and isinstance(f.value, int):
-            self.min_ts_t = f.value if self.min_ts_t is None else max(self.min_ts_t, f.value)
-            return True
-        if isinstance(f, EqualTo) and f.attribute == ("op",):
-            self.op_eq = f.value
-            return True
-        if isinstance(f, EqualTo) and f.attribute == ("ns",):
-            self.ns_eq = f.value
-            return True
-        if isinstance(f, IsNull) and f.attribute == ("fromMigrate",):
-            self.from_migrate_null = True
-            return True
-        if isinstance(f, IsNotNull):
-            return True  # non-null envelope fields: trivially true post-parse
-        return False
-
-    def matches(self, row: tuple) -> bool:
-        ts_t, _, _, op, ns, from_migrate = row[0], row[1], row[2], row[3], row[4], row[5]
-        if self.min_ts_t is not None and not (ts_t > self.min_ts_t):
-            return False
-        if self.op_eq is not None and op != self.op_eq:
-            return False
-        if self.ns_eq is not None and ns != self.ns_eq:
-            return False
-        if self.from_migrate_null and from_migrate is not None:
-            return False
-        return True
-
-
 class OplogSimBatchReader(DataSourceReader):
     def __init__(self, options) -> None:
         self.base = options.get("path")
         if not self.base:
             raise ValueError("oplog_sim requires option('path', <dir of member logs>)")
-        self.pushed = _PushedPredicates()
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        for f in filters:
-            if not self.pushed.try_push(f):
-                yield f  # unsupported → Spark evaluates it post-scan
 
     def partitions(self) -> list[MemberPartition]:
         return [MemberPartition(m) for m in _discover_members(self.base)]
 
     def read(self, partition: MemberPartition) -> Iterator[tuple]:
         for _, row in _read_log(self.base, partition.member):
-            if self.pushed.matches(row):
-                yield row
+            yield row
 
 
 class OplogSimStreamReader(SimpleDataSourceStreamReader):

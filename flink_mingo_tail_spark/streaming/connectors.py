@@ -1,10 +1,11 @@
-"""Live-cluster adapters for the hermetic CDC pipeline.
+"""Live-cluster source adapter for the hermetic CDC pipeline.
 
-The engine's source and sink run hermetically by design (`oplog_sim`
-over member JSONL logs; the ``es_bulk`` writer's ``transport_dir`` mode)
-so every test runs without a MongoDB or Elasticsearch deployment. This
-module is the documented swap-in seam to the real systems the reference
-talks to (ShardSetFinder.java:44-56, ElasticsearchEmbeddedNodeSink.java:47-66):
+The engine's source runs hermetically by design (`oplog_sim` over member
+JSONL logs) so every test runs without a MongoDB deployment. This module
+is the documented swap-in seam to the live MongoDB cluster the reference
+tails (ShardSetFinder.java:44-56). The sink needs no seam here: the
+Elasticsearch writer (`streaming/es_datasource.py`) talks to a live
+cluster whenever its ``transport_dir`` option is absent.
 
 * ``mongo_change_stream_source`` — the public MongoDB Spark Connector
   (``format("mongodb")``, change-stream mode) normalized onto
@@ -16,11 +17,6 @@ talks to (ShardSetFinder.java:44-56, ElasticsearchEmbeddedNodeSink.java:47-66):
   becomes a no-op safety net rather than a correctness requirement
   (replica_depth=1), and the engine's quorum path remains for
   per-member tailing topologies.
-* ``es_bulk_payload`` / ``post_with_retry`` — the Elasticsearch
-  ``_bulk`` body and the retrying stdlib HTTP POST that the ``es_bulk``
-  DataSource writer (`streaming/es_datasource.py`) ships each chunk
-  with (the reference flushed per record, bulk-size 1 — its §4.3
-  throughput defect).
 
 The change-stream source is not importable-by-accident into the
 hermetic paths: it fails with a clear error when the live dependency
@@ -28,9 +24,6 @@ hermetic paths: it fails with a clear error when the live dependency
 """
 
 from __future__ import annotations
-
-import json
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -143,75 +136,3 @@ def normalize_change_events(raw: DataFrame) -> DataFrame:
         F.lit(None).cast("string").alias("shard"),
         F.lit(None).cast("string").alias("member_host"),
     )
-
-
-def es_bulk_payload(rows: list[dict], index: str) -> str:
-    """NDJSON `_bulk` body: one action line + one source line per doc,
-    `{"data": doc}` envelope (ElasticsearchEmbeddedNodeSink.java:60-63)."""
-    lines: list[str] = []
-    for row in rows:
-        lines.append(json.dumps({"index": {"_index": index, "_id": str(row.get("h"))}}))
-        lines.append(json.dumps({"data": row}, default=str))
-    return "\n".join(lines) + "\n"
-
-
-def _http_post(url: str, body: bytes, content_type: str) -> int:
-    from urllib.request import Request, urlopen
-
-    req = Request(url, data=body, headers={"Content-Type": content_type})
-    with urlopen(req) as resp:  # noqa: S310 (explicit live-cluster adapter)
-        return resp.status
-
-
-#: HTTP statuses worth retrying: throttle (429) and transient
-#: gateway/overload conditions. 4xx other than 429 means the payload or
-#: mapping is wrong — retrying can't fix it, fail the batch immediately.
-RETRYABLE_STATUSES = frozenset({429, 502, 503, 504})
-
-
-def post_with_retry(
-    post: Callable[[str, bytes, str], int],
-    url: str,
-    payload: bytes,
-    content_type: str,
-    *,
-    max_attempts: int,
-    backoff_base_sec: float,
-    backoff_cap_sec: float,
-    sleeper: Callable[[float], None] | None,
-    label: str,
-) -> None:
-    """One logical POST with capped exponential backoff + equal jitter on
-    transient failures (RETRYABLE_STATUSES / dropped connections); raises
-    on non-retryable status or after ``max_attempts``. Used by the
-    ``es_bulk`` DataSource writer for its bulk and refresh requests —
-    retries are safe because every bulk action carries an explicit
-    ``_id`` (idempotent upsert)."""
-    import random
-    import time as _time
-
-    sleep = sleeper or _time.sleep
-    # The helper serves more than bulk writes (es_bulk commit issues a
-    # /_refresh through it), so headline errors carry the caller's label
-    # instead of a hardcoded "bulk write" that would mislead ops triage.
-    headline = f"ES request failed ({label})"
-    for attempt in range(1, max_attempts + 1):
-        failure: str | None = None
-        try:
-            status = post(url, payload, content_type)
-        except OSError as exc:  # dropped connection, DNS blip
-            failure = f"transport error: {exc}"
-        else:
-            if status < 300:
-                return
-            failure = f"HTTP {status}"
-            if status not in RETRYABLE_STATUSES:
-                raise RuntimeError(f"{headline}: non-retryable {failure}")
-        if attempt == max_attempts:
-            raise RuntimeError(f"{headline} after {max_attempts} attempts: {failure}")
-        # capped exponential backoff, equal jitter: delay in
-        # [base*2^(a-1)/2, base*2^(a-1)] so a fleet of tasks throttled
-        # together doesn't re-stampede in lockstep
-        ceiling = min(backoff_cap_sec, backoff_base_sec * (2 ** (attempt - 1)))
-        sleep(ceiling * (0.5 + 0.5 * random.random()))
-

@@ -2,8 +2,8 @@
 (Spark 4 ``pyspark.sql.datasource`` API), batch + streaming.
 
 Each task ships its partition as chunked ``_bulk`` requests
-executor-side with retry/backoff (`connectors.post_with_retry`), and
-the V2 writer **commit protocol** makes the driver's per-batch commit
+executor-side with retry/backoff (`ESBulkBatchWriter._post_with_retry`),
+and the V2 writer **commit protocol** makes the driver's per-batch commit
 the publish point (reference parity target:
 ElasticsearchEmbeddedNodeSink.java:47-66, which had neither batching
 nor any commit barrier):
@@ -33,8 +33,9 @@ Hermetic mode: ``transport_dir`` redirects every POST to one file per
 request under that directory (requests as ``req-*.ndjson``, commits as
 ``commit-*.json``, aborts as ``abort-*.json``) so tests and offline
 runs exercise the full protocol with zero network; absent that option
-the writer POSTs to ``{url}/_bulk`` with the shared retry/backoff
-policy (`connectors.post_with_retry`).
+the writer POSTs to ``{url}/_bulk`` through the same retry/backoff
+policy. This module is the only code that knows the ``_bulk`` wire
+format and that policy.
 
 Usage::
 
@@ -48,6 +49,8 @@ from __future__ import annotations
 
 import json
 import os
+import random
+import time
 import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -60,11 +63,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import Row, StructType
 
-from flink_mingo_tail_spark.streaming.connectors import (
-    _http_post,
-    es_bulk_payload,
-    post_with_retry,
-)
+#: HTTP statuses worth retrying: throttle (429) and transient
+#: gateway/overload conditions. 4xx other than 429 means the payload or
+#: mapping is wrong — retrying can't fix it, fail the batch immediately.
+RETRYABLE_STATUSES = frozenset({429, 502, 503, 504})
 
 
 @dataclass
@@ -75,6 +77,24 @@ class BulkCommit(WriterCommitMessage):
     n_docs: int
     n_requests: int
     n_bytes: int
+
+
+def es_bulk_payload(rows: list[dict], index: str) -> str:
+    """NDJSON `_bulk` body: one action line + one source line per doc,
+    `{"data": doc}` envelope (ElasticsearchEmbeddedNodeSink.java:60-63)."""
+    lines: list[str] = []
+    for row in rows:
+        lines.append(json.dumps({"index": {"_index": index, "_id": str(row.get("h"))}}))
+        lines.append(json.dumps({"data": row}, default=str))
+    return "\n".join(lines) + "\n"
+
+
+def _http_post(url: str, body: bytes, content_type: str) -> int:
+    from urllib.request import Request, urlopen
+
+    req = Request(url, data=body, headers={"Content-Type": content_type})
+    with urlopen(req) as resp:  # noqa: S310 (explicit live-cluster adapter)
+        return resp.status
 
 
 def _file_post(transport_dir: str, url: str, body: bytes, content_type: str) -> int:
@@ -106,26 +126,46 @@ class ESBulkBatchWriter(DataSourceWriter):
             return _file_post(self.transport_dir, url, body, content_type)
         return _http_post(url, body, content_type)
 
+    def _post_with_retry(self, path: str, payload: bytes, content_type: str, action: str) -> None:
+        """One logical POST to ``{url}/{path}`` with capped exponential
+        backoff + equal jitter on transient failures (RETRYABLE_STATUSES /
+        dropped connections); raises on a non-retryable status or after
+        ``max_attempts``. Retries are safe because every bulk action
+        carries an explicit ``_id`` (idempotent upsert). Errors name the
+        ``action`` because the ``/_refresh`` of ``commit`` goes through
+        here too."""
+        url = f"{self.url}/{path}"
+        headline = f"ES request failed ({action} {self.index})"
+        for attempt in range(1, self.max_attempts + 1):
+            failure: str | None = None
+            try:
+                status = self._post(url, payload, content_type)
+            except OSError as exc:  # dropped connection, DNS blip
+                failure = f"transport error: {exc}"
+            else:
+                if status < 300:
+                    return
+                failure = f"HTTP {status}"
+                if status not in RETRYABLE_STATUSES:
+                    raise RuntimeError(f"{headline}: non-retryable {failure}")
+            if attempt == self.max_attempts:
+                raise RuntimeError(f"{headline} after {self.max_attempts} attempts: {failure}")
+            # capped exponential backoff, equal jitter: delay in
+            # [base*2^(a-1)/2, base*2^(a-1)] so a fleet of tasks throttled
+            # together doesn't re-stampede in lockstep
+            ceiling = min(self.backoff_cap, self.backoff_base * (2 ** (attempt - 1)))
+            time.sleep(ceiling * (0.5 + 0.5 * random.random()))
+
     def write(self, iterator: Iterator[Row]) -> BulkCommit:
         """Executor-side: stream the partition through a bounded buffer,
         one `_bulk` POST per ``max_docs`` chunk (never materializing the
-        partition), with the shared retry/backoff policy."""
+        partition), each through the retry/backoff policy."""
         n_docs = n_requests = n_bytes = 0
 
         def flush(chunk: list[dict]) -> None:
             nonlocal n_requests, n_bytes
             payload = es_bulk_payload(chunk, self.index).encode()
-            post_with_retry(
-                self._post,
-                f"{self.url}/_bulk",
-                payload,
-                "application/x-ndjson",
-                max_attempts=self.max_attempts,
-                backoff_base_sec=self.backoff_base,
-                backoff_cap_sec=self.backoff_cap,
-                sleeper=None,
-                label=f"index {self.index}",
-            )
+            self._post_with_retry("_bulk", payload, "application/x-ndjson", "index")
             n_requests += 1
             n_bytes += len(payload)
 
@@ -156,17 +196,7 @@ class ESBulkBatchWriter(DataSourceWriter):
             with open(os.path.join(self.transport_dir, f"commit-{tag}.json"), "w") as f:
                 json.dump(total, f)
         else:
-            post_with_retry(
-                self._post,
-                f"{self.url}/{self.index}/_refresh",
-                b"",
-                "application/json",
-                max_attempts=self.max_attempts,
-                backoff_base_sec=self.backoff_base,
-                backoff_cap_sec=self.backoff_cap,
-                sleeper=None,
-                label=f"refresh {self.index}",
-            )
+            self._post_with_retry(f"{self.index}/_refresh", b"", "application/json", "refresh")
 
     def abort(self, messages, batch_id: int | None = None) -> None:
         """Indexed-but-uncommitted documents are upsert-idempotent by

@@ -1,10 +1,11 @@
 """End-to-end CDC pipeline topology — Spark twin of the reference job
 (MongoDBOplogTail.java:36-42):
 
-    source (per-member partitions, filter pushed down)
-      → quorum dedup (stateful, majority)
-        → envelope {"data": doc}
-          → format("es_bulk") (streaming/es_datasource.py)
+    source (every member log, read in one stream reader)
+      → oplog_filter (the reference's $match, a Catalyst Filter)
+        → quorum dedup (stateful, majority)
+          → envelope {"data": doc}
+            → format("es_bulk") (streaming/es_datasource.py)
 
 Differences by design (SURVEY.md §4.3): offsets commit AFTER sink commit
 (Structured Streaming checkpoint), sinks flush per micro-batch instead of
@@ -15,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from flink_mingo_tail_spark.streaming.quorum import quorum_dedup_stream
 
@@ -25,8 +27,9 @@ def oplog_filter(ops: DataFrame, resume_after: tuple[int, int] | None = None) ->
     """The reference's pushed-down conjunction
     (MongoOplogTailMapper.java:90-98): drop the checkpoint namespace,
     drop no-ops, drop chunk-migration copies, resume after a timestamp.
-    Expressed as a plain filter so Catalyst pushes it into the source
-    scan (PushedFilters) — the Spark equivalent of server-side $match."""
+    The only code that evaluates this predicate: the `oplog_sim` readers
+    return every entry, and Catalyst runs it as a `Filter` in the scan's
+    own codegen stage (over Parquet it also lands in PushedFilters)."""
     cond = (F.col("ns") != CHECKPOINT_NS) & (F.col("op") != "n") & F.col("fromMigrate").isNull()
     if resume_after is not None:
         t, i = resume_after
@@ -68,41 +71,29 @@ def instrument(df: DataFrame, name: str = "cdc") -> DataFrame:
     )
 
 
-class PipelineMetricsListener:
+class PipelineMetricsListener(StreamingQueryListener):
     """Driver-side collector for the per-batch metrics that
     :func:`instrument` emits — the operational dashboard seam
     (emit rate, oplog high-water, per-batch input rows). Register with
     ``spark.streams.addListener``; progress delivery is asynchronous,
-    so tests poll :meth:`observed`.
+    so tests poll :meth:`observed`."""
 
-    Subclasses ``StreamingQueryListener`` lazily (import at class-build
-    time keeps this module importable without a live JVM)."""
+    def __init__(self) -> None:
+        self.progress: list = []
 
-    def __new__(cls, *a, **k):
-        from pyspark.sql.streaming import StreamingQueryListener
+    def onQueryStarted(self, event) -> None:  # noqa: N802
+        pass
 
-        class _Impl(StreamingQueryListener):
-            def __init__(self) -> None:
-                self.progress: list = []
+    def onQueryProgress(self, event) -> None:  # noqa: N802
+        self.progress.append(event.progress)
 
-            def onQueryStarted(self, event) -> None:  # noqa: N802
-                pass
+    def onQueryTerminated(self, event) -> None:  # noqa: N802
+        pass
 
-            def onQueryProgress(self, event) -> None:  # noqa: N802
-                self.progress.append(event.progress)
-
-            def onQueryIdle(self, event) -> None:  # noqa: N802
-                pass
-
-            def onQueryTerminated(self, event) -> None:  # noqa: N802
-                pass
-
-            def observed(self, name: str) -> list:
-                out = []
-                for p in self.progress:
-                    m = (p.observedMetrics or {}).get(name)
-                    if m is not None:
-                        out.append(m)
-                return out
-
-        return _Impl()
+    def observed(self, name: str) -> list:
+        out = []
+        for p in self.progress:
+            m = (p.observedMetrics or {}).get(name)
+            if m is not None:
+                out.append(m)
+        return out

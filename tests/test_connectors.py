@@ -1,7 +1,7 @@
-"""Live-adapter seams (streaming/connectors.py), tested hermetically:
-the change-event normalization is a pure projection, and the ES bulk
-helpers are exercised through the es_bulk writer in transport_dir mode
-(request files instead of HTTP POSTs)."""
+"""Live-adapter seams, tested hermetically: the MongoDB change-event
+normalization (streaming/connectors.py) is a pure projection, and the
+es_bulk writer's `_bulk` requests (streaming/es_datasource.py) are
+exercised in transport_dir mode (request files instead of HTTP POSTs)."""
 
 from __future__ import annotations
 

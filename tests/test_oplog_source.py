@@ -1,7 +1,7 @@
 """Custom `oplog_sim` DataSource: partition-per-member batch scan,
-filter pushdown, offset-tracked tailing stream, and the full
+`oplog_filter` over it, offset-tracked tailing stream, and the full
 source→filter→quorum→envelope→es_bulk topology (the reference's entire job,
-MongoDBOplogTail.java:36-42, end to end)."""
+MongoDBOplogTail.java:36-42, end to end), stopped and restarted."""
 
 from __future__ import annotations
 
@@ -51,6 +51,12 @@ def test_batch_read_filter_pushdown(spark, log_dir):
     assert len(rows) == 15
     assert all(r.ts_t > 1_700_000_004 for r in rows)
     assert all(r.op != "n" and r.ns == "test.grades" and r.fromMigrate is None for r in rows)
+    # Spark evaluates every predicate over the scan: IS NOT NULL is not
+    # taken as trivially true (o2 is null on every logged entry, and only
+    # the one chunk-migration copy carries fromMigrate)
+    assert df.filter(F.col("o2").isNotNull()).count() == 0
+    migrated = df.filter(F.col("fromMigrate").isNotNull()).collect()
+    assert len(migrated) == 1 and migrated[0].fromMigrate is True
 
 
 def test_stream_tails_new_appends(spark, log_dir, tmp_path):
@@ -80,35 +86,56 @@ def test_stream_tails_new_appends(spark, log_dir, tmp_path):
 
 
 def test_full_cdc_topology_from_custom_source(spark, log_dir, tmp_path):
-    """The reference's whole job on Spark: oplog_sim source (per-member
-    partitions) → pushed-down filter → majority-quorum dedup → envelope
-    → es_bulk sink; every committed op is indexed exactly once despite
-    3x delivery, and the sub-majority op never is."""
+    """The reference's whole job on Spark: oplog_sim source (every member
+    log) → oplog_filter → majority-quorum dedup → envelope → es_bulk
+    sink; every committed op is indexed exactly once despite 3x delivery,
+    and the sub-majority op never is — also across a stop, an append and
+    a restart on the same checkpoint and transport_dir."""
     case = OplogCase(n_ops=15, deliveries={7: (MEMBERS[0],)})  # op 7: sub-majority
     write_member_logs(op_rows(case), log_dir)
     register(spark)
     spark.dataSource.register(ESBulkDataSource)
     outdir = tmp_path / "es"
     outdir.mkdir()
-    stream = spark.readStream.format("oplog_sim").option("path", log_dir).load()
-    q = (
-        envelope(build_cdc_stream(stream, replica_depth=3))
-        .writeStream.format("es_bulk")
-        .option("transport_dir", str(outdir))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    ids = [
-        json.loads(action)["index"]["_id"]
-        for req in outdir.glob("req-*.ndjson")
-        for action in req.read_text().strip().split("\n")[2::2]
-    ]
-    assert sorted(ids) == sorted(str(1000 + i) for i in range(15) if i != 7)
+
+    def run_until_drained() -> None:
+        stream = spark.readStream.format("oplog_sim").option("path", log_dir).load()
+        q = (
+            envelope(build_cdc_stream(stream, replica_depth=3))
+            .writeStream.format("es_bulk")
+            .option("transport_dir", str(outdir))
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def indexed_ids() -> list[str]:
+        return [
+            json.loads(action)["index"]["_id"]
+            for req in outdir.glob("req-*.ndjson")
+            for action in req.read_text().strip().split("\n")[2::2]
+        ]
+
+    run_until_drained()
+    expected = [str(1000 + i) for i in range(15) if i != 7]
+    assert sorted(indexed_ids()) == sorted(expected)
+
+    # second wave while the query is down, with its own sub-majority op
+    wave2 = OplogCase(n_ops=6, h_base=2000, ts_base=1_700_000_100, deliveries={3: (MEMBERS[1],)})
+    write_member_logs(op_rows(wave2), log_dir)
+    run_until_drained()
+    expected += [str(2000 + i) for i in range(6) if i != 3]
+    ids = indexed_ids()
+    assert sorted(ids) == sorted(expected)  # each exactly once across both runs
+    assert "1007" not in ids and "2003" not in ids
+    receipts = [json.loads(f.read_text()) for f in sorted(outdir.glob("commit-*.json"))]
+    batch_ids = [r["batch_id"] for r in receipts]
+    assert batch_ids == sorted(set(batch_ids))  # distinct and increasing
+    assert sum(r["n_docs"] for r in receipts) == len(ids)
 
 
 def test_member_name_roundtrip_hyphenated_host(spark, log_dir):
