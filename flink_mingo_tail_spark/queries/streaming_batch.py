@@ -10,7 +10,7 @@ with watermarks, late data, and checkpoint/resume.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.queries import query
@@ -556,6 +556,71 @@ def q221_novelty_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ING_BATCH_W = 100  # docs per simulated arrival batch (doc_id DIV 100)
 
 
+def _drive_curation_ingest(
+    spark: SparkSession,
+    d: DataFrame,
+    docs: DataFrame,
+    batch_of: Column,
+    *,
+    eval_embeddings: DataFrame | None = None,
+    **stage_opts,
+) -> DataFrame:
+    """Run streaming/curation_ingest's OWN foreachBatch body over
+    simulated arrival batches and return the committed verdicts.
+
+    ``d`` is the documents table (eval gram set and batch ids), ``docs``
+    the ingested rows (``d`` with any joined embedding / payload
+    column), and ``batch_of`` the doc_id expression naming each row's
+    arrival batch; batches run in ascending id order. With
+    ``eval_embeddings`` the static eval-side semantic index is built
+    first and wired as ``semantic_index_path``. ``stage_opts`` pass
+    through to ``make_curation_ingest_batch_fn``; an ``*_index_path``
+    value names a subdirectory of the scratch directory. The scratch
+    run is bounded (|corpus| rows collected) and deleted before
+    returning (the q204 policy)."""
+    import shutil
+    import tempfile
+
+    from flink_mingo_tail_spark.streaming.batch_commit import committed_batch_dirs
+    from flink_mingo_tail_spark.streaming.curation_ingest import (
+        build_eval_gram_set,
+        build_eval_semantic_index,
+        make_curation_ingest_batch_fn,
+    )
+
+    tmp = tempfile.mkdtemp(prefix="fmts-curation-ingest-")
+    try:
+        eval_grams_path = f"{tmp}/eval_grams"
+        build_eval_gram_set(d, eval_grams_path)
+        opts = {
+            k: f"{tmp}/{v}" if k.endswith("_index_path") else v
+            for k, v in stage_opts.items()
+        }
+        if eval_embeddings is not None:
+            opts["semantic_index_path"] = f"{tmp}/sem_index"
+            build_eval_semantic_index(eval_embeddings, opts["semantic_index_path"])
+        ingest = make_curation_ingest_batch_fn(
+            f"{tmp}/index", eval_grams_path, f"{tmp}/out", **opts
+        )
+        batch_ids = sorted(
+            r[0] for r in d.select(batch_of.alias("b")).distinct().collect()
+        )
+        for b in batch_ids:
+            ingest(docs.filter(batch_of == b), int(b))
+        rows = (
+            spark.read.schema("doc_id long, source string, n_toks long, reason string")
+            .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
+            .withColumn("ingest_batch", batch_of.cast("long"))
+            .collect()
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return spark.createDataFrame(
+        rows,
+        "doc_id long, source string, n_toks long, reason string, ingest_batch long",
+    ).orderBy("doc_id")
+
+
 def _curation_ingest_oracle() -> str:
     from flink_mingo_tail_spark.operators.dedup import sql_lsh_band_keys
     from flink_mingo_tail_spark.queries.dedup import (
@@ -675,46 +740,9 @@ def q234_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     proof). The scratch run here is bounded: |corpus|/{_ING_BATCH_W}
     batches, classification collected (|corpus| rows), scratch deleted
     before returning (the q204 policy)."""
-    import shutil
-    import tempfile
-
-    from flink_mingo_tail_spark.streaming.curation_ingest import (
-        build_eval_gram_set,
-        make_curation_ingest_batch_fn,
-    )
-
     prepare_session(spark)
     d = load_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="fmts-curation-ingest-q234-")
-    try:
-        eval_grams_path = f"{tmp}/eval_grams"
-        build_eval_gram_set(d, eval_grams_path)
-        ingest = make_curation_ingest_batch_fn(
-            f"{tmp}/index", eval_grams_path, f"{tmp}/out"
-        )
-        batch_ids = sorted(
-            r[0]
-            for r in d.select(
-                F.expr(f"doc_id DIV {_ING_BATCH_W}").alias("b")
-            ).distinct().collect()
-        )
-        for b in batch_ids:
-            ingest(d.filter(F.expr(f"doc_id DIV {_ING_BATCH_W}") == b), int(b))
-        rows = (
-            spark.read.schema("doc_id long, source string, n_toks long, reason string")
-            .option("basePath", f"{tmp}/out")
-            .parquet(*[f"{tmp}/out/ingest_batch={b}" for b in batch_ids])
-            .withColumn(
-                "ingest_batch", F.expr(f"doc_id DIV {_ING_BATCH_W}").cast("long")
-            )
-            .collect()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, source string, n_toks long, reason string, ingest_batch long",
-    ).orderBy("doc_id")
+    return _drive_curation_ingest(spark, d, d, F.expr(f"doc_id DIV {_ING_BATCH_W}"))
 
 
 # ---------------------------------------------------------------------------
@@ -845,15 +873,6 @@ def q241_semantic_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFr
     the embedding modality finally probes standing state instead of
     re-deriving it (round-11 verdict "What's missing #1"). Scratch
     bounded and deleted before returning (q204/q234 policy)."""
-    import shutil
-    import tempfile
-
-    from flink_mingo_tail_spark.streaming.curation_ingest import (
-        build_eval_gram_set,
-        build_eval_semantic_index,
-        make_curation_ingest_batch_fn,
-    )
-
     prepare_session(spark)
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -863,41 +882,9 @@ def q241_semantic_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("embedding").cast("array<double>").alias("embedding"),
     )
     docs = d.join(e, d.doc_id == e.vec_id, "left").drop("vec_id")
-    tmp = tempfile.mkdtemp(prefix="fmts-curation-ingest-q241-")
-    try:
-        eval_grams_path = f"{tmp}/eval_grams"
-        sem_index_path = f"{tmp}/sem_index"
-        build_eval_gram_set(d, eval_grams_path)
-        build_eval_semantic_index(e, sem_index_path)
-        ingest = make_curation_ingest_batch_fn(
-            f"{tmp}/index",
-            eval_grams_path,
-            f"{tmp}/out",
-            semantic_index_path=sem_index_path,
-        )
-        batch_ids = sorted(
-            r[0]
-            for r in d.select(
-                F.expr(f"doc_id DIV {_ING_BATCH_W}").alias("b")
-            ).distinct().collect()
-        )
-        for b in batch_ids:
-            ingest(docs.filter(F.expr(f"doc_id DIV {_ING_BATCH_W}") == b), int(b))
-        rows = (
-            spark.read.schema("doc_id long, source string, n_toks long, reason string")
-            .option("basePath", f"{tmp}/out")
-            .parquet(*[f"{tmp}/out/ingest_batch={b}" for b in batch_ids])
-            .withColumn(
-                "ingest_batch", F.expr(f"doc_id DIV {_ING_BATCH_W}").cast("long")
-            )
-            .collect()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, source string, n_toks long, reason string, ingest_batch long",
-    ).orderBy("doc_id")
+    return _drive_curation_ingest(
+        spark, d, docs, F.expr(f"doc_id DIV {_ING_BATCH_W}"), eval_embeddings=e
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1054,15 +1041,8 @@ def q248_perceptual_streaming_curation(spark: SparkSession, sf_dir: str) -> Data
     standing state instead of re-deriving candidates per batch
     (round-12 verdict "What's missing #1"). Scratch bounded and
     deleted before returning (q204/q234 policy)."""
-    import shutil
-    import tempfile
-
     from flink_mingo_tail_spark.operators.multimodal import (
         synthesize_media_variants,
-    )
-    from flink_mingo_tail_spark.streaming.curation_ingest import (
-        build_eval_gram_set,
-        make_curation_ingest_batch_fn,
     )
 
     prepare_session(spark)
@@ -1071,35 +1051,13 @@ def q248_perceptual_streaming_curation(spark: SparkSession, sf_dir: str) -> Data
         F.col("media_id").alias("doc_id"), "payload"
     )
     docs = d.join(media, "doc_id")
-    tmp = tempfile.mkdtemp(prefix="fmts-curation-ingest-q248-")
-    try:
-        eval_grams_path = f"{tmp}/eval_grams"
-        build_eval_gram_set(d, eval_grams_path)
-        ingest = make_curation_ingest_batch_fn(
-            f"{tmp}/index",
-            eval_grams_path,
-            f"{tmp}/out",
-            perceptual_index_path=f"{tmp}/ph_index",
-        )
-        batch_ids = list(range(_PH_ING_BATCHES))
-        for b in batch_ids:
-            ingest(docs.filter(F.col("doc_id") % _PH_ING_BATCHES == b), b)
-        rows = (
-            spark.read.schema("doc_id long, source string, n_toks long, reason string")
-            .option("basePath", f"{tmp}/out")
-            .parquet(*[f"{tmp}/out/ingest_batch={b}" for b in batch_ids])
-            .withColumn(
-                "ingest_batch",
-                F.pmod(F.col("doc_id"), F.lit(_PH_ING_BATCHES)).cast("long"),
-            )
-            .collect()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, source string, n_toks long, reason string, ingest_batch long",
-    ).orderBy("doc_id")
+    return _drive_curation_ingest(
+        spark,
+        d,
+        docs,
+        F.pmod(F.col("doc_id"), F.lit(_PH_ING_BATCHES)),
+        perceptual_index_path="ph_index",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1291,16 +1249,8 @@ def q246_full_curation_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each with its bounded side broadcast), and three bounded appends
     — no stage re-reads the corpus. Scratch bounded + deleted (q204
     policy)."""
-    import shutil
-    import tempfile
-
     from flink_mingo_tail_spark.operators.multimodal import (
         synthesize_media_variants,
-    )
-    from flink_mingo_tail_spark.streaming.curation_ingest import (
-        build_eval_gram_set,
-        build_eval_semantic_index,
-        make_curation_ingest_batch_fn,
     )
 
     prepare_session(spark)
@@ -1313,39 +1263,15 @@ def q246_full_curation_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("media_id").alias("doc_id"), "payload"
     )
     docs = d.join(e, d.doc_id == e.vec_id, "left").drop("vec_id").join(media, "doc_id")
-    tmp = tempfile.mkdtemp(prefix="fmts-curation-ingest-q246-")
-    try:
-        eval_grams_path = f"{tmp}/eval_grams"
-        sem_index_path = f"{tmp}/sem_index"
-        build_eval_gram_set(d, eval_grams_path)
-        build_eval_semantic_index(e, sem_index_path)
-        ingest = make_curation_ingest_batch_fn(
-            f"{tmp}/index",
-            eval_grams_path,
-            f"{tmp}/out",
-            semantic_index_path=sem_index_path,
-            semantic_dup_index_path=f"{tmp}/semdup_index",
-            perceptual_index_path=f"{tmp}/ph_index",
-        )
-        batch_ids = list(range(_PH_ING_BATCHES))
-        for b in batch_ids:
-            ingest(docs.filter(F.col("doc_id") % _PH_ING_BATCHES == b), b)
-        rows = (
-            spark.read.schema("doc_id long, source string, n_toks long, reason string")
-            .option("basePath", f"{tmp}/out")
-            .parquet(*[f"{tmp}/out/ingest_batch={b}" for b in batch_ids])
-            .withColumn(
-                "ingest_batch",
-                F.pmod(F.col("doc_id"), F.lit(_PH_ING_BATCHES)).cast("long"),
-            )
-            .collect()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, source string, n_toks long, reason string, ingest_batch long",
-    ).orderBy("doc_id")
+    return _drive_curation_ingest(
+        spark,
+        d,
+        docs,
+        F.pmod(F.col("doc_id"), F.lit(_PH_ING_BATCHES)),
+        eval_embeddings=e,
+        semantic_dup_index_path="semdup_index",
+        perceptual_index_path="ph_index",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1490,47 +1416,13 @@ def q260_span_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     islands window; the index grows by appends, never re-scanned.
     Ref parity: SURVEY §2A A6/A7 standing-state discipline; no
     reference twin."""
-    import shutil
-    import tempfile
-
-    from flink_mingo_tail_spark.streaming.curation_ingest import (
-        build_eval_gram_set,
-        make_curation_ingest_batch_fn,
-    )
-
     prepare_session(spark)
     d = load_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="fmts-span-ingest-q260-")
-    try:
-        eval_grams_path = f"{tmp}/eval_grams"
-        build_eval_gram_set(d, eval_grams_path)
-        ingest = make_curation_ingest_batch_fn(
-            f"{tmp}/index",
-            eval_grams_path,
-            f"{tmp}/out",
-            span_index_path=f"{tmp}/span_index",
-            span_dup_frac=_SPAN_DUP_FRAC,
-        )
-        batch_ids = sorted(
-            r[0]
-            for r in d.select(
-                F.expr(f"doc_id DIV {_ING_BATCH_W}").alias("b")
-            ).distinct().collect()
-        )
-        for b in batch_ids:
-            ingest(d.filter(F.expr(f"doc_id DIV {_ING_BATCH_W}") == b), int(b))
-        rows = (
-            spark.read.schema("doc_id long, source string, n_toks long, reason string")
-            .option("basePath", f"{tmp}/out")
-            .parquet(*[f"{tmp}/out/ingest_batch={b}" for b in batch_ids])
-            .withColumn(
-                "ingest_batch", F.expr(f"doc_id DIV {_ING_BATCH_W}").cast("long")
-            )
-            .collect()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, source string, n_toks long, reason string, ingest_batch long",
-    ).orderBy("doc_id")
+    return _drive_curation_ingest(
+        spark,
+        d,
+        d,
+        F.expr(f"doc_id DIV {_ING_BATCH_W}"),
+        span_index_path="span_index",
+        span_dup_frac=_SPAN_DUP_FRAC,
+    )

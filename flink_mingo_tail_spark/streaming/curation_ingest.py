@@ -81,12 +81,15 @@ re-derived at batch start from the COMMITTED classification outputs
 (reason in ('kept', 'over_budget') — the prefix counts every doc that
 reached the budget stage, exactly q226's cum_before semantics). One
 source of truth; a crashed attempt's partial output directory is never
-read because only directories bearing _SUCCESS are summed.
+read because only committed directories are summed
+(``batch_commit.committed_batch_dirs``).
 
-Restart semantics (the dedup_ingest contract): classification commits
-FIRST (atomic per-batch directory overwrite + _SUCCESS), the index
-append runs LAST; a replayed batch whose output already committed
-short-circuits to re-running only the idempotent append.
+Restart semantics (the dedup_ingest contract, one path under the
+``batch_commit`` protocol): the schema gate and the Bloom backfill run
+first, the classification is computed and committed only if the
+batch's output directory is not yet committed (``commit_batch_once``),
+and the idempotent index appends and the compaction check run LAST, on
+first run and replay alike.
 
 Reference parity: the reference engine's streaming surface is the CDC
 quorum path (MongoDBOplogSource.java); this module is north-star
@@ -132,6 +135,11 @@ from flink_mingo_tail_spark.operators.semantic_index import (
     compact_semantic_index,
     probe_semantic_index,
 )
+from flink_mingo_tail_spark.streaming.batch_commit import (
+    commit_batch_once,
+    committed_batch_dirs,
+    path_exists,
+)
 
 DEFAULT_EVAL_MOD = 100   # doc_id % 100 == 0 is the held-out slice (q226's knob)
 DEFAULT_BUDGET = 300     # per-source token budget (q226's knob)
@@ -141,38 +149,10 @@ _GRAM_N = 4              # decontamination gram width (q75b/q226)
 _OUT_SCHEMA = "doc_id long, source string, n_toks long, reason string"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jpath, fs = _hadoop_fs(spark, path)
-    return bool(fs.exists(jpath))
-
-
-def committed_batch_dirs(spark: SparkSession, output_path: str) -> dict[int, str]:
-    """{batch_id: dir} for every ingest_batch=* directory bearing a
-    _SUCCESS marker. A crashed attempt's partial directory has no
-    marker and is never read."""
-    jpath, fs = _hadoop_fs(spark, output_path)
-    if not fs.exists(jpath):
-        return {}
-    out: dict[int, str] = {}
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith("ingest_batch=")):
-            continue
-        full = str(status.getPath().toString())
-        if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(f"{full}/_SUCCESS")):  # noqa: SLF001
-            out[int(name.split("=", 1)[1])] = full
-    return out
-
-
 def _manifest_or_none(spark: SparkSession, index_path: str):
     """Manifest dict, or None before bootstrap — existence-checked first
     so the pre-bootstrap probe doesn't log a JVM FileNotFound stack."""
-    if not _path_exists(spark, f"{index_path}/manifest"):
+    if not path_exists(spark, f"{index_path}/manifest"):
         return None
     return _read_index_manifest(spark, index_path)
 
@@ -190,7 +170,7 @@ def estimated_dup_ratio(spark: SparkSession, table_path: str) -> float:
     for an index whose churn all sits in other shards; an unsharded
     table is likewise measured whole (ADVICE r13). Returns 1.0 for a
     missing/empty table (nothing to compact)."""
-    if not _path_exists(spark, table_path):
+    if not path_exists(spark, table_path):
         return 1.0
     try:
         df = spark.read.parquet(table_path)
@@ -350,7 +330,7 @@ def classify_batch(
         .join(probed, "doc_id", "left")
         .join(cont_ids.withColumn("__ct", F.lit(True)), "doc_id", "left")
     )
-    if span_index_path is not None and _path_exists(
+    if span_index_path is not None and path_exists(
         spark, f"{span_index_path}/manifest"
     ):
         # BOILERPLATE stage (round 14): quality passers whose standing-
@@ -385,7 +365,7 @@ def classify_batch(
         if needs_emb
         else None
     )
-    if needs_payload and _path_exists(spark, f"{perceptual_index_path}/manifest"):
+    if needs_payload and path_exists(spark, f"{perceptual_index_path}/manifest"):
         pd_ids = (
             probe_perceptual_index(
                 dhash_arrow(
@@ -404,7 +384,7 @@ def classify_batch(
     else:
         # stage off, or bootstrap (no index yet) — nothing is a dup
         flagged = flagged.withColumn("__pd", F.lit(None).cast("boolean"))
-    if semantic_dup_index_path is not None and _path_exists(
+    if semantic_dup_index_path is not None and path_exists(
         spark, f"{semantic_dup_index_path}/manifest"
     ):
         sd_ids = (
@@ -508,7 +488,7 @@ def prior_budget_totals(
     """(source, prior_toks) summed over committed batch outputs — every
     doc that reached the budget stage (kept OR over_budget) counts,
     q226's cum_before semantics."""
-    dirs = committed_batch_dirs(spark, output_path)
+    dirs = committed_batch_dirs(spark, output_path, "ingest_batch=")
     paths = [p for b, p in dirs.items() if before_batch is None or b < before_batch]
     if not paths:
         return spark.createDataFrame([], "source string, prior_toks long")
@@ -554,9 +534,9 @@ def make_curation_ingest_batch_fn(
     content table when its fill ratio drifts past the design load
     (maybe_rewiden_bloom_index — q254's trigger, checked each batch on
     the kilobyte frame). A crash between the content append and the
-    bloom append converges through the committed-batch replay path the
-    other indexes use (the appends are idempotent: DISTINCT rows /
-    bitwise OR). Classification is invariant to the knob (no Bloom
+    bloom append converges when the replayed batch redoes its appends,
+    as for the other indexes (the appends are idempotent: DISTINCT
+    rows / bitwise OR). Classification is invariant to the knob (no Bloom
     false negatives — parity-pinned in tests/test_dedup_index.py).
 
     ``sem_dup_n_bits`` is the growing semantic-dup index's bucket width
@@ -597,14 +577,13 @@ def make_curation_ingest_batch_fn(
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_dir = f"{output_path}/ingest_batch={batch_id}"
-        # Schema gate BEFORE the replay short-circuit: the replay path
-        # skips classify_batch (whose readable ValueError covers the
-        # first run), but append_quality_passers still references the
+        # Schema gate up front: a replay of a committed batch skips
+        # classify_batch (whose readable ValueError covers the first
+        # run), but append_quality_passers still references the
         # embedding/payload columns when the matching index is wired —
-        # a schema drift must fail with the same readable error on BOTH
-        # paths, not as a raw AnalysisException mid-replay (ADVICE
-        # round 12).
+        # a schema drift must fail with the same readable error either
+        # way, not as a raw AnalysisException mid-replay (ADVICE round
+        # 12).
         needs_emb = (
             semantic_index_path is not None or semantic_dup_index_path is not None
         )
@@ -640,7 +619,7 @@ def make_curation_ingest_batch_fn(
                 # batch's hashes, then the kilobyte fill check decides
                 # whether the width drifted past its design load
                 bpath = f"{index_path}/bloom"
-                if not _path_exists(spark, f"{bpath}/manifest"):
+                if not path_exists(spark, f"{bpath}/manifest"):
                     build_bloom_index(
                         spark.read.parquet(f"{index_path}/content").select("ch"),
                         bpath,
@@ -664,7 +643,7 @@ def make_curation_ingest_batch_fn(
                 # every quality passer's window keys, appended AFTER the
                 # batch's classification commits (membership-monotone,
                 # replay-idempotent — the family rule)
-                sboot = not _path_exists(spark, f"{span_index_path}/manifest")
+                sboot = not path_exists(spark, f"{span_index_path}/manifest")
                 build_span_index(
                     passers,
                     span_index_path,
@@ -683,7 +662,7 @@ def make_curation_ingest_batch_fn(
                     F.col("doc_id").alias("media_id"), "payload"
                 )
                 if with_payload.limit(1).count() > 0:
-                    pboot = not _path_exists(
+                    pboot = not path_exists(
                         spark, f"{perceptual_index_path}/manifest"
                     )
                     build_perceptual_index(
@@ -695,14 +674,14 @@ def make_curation_ingest_batch_fn(
                 return
             # the growing semantic-dup index admits the same population:
             # every quality passer with an embedding, appended AFTER the
-            # batch's classification commits (membership-monotone, so the
-            # replay path can redo it blindly — q242's loop, in place)
+            # batch's classification commits (membership-monotone, so a
+            # replay can redo it blindly — q242's loop, in place)
             emb = passers.filter(F.col("embedding").isNotNull()).select(
                 "doc_id", F.col("embedding")
             )
             if emb.limit(1).count() == 0:
                 return
-            boot = not _path_exists(spark, f"{semantic_dup_index_path}/manifest")
+            boot = not path_exists(spark, f"{semantic_dup_index_path}/manifest")
             build_semantic_index(
                 emb,
                 semantic_dup_index_path,
@@ -732,7 +711,7 @@ def make_curation_ingest_batch_fn(
             # instead of waiting for a ratio that a near-empty recreated
             # table will never trip (round-13 review)
             parked = any(
-                _path_exists(spark, f"{base}/{tbl}.compact.{sib}")
+                path_exists(spark, f"{base}/{tbl}.compact.{sib}")
                 for base, tbls in (
                     (index_path, ("content", "bands")),
                     (semantic_dup_index_path, ("buckets", "vectors")),
@@ -749,29 +728,23 @@ def make_curation_ingest_batch_fn(
             ):
                 return
             compact_dedup_index(spark, index_path)
-            if semantic_dup_index_path is not None and _path_exists(
+            if semantic_dup_index_path is not None and path_exists(
                 spark, f"{semantic_dup_index_path}/manifest"
             ):
                 compact_semantic_index(spark, semantic_dup_index_path)
-            if perceptual_index_path is not None and _path_exists(
+            if perceptual_index_path is not None and path_exists(
                 spark, f"{perceptual_index_path}/manifest"
             ):
                 compact_perceptual_index(spark, perceptual_index_path)
-            if span_index_path is not None and _path_exists(
+            if span_index_path is not None and path_exists(
                 spark, f"{span_index_path}/manifest"
             ):
                 compact_span_index(spark, span_index_path)
 
-        if _path_exists(spark, f"{batch_dir}/_SUCCESS"):
-            # replay of a committed batch: the saved verdicts are
-            # authoritative; only the (idempotent) index append is redone
-            append_quality_passers()
-            maybe_compact()
-            return
         if (
             bloom_prefilter
             and _manifest_or_none(spark, index_path) is not None
-            and not _path_exists(spark, f"{index_path}/bloom/manifest")
+            and not path_exists(spark, f"{index_path}/bloom/manifest")
         ):
             # knob enabled on an index that predates the Bloom sibling:
             # backfill from the content table BEFORE the first probe
@@ -781,77 +754,27 @@ def make_curation_ingest_batch_fn(
                 key_col="ch",
                 mode="overwrite",
             )
-        eval_grams = spark.read.parquet(eval_grams_path)
-        prior = prior_budget_totals(spark, output_path, before_batch=batch_id)
-        verdict = classify_batch(
-            batch_df,
-            index_path,
-            eval_grams,
-            prior,
-            budget=budget,
-            eval_mod=eval_mod,
-            semantic_index_path=semantic_index_path,
-            sem_tau=sem_tau,
-            semantic_dup_index_path=semantic_dup_index_path,
-            sem_dup_tau=sem_dup_tau,
-            perceptual_index_path=perceptual_index_path,
-            bloom_prefilter=bloom_prefilter,
-            span_index_path=span_index_path,
-            span_dup_frac=span_dup_frac,
-        )
-        verdict.write.mode("overwrite").parquet(batch_dir)
-        append_quality_passers()
-        maybe_compact()
-
-    return ingest
-
-
-def start_curation_ingest_stream(
-    docs_stream: DataFrame,
-    index_path: str,
-    eval_grams_path: str,
-    output_path: str,
-    checkpoint_dir: str,
-    *,
-    budget: int = DEFAULT_BUDGET,
-    eval_mod: int = DEFAULT_EVAL_MOD,
-    semantic_index_path: str | None = None,
-    sem_tau: float = DEFAULT_SEM_TAU,
-    semantic_dup_index_path: str | None = None,
-    sem_dup_tau: float = DEFAULT_SEM_DUP_TAU,
-    sem_dup_n_bits: int | None = 6,
-    perceptual_index_path: str | None = None,
-    auto_compact_ratio: float | None = None,
-    bloom_prefilter: bool = False,
-    span_index_path: str | None = None,
-    span_dup_frac: float = 0.5,
-    trigger_available_now: bool = True,
-):
-    """Wire the ingest body into a checkpointed foreachBatch stream
-    (dedup_ingest's scheduled-run shape)."""
-    writer = (
-        docs_stream.writeStream.foreachBatch(
-            make_curation_ingest_batch_fn(
+        commit_batch_once(
+            spark,
+            f"{output_path}/ingest_batch={batch_id}",
+            lambda: classify_batch(
+                batch_df,
                 index_path,
-                eval_grams_path,
-                output_path,
+                spark.read.parquet(eval_grams_path),
+                prior_budget_totals(spark, output_path, before_batch=batch_id),
                 budget=budget,
                 eval_mod=eval_mod,
                 semantic_index_path=semantic_index_path,
                 sem_tau=sem_tau,
                 semantic_dup_index_path=semantic_dup_index_path,
                 sem_dup_tau=sem_dup_tau,
-                sem_dup_n_bits=sem_dup_n_bits,
                 perceptual_index_path=perceptual_index_path,
-                auto_compact_ratio=auto_compact_ratio,
                 bloom_prefilter=bloom_prefilter,
                 span_index_path=span_index_path,
                 span_dup_frac=span_dup_frac,
-            )
+            ),
         )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        append_quality_passers()
+        maybe_compact()
+
+    return ingest

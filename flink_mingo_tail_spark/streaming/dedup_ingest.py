@@ -14,28 +14,25 @@ Restart semantics (the part a naive foreachBatch gets wrong): Spark
 re-runs the last uncommitted batch after a crash, and by then the
 crashed attempt may ALREADY have appended the batch's own documents to
 the index — a replayed classification would then see them and flip
-every 'new' to 'exact_dup'. The batch function therefore:
-
-1. short-circuits if the batch's output directory is already committed
-   (``_SUCCESS`` marker): the saved classification is authoritative,
-   and only the index append is redone — append is idempotent by
-   design (membership-only probes; duplicate index rows cost bytes,
-   never correctness);
-2. otherwise classifies FIRST, commits the classification (atomic
-   per-batch directory overwrite), and appends LAST.
+every 'new' to 'exact_dup'. The batch function therefore runs one path
+under the ``batch_commit`` protocol: classify and commit the
+classification only if the batch's output directory is not yet
+committed (``commit_batch_once``), then admit the 'new' documents of
+the COMMITTED statuses to the index, last.
 
 Every crash window replays to the same classification: before the
 output commit the index is untouched (append is last), and after it
 the saved statuses are reused instead of reclassifying. Output is
 exactly-once per batch id; the index append is at-least-once but
-idempotent.
+idempotent (membership-only probes; duplicate index rows cost bytes,
+never correctness).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.operators.dedup import (
@@ -43,14 +40,7 @@ from flink_mingo_tail_spark.operators.dedup import (
     build_dedup_index,
     probe_dedup_index,
 )
-
-
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-scheme-agnostic existence check (local/HDFS/object
-    store) via the JVM Hadoop FS — no driver-side open()."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    return bool(fs.exists(jpath))
+from flink_mingo_tail_spark.streaming.batch_commit import commit_batch_once
 
 
 def make_dedup_ingest_batch_fn(
@@ -76,27 +66,13 @@ def make_dedup_ingest_batch_fn(
                 f"{index_path!r} (build_dedup_index mode='overwrite' first)"
             )
         batch_dir = f"{output_path}/ingest_batch={batch_id}"
-        if _hadoop_path_exists(spark, f"{batch_dir}/_SUCCESS"):
-            # Replay of a batch whose classification already committed:
-            # the index may contain this batch's admissions, so do NOT
-            # reclassify — re-admit from the saved statuses (idempotent)
-            # and return.
-            saved = spark.read.parquet(batch_dir)
-            admitted = batch_df.join(
-                saved.filter(F.col("status") == "new").select(id_col),
-                id_col,
-                "left_semi",
-            )
-            if admitted.limit(1).count() > 0:
-                build_dedup_index(
-                    admitted, index_path, text_col=text_col, mode="append", **manifest
-                )
-            return
-        classified = probe_dedup_index(
-            batch_df, index_path, id_col=id_col, text_col=text_col
+        commit_batch_once(
+            spark,
+            batch_dir,
+            lambda: probe_dedup_index(
+                batch_df, index_path, id_col=id_col, text_col=text_col
+            ),
         )
-        # Atomic per-batch commit: directory overwrite + _SUCCESS marker.
-        classified.write.mode("overwrite").parquet(batch_dir)
         admitted = batch_df.join(
             # read the committed statuses back rather than recomputing, so
             # the admission set provably matches what the output recorded
@@ -112,35 +88,3 @@ def make_dedup_ingest_batch_fn(
             )
 
     return ingest
-
-
-def start_dedup_ingest_stream(
-    docs_stream: DataFrame,
-    index_path: str,
-    output_path: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    trigger_available_now: bool = True,
-):
-    """Wire the ingest body into a checkpointed foreachBatch stream.
-
-    ``docs_stream`` is any streaming DataFrame with (id_col, text_col).
-    Returns the started StreamingQuery; with ``trigger_available_now``
-    the query drains what is available and stops (the scheduled-run
-    shape — one invocation per ingest window, resume from the
-    checkpoint).
-    """
-    writer = (
-        docs_stream.writeStream.foreachBatch(
-            make_dedup_ingest_batch_fn(
-                index_path, output_path, id_col=id_col, text_col=text_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -14,14 +14,11 @@ results (pinned by test_novelty_ingest).
 Restart semantics follow streaming/dedup_ingest.py: Spark replays the
 last uncommitted batch after a crash, and the crashed attempt may have
 already appended this batch's shingles to the index — rescoring then
-would flip every novel shingle to seen. The batch function therefore:
-
-1. short-circuits when the batch's output directory is committed
-   (``_SUCCESS``): the saved scores are authoritative, and only the
-   index append is redone;
-2. otherwise scores FIRST (anti-join against the index as of batch
-   start), commits the scores (atomic per-batch directory overwrite),
-   and appends LAST.
+would flip every novel shingle to seen. The batch function therefore
+runs one path under the ``batch_commit`` protocol: score (anti-join
+against the index as of batch start) and commit the scores only if the
+batch's output directory is not yet committed (``commit_batch_once``),
+then append to the index, last.
 
 The index append adds the batch's WHOLE distinct shingle set (novel or
 not): membership-only semantics make duplicate rows a byte cost, never
@@ -44,14 +41,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.operators.dedup import md5_long, tokens, word_shingles
+from flink_mingo_tail_spark.streaming.batch_commit import commit_batch_once, path_exists
 
 DEFAULT_SHINGLE_K = 5  # q209's granularity
-
-
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    return bool(fs.exists(jpath))
 
 
 def doc_shingle_hashes(
@@ -100,7 +92,7 @@ def build_novelty_index(
 
 
 def read_novelty_manifest(spark: SparkSession, index_path: str) -> int | None:
-    if not _hadoop_path_exists(spark, f"{index_path}/manifest/_SUCCESS"):
+    if not path_exists(spark, f"{index_path}/manifest/_SUCCESS"):
         return None
     return int(spark.read.parquet(f"{index_path}/manifest").first()["k"])
 
@@ -156,46 +148,23 @@ def make_novelty_batch_fn(
                 f"novelty ingest requires a manifest-bearing index at "
                 f"{index_path!r} (build_novelty_index mode='overwrite' first)"
             )
-        batch_dir = f"{output_path}/novelty_batch={batch_id}"
-        batch_hashes = (
-            doc_shingle_hashes(batch_df, k, id_col, text_col).select("h").distinct()
+        commit_batch_once(
+            spark,
+            f"{output_path}/novelty_batch={batch_id}",
+            lambda: score_batch_novelty(
+                batch_df,
+                spark.read.parquet(f"{index_path}/shingles"),
+                k,
+                id_col=id_col,
+                text_col=text_col,
+            ),
         )
-        if _hadoop_path_exists(spark, f"{batch_dir}/_SUCCESS"):
-            # replay of a committed batch: scores are authoritative;
-            # only redo the (idempotent, membership-only) index append
-            batch_hashes.write.mode("append").parquet(f"{index_path}/shingles")
-            return
-        index_shingles = spark.read.parquet(f"{index_path}/shingles")
-        scored = score_batch_novelty(
-            batch_df, index_shingles, k, id_col=id_col, text_col=text_col
+        (
+            doc_shingle_hashes(batch_df, k, id_col, text_col)
+            .select("h")
+            .distinct()
+            .write.mode("append")
+            .parquet(f"{index_path}/shingles")
         )
-        scored.write.mode("overwrite").parquet(batch_dir)
-        batch_hashes.write.mode("append").parquet(f"{index_path}/shingles")
 
     return ingest
-
-
-def start_novelty_ingest_stream(
-    docs_stream: DataFrame,
-    index_path: str,
-    output_path: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    trigger_available_now: bool = True,
-):
-    """Wire the scoring body into a checkpointed foreachBatch stream
-    (AvailableNow by default — the scheduled-ingest shape)."""
-    writer = (
-        docs_stream.writeStream.foreachBatch(
-            make_novelty_batch_fn(
-                index_path, output_path, id_col=id_col, text_col=text_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

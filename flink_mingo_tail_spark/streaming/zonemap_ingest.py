@@ -10,14 +10,15 @@ ONLY its new files and appends them to the zone-map table. This is the
 manifest-maintenance loop of a lakehouse table format (Iceberg/Delta
 append snapshots), expressed with plain Structured Streaming.
 
-Correctness under replay (the dedup_ingest lesson): Spark re-runs the
-last uncommitted micro-batch after a crash, so the batch append must be
-idempotent. Each batch writes to its OWN ``batch_id=N`` subdirectory
-with an atomic per-directory overwrite and a short-circuit on the
-``_SUCCESS`` marker — a replayed batch either finds its directory
-committed (no-op) or rewrites it in place; file stats are pure
-functions of immutable input files, so a rewrite is bit-identical.
-``read_zone_map`` unions the batch directories back into one frame.
+Correctness under replay (the ``batch_commit`` protocol): Spark re-runs
+the last uncommitted micro-batch after a crash, so the batch append
+must be idempotent. Each batch writes to its OWN ``batch_id=N``
+subdirectory through ``commit_batch_once`` — a replayed batch either
+finds its directory committed (no-op) or rewrites it in place; file
+stats are pure functions of immutable input files, so a rewrite is
+bit-identical. ``read_zone_map`` unions the committed batch
+directories back into one frame; a crashed attempt's unmarked
+directory is never read.
 
 A file's rows never straddle micro-batches (the file source's unit of
 admission is whole files), so per-file stats computed inside one batch
@@ -31,7 +32,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from flink_mingo_tail_spark.streaming.dedup_ingest import _hadoop_path_exists
+from flink_mingo_tail_spark.streaming.batch_commit import (
+    commit_batch_once,
+    committed_batch_dirs,
+    start_batch_stream,
+)
 
 
 def make_zonemap_batch_fn(zonemap_path: str, cols: list[str]):
@@ -39,10 +44,6 @@ def make_zonemap_batch_fn(zonemap_path: str, cols: list[str]):
     appended under ``zonemap_path/batch_id=N`` idempotently."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out_dir = f"{zonemap_path}/batch_id={batch_id}"
-        if _hadoop_path_exists(spark, out_dir + "/_SUCCESS"):
-            return  # replayed batch: stats are already committed
         aggs = [F.count(F.lit(1)).alias("n_rows")]
         for c in cols:
             aggs.append(F.min(c).alias(f"{c}_min"))
@@ -52,7 +53,9 @@ def make_zonemap_batch_fn(zonemap_path: str, cols: list[str]):
             .groupBy("file")
             .agg(*aggs)
         )
-        stats.write.mode("overwrite").parquet(out_dir)
+        commit_batch_once(
+            batch_df.sparkSession, f"{zonemap_path}/batch_id={batch_id}", lambda: stats
+        )
 
     return fn
 
@@ -74,15 +77,15 @@ def start_zonemap_ingest(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(data_path).select("*", "_metadata")
-    return (
-        stream.writeStream.foreachBatch(make_zonemap_batch_fn(zonemap_path, cols))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_batch_stream(
+        stream, make_zonemap_batch_fn(zonemap_path, cols), checkpoint
     )
 
 
 def read_zone_map(spark: SparkSession, zonemap_path: str) -> DataFrame:
     """The maintained zone map as one frame (same schema as
-    ``operators.zonemap.zone_map``); compose with ``skip_stats``."""
-    return spark.read.parquet(zonemap_path).drop("batch_id")
+    ``operators.zonemap.zone_map``), read from committed batches only;
+    compose with ``skip_stats``."""
+    return spark.read.parquet(
+        *committed_batch_dirs(spark, zonemap_path, "batch_id=").values()
+    )

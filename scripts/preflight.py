@@ -7,7 +7,8 @@ the mechanical gate: it runs, in order,
 
   1. the per-table schema pins (fixture drift fails here first, with a
      readable message);
-  2. the full pytest suite at the default test SF;
+  2. the full pytest suite at the default test SF, reporting its 20
+     slowest tests (the tier-1 time budget);
   3. the complete oracle-parity + output-contract rehearsal at sf0.01 —
      exactly what the driver's CORRECTNESS pass hashes;
   4. the benchmark's smoke test (perfbench/test_smoke.py): a tiny
@@ -43,7 +44,10 @@ def run(name: str, cmd: list[str], env: dict | None = None) -> None:
 def main() -> None:
     fast = "--fast" in sys.argv
     run("schema pins", [sys.executable, "-m", "pytest", "tests/test_tables.py", "-q"])
-    run("full suite", [sys.executable, "-m", "pytest", "tests/", "-q"])
+    run(
+        "full suite",
+        [sys.executable, "-m", "pytest", "tests/", "-q", "--durations=20"],
+    )
     if not fast:
         run(
             "sf0.01 driver rehearsal",

@@ -22,6 +22,19 @@ from decimal import Decimal
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import types as T
+
+# Output types whose pandas export is engine-dependent or unhashable; the
+# driver canonicalizes both result frames in pandas before hashing:
+# * arrays/maps/structs — object columns of ndarray/list/dict; the
+#   driver's ``sort_values`` canonicalizer crashes on them (round-1 q26b:
+#   "unhashable type: 'list'");
+# * DATE — exports as midnight-Timestamp from one engine and ``date``
+#   object from the other;
+# * DecimalType — exports as ``decimal.Decimal`` objects (round-1 q09: a
+#   bare ``100.0`` literal in Spark SQL is a decimal and poisoned the
+#   division's dtype).
+_BANNED = (T.ArrayType, T.MapType, T.StructType, T.DateType, T.DecimalType)
 
 
 def _canon_value(v) -> str:
@@ -103,7 +116,21 @@ def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str)
         raise AssertionError(f"{name}: value mismatch; first diffs (spark, oracle): {diffs}")
 
 
-def run_compare(spark, duck, qdef, sf_dir: str) -> None:
-    sdf = qdef.fn(spark, sf_dir).toPandas()
+def check_output_schema(schema: T.StructType, name: str) -> None:
+    """The driver contract on a query's Spark output schema (_BANNED)."""
+    for field in schema.fields:
+        assert not isinstance(field.dataType, _BANNED), (
+            f"{name}.{field.name} is {field.dataType.simpleString()} — banned by the "
+            f"driver contract (array/map/struct/date/decimal outputs break or "
+            f"engine-skew the pandas canonicalizer); format/join/cast it instead"
+        )
+
+
+def run_compare(spark, duck, qdef, sf_dir: str) -> T.StructType:
+    """Check the output schema, then compare with the oracle; returns the
+    checked schema."""
+    sdf = qdef.fn(spark, sf_dir)
+    check_output_schema(sdf.schema, qdef.name)
     odf = duck.execute(qdef.oracle).fetchdf()
-    compare_frames(sdf, odf, qdef.name)
+    compare_frames(sdf.toPandas(), odf, qdef.name)
+    return sdf.schema

@@ -10,11 +10,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.operators.dedup import _read_index_manifest
+from flink_mingo_tail_spark.streaming.batch_commit import (
+    committed_batch_dirs,
+    start_batch_stream,
+)
 from flink_mingo_tail_spark.streaming.curation_ingest import (
     build_eval_gram_set,
-    committed_batch_dirs,
     make_curation_ingest_batch_fn,
-    start_curation_ingest_stream,
 )
 from flink_mingo_tail_spark.tables import load_table
 
@@ -50,7 +52,7 @@ def _drive(spark, tmp, batches, *, replay_batch=None):
         for r in spark.read.schema(
             "doc_id long, source string, n_toks long, reason string"
         )
-        .parquet(*committed_batch_dirs(spark, f"{tmp}/out").values())
+        .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
         .collect()
     }
 
@@ -109,8 +111,10 @@ def test_streaming_wiring_matches_direct_batch_drive(spark, tmp_path):
         .option("latestFirst", "false")
         .parquet(f"{src}/b*")
     )
-    q = start_curation_ingest_stream(
-        stream, f"{tmp}/index", eval_path, f"{tmp}/out", f"{tmp}/ckpt"
+    q = start_batch_stream(
+        stream,
+        make_curation_ingest_batch_fn(f"{tmp}/index", eval_path, f"{tmp}/out"),
+        f"{tmp}/ckpt",
     )
     q.awaitTermination(180)
     got = {
@@ -118,7 +122,7 @@ def test_streaming_wiring_matches_direct_batch_drive(spark, tmp_path):
         for r in spark.read.schema(
             "doc_id long, source string, n_toks long, reason string"
         )
-        .parquet(*committed_batch_dirs(spark, f"{tmp}/out").values())
+        .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
         .collect()
     }
     # micro-batch boundaries may differ from the DIV-100 split, and the
@@ -142,7 +146,7 @@ def test_budget_accumulates_across_batches(spark, tmp_path):
         ingest(df, b)
     rows = (
         spark.read.schema("doc_id long, source string, n_toks long, reason string")
-        .parquet(*committed_batch_dirs(spark, f"{tmp}/out").values())
+        .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
         .collect()
     )
     by_batch_src = {}
@@ -203,7 +207,7 @@ def test_semantic_stage_flags_match_q224_and_requires_embeddings(spark, tmp_path
         for r in spark.read.schema(
             "doc_id long, source string, n_toks long, reason string"
         )
-        .parquet(*committed_batch_dirs(spark, f"{tmp}/out").values())
+        .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
         .collect()
     }
     assert "contaminated_semantic" in set(got.values())
@@ -302,7 +306,7 @@ def test_auto_compaction_cadence_fires_and_preserves_classification(spark, tmp_p
             for r in spark.read.schema(
                 "doc_id long, source string, n_toks long, reason string"
             )
-            .parquet(*committed_batch_dirs(spark, f"{tmp}/out").values())
+            .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
             .collect()
         }
 
@@ -397,7 +401,7 @@ def test_perceptual_dup_stage_grows_with_batches_and_subsets_q247(spark, tmp_pat
         for r in spark.read.schema(
             "doc_id long, source string, n_toks long, reason string"
         )
-        .parquet(*committed_batch_dirs(spark, f"{tmp}/out").values())
+        .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
         .collect()
     }
     pdup = {i for i, reason in got.items() if reason == "perceptual_dup"}
@@ -448,7 +452,7 @@ def test_semantic_dup_stage_grows_with_batches_and_subsets_q242(spark, tmp_path)
         for r in spark.read.schema(
             "doc_id long, source string, n_toks long, reason string"
         )
-        .parquet(*committed_batch_dirs(spark, f"{tmp}/out").values())
+        .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
         .collect()
     }
     sd = {i for i, reason in got.items() if reason == "semantic_dup"}
@@ -525,7 +529,7 @@ def test_bloom_prefilter_knob_is_classification_invariant(spark, tmp_path):
             for r in spark.read.schema(
                 "doc_id long, source string, n_toks long, reason string"
             )
-            .parquet(*committed_batch_dirs(spark, f"{tmp}/out").values())
+            .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
             .collect()
         }
 
@@ -574,7 +578,7 @@ def test_span_boilerplate_stage_flags_planted_doc(spark, tmp_path):
         for r in spark.read.schema(
             "doc_id long, source string, n_toks long, reason string"
         )
-        .parquet(*committed_batch_dirs(spark, f"{tmp_path}/out").values())
+        .parquet(*committed_batch_dirs(spark, f"{tmp_path}/out", "ingest_batch=").values())
         .collect()
     }
     assert got[23] == "boilerplate"

@@ -9,10 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.operators.dedup import build_dedup_index, probe_dedup_index
-from flink_mingo_tail_spark.streaming.dedup_ingest import (
-    make_dedup_ingest_batch_fn,
-    start_dedup_ingest_stream,
-)
+from flink_mingo_tail_spark.streaming.batch_commit import start_batch_stream
+from flink_mingo_tail_spark.streaming.dedup_ingest import make_dedup_ingest_batch_fn
 from flink_mingo_tail_spark.tables import load_table
 
 from .conftest import SF_SMOKE
@@ -43,7 +41,7 @@ def _run_available(spark, src_dir, idx, out, ckpt):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    q = start_dedup_ingest_stream(stream, idx, out, ckpt)
+    q = start_batch_stream(stream, make_dedup_ingest_batch_fn(idx, out), ckpt)
     q.awaitTermination(120)
 
 

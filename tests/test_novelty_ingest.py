@@ -6,12 +6,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from flink_mingo_tail_spark.streaming.batch_commit import start_batch_stream
 from flink_mingo_tail_spark.streaming.novelty_ingest import (
     build_novelty_index,
     make_novelty_batch_fn,
     read_novelty_manifest,
     score_batch_novelty,
-    start_novelty_ingest_stream,
 )
 from flink_mingo_tail_spark.tables import load_table
 
@@ -147,7 +147,7 @@ def test_streaming_end_to_end_available_now(spark, tmp_path):
     build_novelty_index(d.filter(F.col("doc_id") % 2 == 0), idx, k=5, mode="overwrite")
     d.filter(F.col("doc_id") % 2 == 1).limit(20).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(DOCS_DDL).parquet(src)
-    q = start_novelty_ingest_stream(stream, idx, out, ckpt)
+    q = start_batch_stream(stream, make_novelty_batch_fn(idx, out), ckpt)
     try:
         q.awaitTermination(120)
     finally:

@@ -15,8 +15,10 @@ ROWS_ONLY = sorted(name for name, q in REGISTRY.items() if q.oracle is None)
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_oracle_parity(spark, duck, name):
-    run_compare(spark, duck, REGISTRY[name], SF_ORACLE)
+def test_oracle_parity(spark, duck, output_schemas, name):
+    output_schemas[name, SF_ORACLE] = run_compare(
+        spark, duck, REGISTRY[name], SF_ORACLE
+    )
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
