@@ -21,6 +21,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_mingo_tail_spark.operators.standing_index import (
+    _swap_rewrite,
+    _swap_rewrite_distinct,
+    require_manifest,
+    resolve_params,
+    write_manifest,
+)
+
 
 def md5_long(col: Column) -> Column:
     """60-bit deterministic hash: bigint from the first 15 hex digits of
@@ -202,46 +210,7 @@ def _index_shard(key: Column, n_shards: int) -> Column:
 
 
 _MANIFEST_SCHEMA = "k int, rows_per_band int, n_shards int"
-
-
-def _read_index_manifest(spark, path: str, schema: str = _MANIFEST_SCHEMA) -> dict | None:
-    """Load the persisted index parameters, or None for a pre-manifest
-    index. Stored as a one-row parquet table so the read/write path is
-    filesystem-scheme-agnostic (local, HDFS, object store) — no
-    driver-side open() that would break off-box. ``schema`` lets the
-    sibling index families (operators/semantic_index.py) reuse the
-    path-missing/IO-error discrimination with their own parameter set."""
-    try:
-        row = spark.read.schema(schema).parquet(f"{path}/manifest").head()
-    except Exception as exc:  # narrow below: only "path missing" means pre-manifest
-        # ADVICE round 6: a transient IO/permission error must NOT be
-        # read as "pre-manifest index" — that would let caller-supplied
-        # parameters override the real manifest (the exact misrouting
-        # the manifest exists to prevent). Only the path-not-found
-        # family maps to None.
-        msg = str(exc)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "FileNotFoundException" in msg
-            or "No such file or directory" in msg
-        ):
-            return None
-        raise
-    if row is None:
-        return None
-    params = row.asDict()
-    # Family cross-read guard: reading a manifest with the WRONG index
-    # family's schema (dedup vs semantic) yields NULLs for the columns
-    # the other family doesn't write — fail here, at the gate that
-    # exists for exactly this purpose, instead of mid-maintenance with
-    # a path-not-found or a TypeError downstream (round-12 review).
-    if any(v is None for v in params.values()):
-        raise ValueError(
-            f"manifest at {path!r} does not match the expected schema "
-            f"({schema!r}) — wrong index family?"
-        )
-    return params
+_DEDUP_DEFAULTS = {"k": 8, "rows_per_band": 4, "n_shards": 16}
 
 
 def build_dedup_index(
@@ -249,9 +218,9 @@ def build_dedup_index(
     path: str,
     *,
     text_col: str = "text",
-    k: int = 8,
-    rows_per_band: int = 4,
-    n_shards: int = 16,
+    k: int | None = None,
+    rows_per_band: int | None = None,
+    n_shards: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Materialize the standing dedup index that q117 derives in-query:
@@ -269,33 +238,26 @@ def build_dedup_index(
     join a co-partitionable prefix key; both sides compute it from the
     key itself, so it is never guessed.
 
-    A one-row ``{path}/manifest`` parquet records (k, rows_per_band,
-    n_shards). ``mode='append'`` refuses to extend an index built with
-    different parameters (silently mixing shardings would misroute
-    probe joins and misclassify everything as 'new'), and
-    ``probe_dedup_index`` reads its parameters from the manifest rather
-    than trusting caller-supplied defaults. Appended batches may
-    re-insert hashes/bands already present from earlier batches; the
-    probe side is membership-only (left-semi joins), so cross-batch
-    duplicates cost index bytes, never correctness — compact with an
-    occasional overwrite rebuild if the index churns heavily.
+    A one-row ``{path}/manifest`` records (k, rows_per_band, n_shards);
+    ``overwrite`` fills unset parameters with 8 / 4 / 16. ``append``
+    follows the standing-index rule (operators/standing_index.
+    resolve_params): unset parameters come from the manifest, and an
+    explicit value that contradicts it is refused — silently mixing
+    shardings would misroute probe joins and misclassify everything as
+    'new'. Appended batches may re-insert hashes/bands already present
+    from earlier batches; the probe side is membership-only (left-semi
+    joins), so cross-batch duplicates cost index bytes, never
+    correctness — compact with ``compact_dedup_index``.
     """
-    params = {"k": k, "rows_per_band": rows_per_band, "n_shards": n_shards}
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
     spark = docs.sparkSession
-    if mode == "append":
-        existing = _read_index_manifest(spark, path)
-        if existing is None:
-            raise ValueError(
-                f"cannot append to {path!r}: no manifest found "
-                "(build with mode='overwrite' first)"
-            )
-        if existing != params:
-            raise ValueError(
-                f"index at {path!r} was built with {existing}, "
-                f"refusing to append with {params}"
-            )
+    params = resolve_params(
+        spark, path, _MANIFEST_SCHEMA, "dedup", mode,
+        {"k": k, "rows_per_band": rows_per_band, "n_shards": n_shards},
+        _DEDUP_DEFAULTS,
+    )
+    k, rows_per_band, n_shards = (
+        params["k"], params["rows_per_band"], params["n_shards"]
+    )
     content = (
         docs.select(F.md5(F.col(text_col)).alias("ch"))
         .distinct()
@@ -317,9 +279,7 @@ def build_dedup_index(
     )
     bands.write.mode(mode).partitionBy("shard").parquet(f"{path}/bands")
     if mode == "overwrite":
-        spark.createDataFrame(
-            [(k, rows_per_band, n_shards)], _MANIFEST_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/manifest")
+        write_manifest(spark, path, _MANIFEST_SCHEMA, params)
 
 
 def probe_dedup_index(
@@ -328,9 +288,6 @@ def probe_dedup_index(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int | None = None,
-    rows_per_band: int | None = None,
-    n_shards: int | None = None,
     bloom_prefilter: str | bool | None = None,
 ) -> DataFrame:
     """Classify each incoming document against a persisted index
@@ -342,12 +299,9 @@ def probe_dedup_index(
     hive layout and a selective probe set lets dynamic partition
     pruning skip index directories outright.
 
-    Probe parameters come from the index's own manifest — a k /
-    rows_per_band / n_shards mismatch between build and probe silently
-    classifies every document as 'new', so callers may only NARROW the
-    defaults, never contradict the manifest (explicit arguments are
-    validated against it; for a pre-manifest index all three must be
-    supplied explicitly).
+    Probe parameters (k, rows_per_band, n_shards) come from the index's
+    own manifest — a mismatch between build and probe would silently
+    classify every document as 'new' — so there is nothing to pass.
 
     ``bloom_prefilter`` wires the two-tier membership shape q252's
     docstring names: the batch's distinct content hashes first test
@@ -364,25 +318,10 @@ def probe_dedup_index(
     body does; a stale Bloom missing recent keys would misclassify
     their duplicates as 'new'). The near-dup band probe is unaffected."""
     spark = incoming.sparkSession
-    manifest = _read_index_manifest(spark, path)
-    supplied = {"k": k, "rows_per_band": rows_per_band, "n_shards": n_shards}
-    if manifest is None:
-        missing = [name for name, val in supplied.items() if val is None]
-        if missing:
-            raise ValueError(
-                f"index at {path!r} has no manifest; pass {missing} explicitly "
-                "(or rebuild the index to persist one)"
-            )
-    else:
-        for name, val in supplied.items():
-            if val is not None and val != manifest[name]:
-                raise ValueError(
-                    f"probe {name}={val} contradicts the index manifest "
-                    f"{manifest} at {path!r}"
-                )
-        k, rows_per_band, n_shards = (
-            manifest["k"], manifest["rows_per_band"], manifest["n_shards"]
-        )
+    manifest = require_manifest(spark, path, _MANIFEST_SCHEMA, "dedup")
+    k, rows_per_band, n_shards = (
+        manifest["k"], manifest["rows_per_band"], manifest["n_shards"]
+    )
     content = spark.read.parquet(f"{path}/content")
     bands_idx = spark.read.parquet(f"{path}/bands")
 
@@ -543,7 +482,7 @@ def build_bloom_index(
     *,
     key_col: str,
     m_bits: int | None = None,
-    k: int = BLOOM_K,
+    k: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Persist (or ``mode='append'`` OR-merge into) a standing Bloom
@@ -558,27 +497,16 @@ def build_bloom_index(
     past the width's design load — re-widening is a rebuild, detected
     by comparing the manifest width to bloom_m_bits(current members).
     ``m_bits=None`` auto-sizes from the build frame's count
-    (bloom_m_bits); appends inherit the manifest width and refuse an
-    explicit mismatch. Probe parameters always come from the manifest
-    (the standing-index family rule)."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
+    (bloom_m_bits) and ``k=None`` means BLOOM_K; appends inherit both
+    from the manifest and refuse an explicit mismatch. Probe parameters
+    always come from the manifest (operators/standing_index)."""
     spark = keys.sparkSession
+    params = resolve_params(
+        spark, path, _BLOOM_MANIFEST_SCHEMA, "bloom", mode,
+        {"m_bits": m_bits, "k": k}, {"k": BLOOM_K},
+    )
     if mode == "append":
-        existing = _read_index_manifest(spark, path, _BLOOM_MANIFEST_SCHEMA)
-        if existing is None:
-            raise ValueError(
-                f"cannot append to {path!r}: no manifest found "
-                "(build with mode='overwrite' first)"
-            )
-        if m_bits is None:
-            m_bits = existing["m_bits"]
-        if {"m_bits": m_bits, "k": k} != existing:
-            raise ValueError(
-                f"bloom index at {path!r} was built with {existing}, "
-                f"refusing to append with {{'m_bits': {m_bits}, 'k': {k}}}"
-            )
-        new_bits = bloom_bits(keys, key_col, m_bits, k)
+        new_bits = bloom_bits(keys, key_col, params["m_bits"], params["k"])
         _swap_rewrite(
             spark,
             f"{path}/bits",
@@ -588,14 +516,12 @@ def build_bloom_index(
             None,
         )
         return
-    if m_bits is None:
-        m_bits = bloom_m_bits(keys.count())
-    bloom_bits(keys, key_col, m_bits, k).write.mode("overwrite").parquet(
-        f"{path}/bits"
-    )
-    spark.createDataFrame([(m_bits, k)], _BLOOM_MANIFEST_SCHEMA).coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/manifest")
+    if params["m_bits"] is None:
+        params["m_bits"] = bloom_m_bits(keys.count())
+    bloom_bits(keys, key_col, params["m_bits"], params["k"]).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/bits")
+    write_manifest(spark, path, _BLOOM_MANIFEST_SCHEMA, params)
 
 
 def probe_bloom_index(
@@ -608,9 +534,7 @@ def probe_bloom_index(
     survivors confirm against the exact standing index
     (probe_dedup_index) when precision matters."""
     spark = probes.sparkSession
-    manifest = _read_index_manifest(spark, path, _BLOOM_MANIFEST_SCHEMA)
-    if manifest is None:
-        raise ValueError(f"no bloom index manifest at {path!r}")
+    manifest = require_manifest(spark, path, _BLOOM_MANIFEST_SCHEMA, "bloom")
     return bloom_probe(
         probes,
         spark.read.parquet(f"{path}/bits"),
@@ -639,9 +563,7 @@ def maybe_rewiden_bloom_index(
     confirm cost. The check is O(m/32) rows — trivial per batch; the
     rebuild is one pass over ``keys`` (the one-way-ness trade
     build_bloom_index documents). Returns True iff rebuilt."""
-    manifest = _read_index_manifest(spark, path, _BLOOM_MANIFEST_SCHEMA)
-    if manifest is None:
-        raise ValueError(f"no bloom index manifest at {path!r}")
+    manifest = require_manifest(spark, path, _BLOOM_MANIFEST_SCHEMA, "bloom")
     n_set = (
         spark.read.parquet(f"{path}/bits")
         .agg(F.sum(F.expr("bit_count(bits)")).alias("n"))
@@ -659,133 +581,6 @@ def maybe_rewiden_bloom_index(
 # Standing-index compaction (round 12)
 # ---------------------------------------------------------------------------
 
-def _swap_rewrite(
-    spark, path: str, transform, partition_col: str | None
-) -> tuple[int, int]:
-    """Rewrite a standing-index table as ``transform(current_rows)``
-    via a tmp-sibling swap — Spark cannot overwrite a parquet directory
-    it is reading. ``transform`` is a pure DataFrame→DataFrame function
-    (DISTINCT for compaction; a union + bit_or re-aggregate for the
-    Bloom OR-merge) that must be IDEMPOTENT UNDER ROW DUPLICATION —
-    transform(df ∪ df') == transform(df) whenever df' ⊆ df — which
-    every membership/OR-monotone index table satisfies. That property
-    is what makes the protocol below loss-free at EVERY crash point.
-
-    Protocol (round-14, replacing the round-13 delete-before-rename-in
-    window ADVICE flagged): RECONCILE parked siblings first, then a
-    clean swap whose only deletes happen after rename-in.
-
-    1. Entry restore: if ``path`` is missing, rename back the newest
-       parked canonical — ``{path}.compact.aside`` (pre-swap copy from
-       a crash between the two renames), else the legacy
-       ``{path}.compact.old``, else a COMPLETE ``{path}.compact.tmp``
-       (``_SUCCESS`` present).
-    2. Reconcile-by-append: for each surviving sibling (aside, legacy
-       old, complete tmp), APPEND its rows into ``path`` and only then
-       delete it. A crash between append and delete re-appends on the
-       next run — duplicate rows, which the transform collapses — and
-       a crash mid-append leaves the sibling intact (parquet job
-       commit), so no interleaving of crashes and concurrent ingest
-       appends can lose membership: a sibling is never removed until
-       its rows are durably IN ``path``. This subsumes the round-13
-       union-at-read fix and closes its residual window (the merged
-       rewrite living only in scratch tmp while the parked copy was
-       already deleted).
-    3. Swap: write transform(path) → ``.compact.tmp``, rename
-       ``path`` → ``.compact.aside``, rename tmp → ``path``, delete
-       aside. Each FS boolean is asserted; the rename-in failure
-       handler restores aside → path and reports the TRUE table state
-       if even the restore fails.
-
-    On non-atomic filesystems a probe racing the swap can still observe
-    a brief missing-directory window between the two renames — run
-    compaction in a maintenance window; verdicts are identical on
-    either side because both tables hold the same key SET. Returns
-    (rows_before, rows_after); rows_before counts the RECONCILED
-    pre-transform table (including any recovery re-appends)."""
-    jvm = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    jvm_path = jvm(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    aside_str = f"{path}.compact.aside"
-    old_str = f"{path}.compact.old"
-    tmp = f"{path}.compact.tmp"
-    aside, old, jvm_tmp = jvm(aside_str), jvm(old_str), jvm(tmp)
-
-    def _tmp_complete() -> bool:
-        return fs.exists(jvm_tmp) and fs.exists(jvm(f"{tmp}/_SUCCESS"))
-
-    def _append_into_path(src: str) -> None:
-        writer = spark.read.parquet(src).write.mode("append")
-        if partition_col is not None:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(path)
-
-    if not fs.exists(jvm_path):
-        # prior run crashed between rename-aside and rename-in: the
-        # canonical table is parked — restore the newest copy before
-        # reading (otherwise re-running fails at spark.read forever)
-        for parked in (aside, old):
-            if fs.exists(parked):
-                if not fs.rename(parked, jvm_path):
-                    raise IOError(
-                        f"compaction: could not restore {path} from {parked}"
-                    )
-                break
-        else:
-            if _tmp_complete():
-                if not fs.rename(jvm_tmp, jvm_path):
-                    raise IOError(f"compaction: could not restore {path} from {tmp}")
-            else:
-                raise IOError(
-                    f"compaction: {path} is missing and no {aside_str}, "
-                    f"{old_str}, or complete {tmp} exists to recover from"
-                )
-    # reconcile surviving siblings into path (append, THEN delete — a
-    # sibling is never removed until its rows are durably in path)
-    for sib_jvm, sib_str in ((aside, aside_str), (old, old_str)):
-        if fs.exists(sib_jvm):
-            _append_into_path(sib_str)
-            if not fs.delete(sib_jvm, True):
-                raise IOError(f"compaction: could not clear reconciled {sib_str}")
-    if _tmp_complete():
-        # a complete rewrite left in scratch by a crash before its
-        # rename-in: its rows may be the only copy of membership that
-        # was reconciled from a since-deleted sibling — fold it in too
-        _append_into_path(tmp)
-    if fs.exists(jvm_tmp) and not fs.delete(jvm_tmp, True):
-        raise IOError(f"compaction: could not clear stale {tmp}")
-
-    before_df = spark.read.parquet(path)
-    rows_before = before_df.count()
-    compacted = transform(before_df)
-    writer = compacted.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(tmp)
-    if not fs.rename(jvm_path, aside):
-        raise IOError(f"compaction: rename-aside failed for {path}")
-    if not fs.rename(jvm_tmp, jvm_path):
-        # restore the original before surfacing the error — and report
-        # the TRUE table state if even the restore fails
-        if fs.rename(aside, jvm_path):
-            raise IOError(f"compaction: rename-in failed for {path}; original restored")
-        raise IOError(
-            f"compaction: rename-in failed for {path} AND the restore rename "
-            f"failed — table is parked at {aside_str} (re-run to recover)"
-        )
-    if not fs.delete(aside, True):
-        raise IOError(f"compaction: could not delete {aside_str}")
-    return rows_before, spark.read.parquet(path).count()
-
-
-def _swap_rewrite_distinct(
-    spark, path: str, partition_col: str | None
-) -> tuple[int, int]:
-    """Compaction's transform: rewrite as the DISTINCT row set (the
-    membership-only append contract's churn remover)."""
-    return _swap_rewrite(spark, path, lambda df: df.distinct(), partition_col)
-
-
 def compact_dedup_index(spark, path: str) -> dict[str, tuple[int, int]]:
     """Compact a churned standing dedup index in place: appended batches
     may re-insert content hashes / band keys already present (the
@@ -795,9 +590,8 @@ def compact_dedup_index(spark, path: str) -> dict[str, tuple[int, int]]:
     untouched. Returns {table: (rows_before, rows_after)}. Probe
     verdicts are IDENTICAL before and after (left-semi membership is
     set-based — pinned by tests/test_index_compaction.py); run it in a
-    maintenance window — see _swap_rewrite_distinct's race note."""
-    if _read_index_manifest(spark, path) is None:
-        raise ValueError(f"no dedup index manifest at {path!r}")
+    maintenance window — see _swap_rewrite's race note."""
+    require_manifest(spark, path, _MANIFEST_SCHEMA, "dedup")
     return {
         "content": _swap_rewrite_distinct(spark, f"{path}/content", "shard"),
         "bands": _swap_rewrite_distinct(spark, f"{path}/bands", "shard"),
@@ -927,8 +721,8 @@ def build_span_index(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    span_l: int = DEFAULT_SPAN_L,
-    n_shards: int = 16,
+    span_l: int | None = None,
+    n_shards: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Persist the standing SPAN index: ``{path}/windows`` — the
@@ -943,37 +737,28 @@ def build_span_index(
     Membership-only append contract (the family rule): appended
     batches may re-insert keys already present — bytes, never
     correctness; compact with compact_span_index. A one-row manifest
-    pins (span_l, n_shards); appends refuse a mismatch (a span_l drift
-    would silently mark every batch window novel)."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
-    params = {"span_l": span_l, "span_n_shards": n_shards}
+    pins (span_l, n_shards), DEFAULT_SPAN_L / 16 when unset; appends
+    follow the standing-index rule (operators/standing_index.
+    resolve_params): unset values come from the manifest and a mismatch
+    is refused (a span_l drift would silently mark every batch window
+    novel)."""
     spark = docs.sparkSession
-    if mode == "append":
-        existing = _read_index_manifest(spark, path, _SPAN_MANIFEST_SCHEMA)
-        if existing is None:
-            raise ValueError(
-                f"cannot append to {path!r}: no manifest found "
-                "(build with mode='overwrite' first)"
-            )
-        if existing != params:
-            raise ValueError(
-                f"span index at {path!r} was built with {existing}, "
-                f"refusing to append with {params}"
-            )
+    params = resolve_params(
+        spark, path, _SPAN_MANIFEST_SCHEMA, "span", mode,
+        {"span_l": span_l, "span_n_shards": n_shards},
+        {"span_l": DEFAULT_SPAN_L, "span_n_shards": 16},
+    )
     (
-        _span_windows(docs, id_col=id_col, text_col=text_col, span_l=span_l)
+        _span_windows(docs, id_col=id_col, text_col=text_col, span_l=params["span_l"])
         .select("h")
         .distinct()
-        .withColumn("shard", _index_shard(F.col("h"), n_shards))
+        .withColumn("shard", _index_shard(F.col("h"), params["span_n_shards"]))
         .write.mode(mode)
         .partitionBy("shard")
         .parquet(f"{path}/windows")
     )
     if mode == "overwrite":
-        spark.createDataFrame(
-            [(span_l, n_shards)], _SPAN_MANIFEST_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/manifest")
+        write_manifest(spark, path, _SPAN_MANIFEST_SCHEMA, params)
 
 
 def probe_span_index(
@@ -992,9 +777,7 @@ def probe_span_index(
     contract against persisted state. Returns (id_col, span_start,
     span_end); span parameters always come from the manifest."""
     spark = incoming.sparkSession
-    manifest = _read_index_manifest(spark, path, _SPAN_MANIFEST_SCHEMA)
-    if manifest is None:
-        raise ValueError(f"no span index manifest at {path!r}")
+    manifest = require_manifest(spark, path, _SPAN_MANIFEST_SCHEMA, "span")
     span_l, n_shards = manifest["span_l"], manifest["span_n_shards"]
     w = _span_windows(
         incoming, id_col=id_col, text_col=text_col, span_l=span_l
@@ -1008,8 +791,7 @@ def compact_span_index(spark, path: str) -> dict[str, tuple[int, int]]:
     """Distinct-rewrite of a churned span index (the q244 swap — see
     _swap_rewrite's crash contract); probe verdicts are invariant
     (membership is set-based)."""
-    if _read_index_manifest(spark, path, _SPAN_MANIFEST_SCHEMA) is None:
-        raise ValueError(f"no span index manifest at {path!r}")
+    require_manifest(spark, path, _SPAN_MANIFEST_SCHEMA, "span")
     return {"windows": _swap_rewrite_distinct(spark, f"{path}/windows", "shard")}
 
 
@@ -1022,8 +804,7 @@ def audit_span_index(spark, path: str) -> DataFrame:
     discipline broke (e.g. a non-hash key column was sharded on) and
     the probe semi-join's partition pruning would hot-spot. Returns
     (shard, n_keys, share_milli) ordered by shard."""
-    if _read_index_manifest(spark, path, _SPAN_MANIFEST_SCHEMA) is None:
-        raise ValueError(f"no span index manifest at {path!r}")
+    require_manifest(spark, path, _SPAN_MANIFEST_SCHEMA, "span")
     occ = (
         spark.read.parquet(f"{path}/windows")
         .groupBy("shard")

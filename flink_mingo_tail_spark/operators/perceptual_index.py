@@ -18,8 +18,8 @@ Layout under ``{path}/``, mirroring the sibling index families:
   popcount IS the verdict.
 * ``manifest`` — one row (n_bands, band_bits, ham, n_shards). Probe
   parameters are read from here, never trusted from the caller (the
-  dedup-index ADVICE-round-6 rule: a silently mismatched banding or
-  sharding classifies everything as 'new').
+  rule of operators/standing_index.py: a silently mismatched banding
+  or sharding classifies everything as 'new').
 
 Completeness contract: build refuses ``ham >= n_bands``. With
 ``ham < n_bands``, two fingerprints at Hamming distance <= ham differ
@@ -49,10 +49,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_mingo_tail_spark.operators.dedup import (
-    _read_index_manifest,
+from flink_mingo_tail_spark.operators.dedup import md5_long
+from flink_mingo_tail_spark.operators.standing_index import (
     _swap_rewrite_distinct,
-    md5_long,
+    require_manifest,
+    resolve_params,
+    write_manifest,
 )
 
 _PH_MANIFEST_SCHEMA = "n_bands int, band_bits int, ham int, n_shards int"
@@ -65,6 +67,12 @@ _PH_MANIFEST_SCHEMA = "n_bands int, band_bits int, ham int, n_shards int"
 DEFAULT_N_BANDS = 4
 DEFAULT_BAND_BITS = 8
 DEFAULT_PH_HAM = 3
+_PH_DEFAULTS = {
+    "n_bands": DEFAULT_N_BANDS,
+    "band_bits": DEFAULT_BAND_BITS,
+    "ham": DEFAULT_PH_HAM,
+    "n_shards": 16,
+}
 
 
 def _band_shard(band, bits, n_shards: int):
@@ -92,56 +100,44 @@ def build_perceptual_index(
     *,
     id_col: str = "media_id",
     fp_col: str = "ph",
-    n_bands: int = DEFAULT_N_BANDS,
-    band_bits: int = DEFAULT_BAND_BITS,
-    ham: int = DEFAULT_PH_HAM,
-    n_shards: int = 16,
+    n_bands: int | None = None,
+    band_bits: int | None = None,
+    ham: int | None = None,
+    n_shards: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Materialize (or ``mode='append'``-extend) the perceptual index
     from a fingerprint frame (``operators/multimodal.dhash_arrow``'s
     output shape — hashing stays in the Arrow operator; the index never
     touches payload bytes, so the 100 TB blob column never shuffles
-    here).
+    here). Unset parameters default to the canonical banding
+    (DEFAULT_N_BANDS, DEFAULT_BAND_BITS, DEFAULT_PH_HAM) and 16 shards.
 
     Refuses ``ham >= n_bands`` (the pigeonhole completeness contract —
-    module docstring) and, on ``append``, any manifest drift: mixing
-    bandings in one table would silently halve Hamming coverage on some
-    rows."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
+    module docstring) and, on ``append``, any manifest drift (the
+    standing-index rule, operators/standing_index.resolve_params):
+    mixing bandings in one table would silently halve Hamming coverage
+    on some rows."""
+    spark = fingerprints.sparkSession
+    params = resolve_params(
+        spark, path, _PH_MANIFEST_SCHEMA, "perceptual", mode,
+        {"n_bands": n_bands, "band_bits": band_bits, "ham": ham, "n_shards": n_shards},
+        _PH_DEFAULTS,
+    )
+    n_bands, ham = params["n_bands"], params["ham"]
     if ham >= n_bands:
         raise ValueError(
             f"ham={ham} >= n_bands={n_bands}: pigeonhole completeness needs "
             "more disjoint bands than tolerated bit flips (module docstring)"
         )
-    spark = fingerprints.sparkSession
-    params = {
-        "n_bands": n_bands,
-        "band_bits": band_bits,
-        "ham": ham,
-        "n_shards": n_shards,
-    }
-    if mode == "append":
-        existing = _read_index_manifest(spark, path, _PH_MANIFEST_SCHEMA)
-        if existing is None:
-            raise ValueError(
-                f"cannot append to {path!r}: no manifest found "
-                "(build with mode='overwrite' first)"
-            )
-        if existing != params:
-            raise ValueError(
-                f"perceptual index at {path!r} was built with {existing}, "
-                f"refusing to append with {params}"
-            )
-    rows = _banded(fingerprints, id_col, fp_col, n_bands, band_bits).withColumn(
-        "shard", _band_shard(F.col("band"), F.col("bits"), n_shards)
+    rows = _banded(
+        fingerprints, id_col, fp_col, n_bands, params["band_bits"]
+    ).withColumn(
+        "shard", _band_shard(F.col("band"), F.col("bits"), params["n_shards"])
     )
     rows.write.mode(mode).partitionBy("shard").parquet(f"{path}/bands")
     if mode == "overwrite":
-        spark.createDataFrame(
-            [tuple(params.values())], _PH_MANIFEST_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/manifest")
+        write_manifest(spark, path, _PH_MANIFEST_SCHEMA, params)
 
 
 def probe_perceptual_index(
@@ -167,9 +163,7 @@ def probe_perceptual_index(
             f"broadcast_side must be auto|none|index|probe, got {broadcast_side!r}"
         )
     spark = probes.sparkSession
-    manifest = _read_index_manifest(spark, path, _PH_MANIFEST_SCHEMA)
-    if manifest is None:
-        raise ValueError(f"no perceptual index manifest at {path!r}")
+    manifest = require_manifest(spark, path, _PH_MANIFEST_SCHEMA, "perceptual")
     n_shards, ham = manifest["n_shards"], manifest["ham"]
 
     probe_rows = (
@@ -207,8 +201,7 @@ def compact_perceptual_index(spark, path: str) -> dict[str, tuple[int, int]]:
     {table: (rows_before, rows_after)}. Probe verdicts are identical
     before and after (the probe's DISTINCT dedups candidates); run it
     in a maintenance window (_swap_rewrite_distinct's race note)."""
-    if _read_index_manifest(spark, path, _PH_MANIFEST_SCHEMA) is None:
-        raise ValueError(f"no perceptual index manifest at {path!r}")
+    require_manifest(spark, path, _PH_MANIFEST_SCHEMA, "perceptual")
     return {"bands": _swap_rewrite_distinct(spark, f"{path}/bands", "shard")}
 
 
@@ -218,8 +211,7 @@ def audit_perceptual_index(spark, path: str) -> DataFrame:
     count, max/mean occupancy (milli grid) and Σn² (the candidate-pair
     mass the band equi-join would materialize). The a-posteriori check
     on the band-width choice, runnable between ingest batches."""
-    if _read_index_manifest(spark, path, _PH_MANIFEST_SCHEMA) is None:
-        raise ValueError(f"no perceptual index manifest at {path!r}")
+    require_manifest(spark, path, _PH_MANIFEST_SCHEMA, "perceptual")
     occ = (
         spark.read.parquet(f"{path}/bands")
         .groupBy("band", "bits")

@@ -17,7 +17,7 @@ Layout under ``{path}/``, mirroring the dedup index:
   collision IS the near-dup verdict);
 * ``manifest`` — one row (n_tables, n_bits, seed, dim, expanded,
   n_shards). Probe parameters are read from here, never trusted from
-  the caller (operators/dedup.py's ADVICE-round-6 rule: a silently
+  the caller (operators/standing_index.py's rule: a silently
   mismatched sharding or plane seed classifies everything as 'new').
 
 Hamming-1 multi-probe lives on exactly ONE side of the bucket join —
@@ -54,11 +54,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_mingo_tail_spark.operators.dedup import (
-    _read_index_manifest,
-    _swap_rewrite_distinct,
-    md5_long,
-)
+from flink_mingo_tail_spark.operators.dedup import md5_long
 from flink_mingo_tail_spark.operators.similarity import (
     auto_n_bits,
     dot,
@@ -66,6 +62,12 @@ from flink_mingo_tail_spark.operators.similarity import (
     l2_norm,
     lsh_keys,
     lsh_probe_keys,
+)
+from flink_mingo_tail_spark.operators.standing_index import (
+    _swap_rewrite_distinct,
+    require_manifest,
+    resolve_params,
+    write_manifest,
 )
 
 _SEM_MANIFEST_SCHEMA = (
@@ -78,6 +80,9 @@ _SEM_MANIFEST_SCHEMA = (
 # instead of a bare literal silently coupled to the default
 # (ADVICE round 12).
 DEFAULT_N_TABLES = 8
+_SEM_DEFAULTS = {
+    "n_tables": DEFAULT_N_TABLES, "seed": 42, "dim": 64, "expanded": False, "n_shards": 16
+}
 
 # Canonical semantic-hit threshold (rounded cosine >= tau vs ANY indexed
 # vector). queries/similarity.py's _SEM_TAU aliases this — one spelling
@@ -116,22 +121,26 @@ def build_semantic_index(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_tables: int = DEFAULT_N_TABLES,
+    n_tables: int | None = None,
     n_bits: int | None = 6,
-    seed: int = 42,
-    dim: int = 64,
-    expanded: bool = False,
-    n_shards: int = 16,
+    seed: int | None = None,
+    dim: int | None = None,
+    expanded: bool | None = None,
+    n_shards: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Materialize (or ``mode='append'``-extend) the semantic index.
 
     ``expanded=True`` fans the Hamming-1 probe variants out at build
     time (static bounded index — q224's eval side); ``expanded=False``
-    stores plain keys (growing corpus index — probes fan out instead).
-    ``append`` refuses a manifest mismatch, including ``expanded``:
-    mixing plain and fanned keys in one bucket table would silently
-    double-count Hamming coverage on some rows and halve it on others.
+    (the default) stores plain keys (growing corpus index — probes fan
+    out instead). Unset parameters default to DEFAULT_N_TABLES tables,
+    seed 42, dim 64 and 16 shards. ``append`` follows the standing-index
+    rule (operators/standing_index.resolve_params): unset parameters
+    come from the manifest and a contradicting one is refused,
+    including ``expanded`` — mixing plain and fanned keys in one bucket
+    table would silently double-count Hamming coverage on some rows and
+    halve it on others.
 
     ``n_bits=None`` auto-sizes the bucket width from the build frame's
     count via the codified occupancy rule (operators/similarity.
@@ -142,38 +151,27 @@ def build_semantic_index(
     index (re-bucketing is a rebuild, by design: bucket ids are not
     comparable across widths). On append, ``n_bits=None`` inherits the
     manifest's resolved width instead."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
     spark = vectors.sparkSession
-    if mode == "append":
-        existing = _read_index_manifest(spark, path, _SEM_MANIFEST_SCHEMA)
-        if existing is None:
-            raise ValueError(
-                f"cannot append to {path!r}: no manifest found "
-                "(build with mode='overwrite' first)"
-            )
-        if n_bits is None:
-            n_bits = existing["n_bits"]
-    elif n_bits is None:
-        n_bits = auto_n_bits(vectors.count())
-    params = {
-        "n_tables": n_tables,
-        "n_bits": n_bits,
-        "seed": seed,
-        "dim": dim,
-        "expanded": expanded,
-        "n_shards": n_shards,
-    }
-    if mode == "append" and existing != params:
-        raise ValueError(
-            f"semantic index at {path!r} was built with {existing}, "
-            f"refusing to append with {params}"
-        )
-    tables = hyperplane_tables(n_tables=n_tables, n_bits=n_bits, dim=dim, seed=seed)
+    params = resolve_params(
+        spark, path, _SEM_MANIFEST_SCHEMA, "semantic", mode,
+        {
+            "n_tables": n_tables,
+            "n_bits": n_bits,
+            "seed": seed,
+            "dim": dim,
+            "expanded": expanded,
+            "n_shards": n_shards,
+        },
+        _SEM_DEFAULTS,
+    )
+    if params["n_bits"] is None:
+        params["n_bits"] = auto_n_bits(vectors.count())
+    n_bits, n_shards = params["n_bits"], params["n_shards"]
+    tables = _tables_from(params)
     src = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     keyed = (
         lsh_probe_keys(src, "vid", "v", tables, n_bits)
-        if expanded
+        if params["expanded"]
         else lsh_keys(src, "vid", "v", tables)
     )
     buckets = keyed.withColumn(
@@ -182,9 +180,7 @@ def build_semantic_index(
     buckets.write.mode(mode).partitionBy("shard").parquet(f"{path}/buckets")
     src.write.mode(mode).parquet(f"{path}/vectors")
     if mode == "overwrite":
-        spark.createDataFrame(
-            [tuple(params.values())], _SEM_MANIFEST_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/manifest")
+        write_manifest(spark, path, _SEM_MANIFEST_SCHEMA, params)
 
 
 def probe_semantic_index(
@@ -214,9 +210,7 @@ def probe_semantic_index(
     if broadcast_side not in ("auto", "none", "index", "probe"):
         raise ValueError(f"broadcast_side must be auto|none|index|probe, got {broadcast_side!r}")
     spark = probes.sparkSession
-    manifest = _read_index_manifest(spark, path, _SEM_MANIFEST_SCHEMA)
-    if manifest is None:
-        raise ValueError(f"no semantic index manifest at {path!r}")
+    manifest = require_manifest(spark, path, _SEM_MANIFEST_SCHEMA, "semantic")
     tables = _tables_from(manifest)
     n_shards = manifest["n_shards"]
 
@@ -284,8 +278,7 @@ def compact_semantic_index(spark, path: str) -> dict[str, tuple[int, int]]:
     DISTINCT, so duplicate index rows only cost bytes and join fan-in;
     run it in a maintenance window (_swap_rewrite_distinct's race
     note)."""
-    if _read_index_manifest(spark, path, _SEM_MANIFEST_SCHEMA) is None:
-        raise ValueError(f"no semantic index manifest at {path!r}")
+    require_manifest(spark, path, _SEM_MANIFEST_SCHEMA, "semantic")
     return {
         "buckets": _swap_rewrite_distinct(spark, f"{path}/buckets", "shard"),
         "vectors": _swap_rewrite_distinct(spark, f"{path}/vectors", None),
@@ -302,9 +295,7 @@ def audit_semantic_index(spark, path: str) -> DataFrame:
     plain-key index (``expanded=False``): a fanned index's bucket rows
     are probes, not members, so the audit refuses it rather than report
     occupancy that is (n_bits+1)× inflated."""
-    manifest = _read_index_manifest(spark, path, _SEM_MANIFEST_SCHEMA)
-    if manifest is None:
-        raise ValueError(f"no semantic index manifest at {path!r}")
+    manifest = require_manifest(spark, path, _SEM_MANIFEST_SCHEMA, "semantic")
     if manifest["expanded"]:
         raise ValueError(
             f"semantic index at {path!r} stores EXPANDED probe keys — "

@@ -1,0 +1,245 @@
+"""The standing-index protocol shared by the six persisted index
+families: dedup, Bloom and span (operators/dedup.py), semantic
+(operators/semantic_index.py), perceptual (operators/perceptual_index.py)
+and novelty (streaming/novelty_ingest.py).
+
+Every standing index lives under one directory and records the
+parameters it was built with in a one-row ``{path}/manifest`` parquet
+table. Probes, appends, compaction and audits take their parameters
+from that manifest, never from the caller: a silently mismatched
+sharding, banding or plane seed would classify everything as 'new'.
+This module owns the manifest:
+
+* ``read_manifest`` — the parameters, or None when the index has no
+  manifest (it was never built). Any other failure raises: a transient
+  IO error read as "not built" would let a caller bootstrap over a live
+  index or override its real parameters.
+* ``require_manifest`` — the same, but a missing manifest raises
+  ``no {family} index manifest at …`` (probes, compaction, audits).
+* ``resolve_params`` — the one build/append rule. ``overwrite`` fills
+  every parameter the caller left as None from the family defaults;
+  ``append`` refuses a missing manifest, takes every None parameter
+  from the manifest and refuses any explicit value that contradicts it.
+* ``write_manifest`` — the row an ``overwrite`` build ends with.
+* ``_swap_rewrite`` / ``_swap_rewrite_distinct`` — the crash-safe
+  in-place table rewrite behind compaction and the Bloom OR-merge.
+
+Manifests are parquet rather than a driver-side file, and existence
+checks go through the JVM Hadoop FileSystem (``path_exists``, which the
+per-batch commit protocol in streaming/batch_commit.py also uses), so
+the same code runs on local, HDFS and object-store paths.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import SparkSession
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop Path, FileSystem) for ``path`` — the package's one
+    FileSystem handle."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Filesystem-scheme-agnostic existence check, no driver-side open()."""
+    jpath, fs = _hadoop_path(spark, path)
+    return bool(fs.exists(jpath))
+
+
+def read_manifest(spark: SparkSession, path: str, schema: str) -> dict | None:
+    """The manifest of the index at ``path`` read with its family's
+    ``schema``, or None when ``{path}/manifest`` does not exist. A
+    manifest directory without rows (an overwrite that crashed before
+    its commit) also reads as None, so the next build bootstraps again.
+    Reading another family's manifest yields NULLs for the columns that
+    family does not write, and raises here rather than downstream."""
+    if not path_exists(spark, f"{path}/manifest"):
+        return None
+    row = spark.read.schema(schema).parquet(f"{path}/manifest").head()
+    if row is None:
+        return None
+    params = row.asDict()
+    if any(v is None for v in params.values()):
+        raise ValueError(
+            f"manifest at {path!r} does not match the expected schema "
+            f"({schema!r}) — wrong index family?"
+        )
+    return params
+
+
+def require_manifest(spark: SparkSession, path: str, schema: str, family: str) -> dict:
+    """``read_manifest``, raising when the index has no manifest."""
+    manifest = read_manifest(spark, path, schema)
+    if manifest is None:
+        raise ValueError(f"no {family} index manifest at {path!r}")
+    return manifest
+
+
+def resolve_params(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    family: str,
+    mode: str,
+    params: dict,
+    defaults: dict,
+) -> dict:
+    """The parameters a build in ``mode`` writes with. ``params`` maps
+    manifest columns to the caller's values (None = not given).
+    ``overwrite`` takes each None from ``defaults`` (a family may leave
+    a default None and size it from the data itself); ``append`` takes
+    each None from the manifest and refuses a missing manifest or an
+    explicit value that contradicts it — mixing parameters in one index
+    would misroute its probe joins."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
+    if mode == "overwrite":
+        return {n: defaults.get(n) if v is None else v for n, v in params.items()}
+    existing = read_manifest(spark, path, schema)
+    if existing is None:
+        raise ValueError(
+            f"cannot append to {path!r}: no manifest found "
+            "(build with mode='overwrite' first)"
+        )
+    resolved = {n: existing[n] if v is None else v for n, v in params.items()}
+    if resolved != existing:
+        raise ValueError(
+            f"{family} index at {path!r} was built with {existing}, "
+            f"refusing to append with {resolved}"
+        )
+    return resolved
+
+
+def write_manifest(spark: SparkSession, path: str, schema: str, params: dict) -> None:
+    """Persist ``params`` as the one-row ``{path}/manifest`` table."""
+    spark.createDataFrame([params], schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/manifest")
+
+
+def _swap_rewrite(
+    spark, path: str, transform, partition_col: str | None
+) -> tuple[int, int]:
+    """Rewrite a standing-index table as ``transform(current_rows)``
+    via a tmp-sibling swap — Spark cannot overwrite a parquet directory
+    it is reading. ``transform`` is a pure DataFrame→DataFrame function
+    (DISTINCT for compaction; a union + bit_or re-aggregate for the
+    Bloom OR-merge) that must be IDEMPOTENT UNDER ROW DUPLICATION —
+    transform(df ∪ df') == transform(df) whenever df' ⊆ df — which
+    every membership/OR-monotone index table satisfies. That property
+    is what makes the protocol below loss-free at EVERY crash point.
+
+    Protocol (round-14, replacing the round-13 delete-before-rename-in
+    window ADVICE flagged): RECONCILE parked siblings first, then a
+    clean swap whose only deletes happen after rename-in.
+
+    1. Entry restore: if ``path`` is missing, rename back the newest
+       parked canonical — ``{path}.compact.aside`` (pre-swap copy from
+       a crash between the two renames), else the legacy
+       ``{path}.compact.old``, else a COMPLETE ``{path}.compact.tmp``
+       (``_SUCCESS`` present).
+    2. Reconcile-by-append: for each surviving sibling (aside, legacy
+       old, complete tmp), APPEND its rows into ``path`` and only then
+       delete it. A crash between append and delete re-appends on the
+       next run — duplicate rows, which the transform collapses — and
+       a crash mid-append leaves the sibling intact (parquet job
+       commit), so no interleaving of crashes and concurrent ingest
+       appends can lose membership: a sibling is never removed until
+       its rows are durably IN ``path``. This subsumes the round-13
+       union-at-read fix and closes its residual window (the merged
+       rewrite living only in scratch tmp while the parked copy was
+       already deleted).
+    3. Swap: write transform(path) → ``.compact.tmp``, rename
+       ``path`` → ``.compact.aside``, rename tmp → ``path``, delete
+       aside. Each FS boolean is asserted; the rename-in failure
+       handler restores aside → path and reports the TRUE table state
+       if even the restore fails.
+
+    On non-atomic filesystems a probe racing the swap can still observe
+    a brief missing-directory window between the two renames — run
+    compaction in a maintenance window; verdicts are identical on
+    either side because both tables hold the same key SET. Returns
+    (rows_before, rows_after); rows_before counts the RECONCILED
+    pre-transform table (including any recovery re-appends)."""
+    jvm = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    jvm_path, fs = _hadoop_path(spark, path)
+    aside_str = f"{path}.compact.aside"
+    old_str = f"{path}.compact.old"
+    tmp = f"{path}.compact.tmp"
+    aside, old, jvm_tmp = jvm(aside_str), jvm(old_str), jvm(tmp)
+
+    def _tmp_complete() -> bool:
+        return fs.exists(jvm_tmp) and fs.exists(jvm(f"{tmp}/_SUCCESS"))
+
+    def _append_into_path(src: str) -> None:
+        writer = spark.read.parquet(src).write.mode("append")
+        if partition_col is not None:
+            writer = writer.partitionBy(partition_col)
+        writer.parquet(path)
+
+    if not fs.exists(jvm_path):
+        # prior run crashed between rename-aside and rename-in: the
+        # canonical table is parked — restore the newest copy before
+        # reading (otherwise re-running fails at spark.read forever)
+        for parked in (aside, old):
+            if fs.exists(parked):
+                if not fs.rename(parked, jvm_path):
+                    raise IOError(
+                        f"compaction: could not restore {path} from {parked}"
+                    )
+                break
+        else:
+            if _tmp_complete():
+                if not fs.rename(jvm_tmp, jvm_path):
+                    raise IOError(f"compaction: could not restore {path} from {tmp}")
+            else:
+                raise IOError(
+                    f"compaction: {path} is missing and no {aside_str}, "
+                    f"{old_str}, or complete {tmp} exists to recover from"
+                )
+    # reconcile surviving siblings into path (append, THEN delete — a
+    # sibling is never removed until its rows are durably in path)
+    for sib_jvm, sib_str in ((aside, aside_str), (old, old_str)):
+        if fs.exists(sib_jvm):
+            _append_into_path(sib_str)
+            if not fs.delete(sib_jvm, True):
+                raise IOError(f"compaction: could not clear reconciled {sib_str}")
+    if _tmp_complete():
+        # a complete rewrite left in scratch by a crash before its
+        # rename-in: its rows may be the only copy of membership that
+        # was reconciled from a since-deleted sibling — fold it in too
+        _append_into_path(tmp)
+    if fs.exists(jvm_tmp) and not fs.delete(jvm_tmp, True):
+        raise IOError(f"compaction: could not clear stale {tmp}")
+
+    before_df = spark.read.parquet(path)
+    rows_before = before_df.count()
+    compacted = transform(before_df)
+    writer = compacted.write.mode("overwrite")
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(tmp)
+    if not fs.rename(jvm_path, aside):
+        raise IOError(f"compaction: rename-aside failed for {path}")
+    if not fs.rename(jvm_tmp, jvm_path):
+        # restore the original before surfacing the error — and report
+        # the TRUE table state if even the restore fails
+        if fs.rename(aside, jvm_path):
+            raise IOError(f"compaction: rename-in failed for {path}; original restored")
+        raise IOError(
+            f"compaction: rename-in failed for {path} AND the restore rename "
+            f"failed — table is parked at {aside_str} (re-run to recover)"
+        )
+    if not fs.delete(aside, True):
+        raise IOError(f"compaction: could not delete {aside_str}")
+    return rows_before, spark.read.parquet(path).count()
+
+
+def _swap_rewrite_distinct(
+    spark, path: str, partition_col: str | None
+) -> tuple[int, int]:
+    """Compaction's transform: rewrite as the DISTINCT row set (the
+    membership-only append contract's churn remover)."""
+    return _swap_rewrite(spark, path, lambda df: df.distinct(), partition_col)

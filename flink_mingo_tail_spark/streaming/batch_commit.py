@@ -18,8 +18,10 @@ output must be idempotent per batch id. Every ingest stream here
 4. readers list only marked directories (``committed_batch_dirs``), so
    a crashed attempt's partial output is never read.
 
-The existence checks go through the JVM Hadoop FileSystem, so the same
-code runs on local, HDFS and object-store paths.
+The existence checks and the directory listing go through the JVM
+Hadoop FileSystem handle of operators/standing_index.py (``path_exists``),
+so the same code runs on local, HDFS and object-store paths. The index
+appends of step 3 follow that module's manifest protocol.
 """
 
 from __future__ import annotations
@@ -29,16 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-
-def _hadoop_path(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-
-
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-scheme-agnostic existence check, no driver-side open()."""
-    jpath, fs = _hadoop_path(spark, path)
-    return bool(fs.exists(jpath))
+from flink_mingo_tail_spark.operators.standing_index import _hadoop_path, path_exists
 
 
 def commit_batch_once(

@@ -74,7 +74,12 @@ batch itself flagged as dups (an exact dup's text is byte-identical to
 its keeper's, so its hash/bands add no new members; a near-dup doc's
 single 1x8 band is by definition already present). Membership-only
 semantics make the append replay-idempotent without reconstructing the
-crashed attempt's verdicts (novelty_ingest's stance).
+crashed attempt's verdicts (novelty_ingest's stance). Whether an index
+is built is decided one way for every index: it has a manifest
+(operators/standing_index.read_manifest). A stage whose index has none
+yet flags nothing, and the first batch that admits rows into it
+bootstraps it (``mode='overwrite'``); later batches append, with the
+index's parameters taken from its manifest.
 
 Budget state is NOT a separate store: the per-source totals are
 re-derived at batch start from the COMMITTED classification outputs
@@ -107,8 +112,9 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
 from flink_mingo_tail_spark.operators.dedup import (
+    _BLOOM_MANIFEST_SCHEMA,
+    _MANIFEST_SCHEMA,
     _SPAN_MANIFEST_SCHEMA,
-    _read_index_manifest,
     build_bloom_index,
     build_dedup_index,
     build_span_index,
@@ -122,6 +128,7 @@ from flink_mingo_tail_spark.operators.dedup import (
 )
 from flink_mingo_tail_spark.operators.multimodal import dhash_arrow
 from flink_mingo_tail_spark.operators.perceptual_index import (
+    _PH_MANIFEST_SCHEMA,
     build_perceptual_index,
     compact_perceptual_index,
     probe_perceptual_index,
@@ -129,16 +136,17 @@ from flink_mingo_tail_spark.operators.perceptual_index import (
 from flink_mingo_tail_spark.operators.quality import quality_reason
 from flink_mingo_tail_spark.operators.ranks import grouped_prefix_sum
 from flink_mingo_tail_spark.operators.semantic_index import (
+    _SEM_MANIFEST_SCHEMA,
     DEFAULT_SEM_DUP_TAU,
     DEFAULT_SEM_TAU,
     build_semantic_index,
     compact_semantic_index,
     probe_semantic_index,
 )
+from flink_mingo_tail_spark.operators.standing_index import path_exists, read_manifest
 from flink_mingo_tail_spark.streaming.batch_commit import (
     commit_batch_once,
     committed_batch_dirs,
-    path_exists,
 )
 
 DEFAULT_EVAL_MOD = 100   # doc_id % 100 == 0 is the held-out slice (q226's knob)
@@ -149,12 +157,11 @@ _GRAM_N = 4              # decontamination gram width (q75b/q226)
 _OUT_SCHEMA = "doc_id long, source string, n_toks long, reason string"
 
 
-def _manifest_or_none(spark: SparkSession, index_path: str):
-    """Manifest dict, or None before bootstrap — existence-checked first
-    so the pre-bootstrap probe doesn't log a JVM FileNotFound stack."""
-    if not path_exists(spark, f"{index_path}/manifest"):
-        return None
-    return _read_index_manifest(spark, index_path)
+def _built(spark: SparkSession, path: str | None, schema: str) -> bool:
+    """Whether the standing index at ``path`` is wired (a path is set)
+    and bootstrapped (it has a manifest). A wired index is built by the
+    first batch that admits rows into it and appended to after that."""
+    return path is not None and read_manifest(spark, path, schema) is not None
 
 
 def estimated_dup_ratio(spark: SparkSession, table_path: str) -> float:
@@ -265,23 +272,15 @@ def classify_batch(
     dHash band index, q247's direction) set, the batch MUST carry a
     binary ``payload`` column (nullable — same honest-partial shape);
     quality passers' payloads are fingerprinted and probed, reason
-    'perceptual_dup' between the text-dup and semantic-dup stages. No
-    writes, no collects (one bounded persist on the flagged frame — see
-    inline note); exposed so the q234/q241/q248 driver twins hash
+    'perceptual_dup' between the text-dup and semantic-dup stages. The
+    batch function's schema gate checks both columns before this runs.
+    A growing index that has no manifest yet (bootstrap) flags nothing.
+    No writes, no collects (one bounded persist on the flagged frame —
+    see inline note); exposed so the q234/q241/q248 driver twins hash
     exactly this code path."""
     spark = batch_df.sparkSession
     needs_emb = semantic_index_path is not None or semantic_dup_index_path is not None
-    if needs_emb and "embedding" not in batch_df.columns:
-        raise ValueError(
-            "a semantic index path is set but the batch has no 'embedding' column "
-            "— join the embeddings onto the stream upstream of ingest"
-        )
     needs_payload = perceptual_index_path is not None
-    if needs_payload and "payload" not in batch_df.columns:
-        raise ValueError(
-            "a perceptual index path is set but the batch has no 'payload' column "
-            "— join the media payloads onto the stream upstream of ingest"
-        )
     t = tokens(F.col("text"))
     cols = [
         F.col("doc_id"),
@@ -298,7 +297,7 @@ def classify_batch(
     s1 = batch_df.select(*cols)
     surv1 = s1.filter(F.col("r1").isNull())
 
-    if _manifest_or_none(spark, index_path) is None:
+    if not _built(spark, index_path, _MANIFEST_SCHEMA):
         # bootstrap: no index yet (first batch) — nothing is a dup
         probed = surv1.select("doc_id", F.lit("new").alias("status"))
     else:
@@ -330,9 +329,12 @@ def classify_batch(
         .join(probed, "doc_id", "left")
         .join(cont_ids.withColumn("__ct", F.lit(True)), "doc_id", "left")
     )
-    if span_index_path is not None and path_exists(
-        spark, f"{span_index_path}/manifest"
-    ):
+    span_manifest = (
+        None
+        if span_index_path is None
+        else read_manifest(spark, span_index_path, _SPAN_MANIFEST_SCHEMA)
+    )
+    if span_manifest is not None:
         # BOILERPLATE stage (round 14): quality passers whose standing-
         # span dup mass (operators/dedup.probe_span_index — maximal
         # spans shared with the admitted corpus AS OF BATCH START)
@@ -340,9 +342,7 @@ def classify_batch(
         # boilerplate-heavy documents that survive whole-document and
         # near dedup because their novel remainder keeps the signature
         # distinct.
-        span_l = _read_index_manifest(spark, span_index_path, _SPAN_MANIFEST_SCHEMA)[
-            "span_l"
-        ]
+        span_l = span_manifest["span_l"]
         bp_ids = (
             probe_span_index(surv1, span_index_path)
             .groupBy("doc_id")
@@ -365,7 +365,7 @@ def classify_batch(
         if needs_emb
         else None
     )
-    if needs_payload and path_exists(spark, f"{perceptual_index_path}/manifest"):
+    if _built(spark, perceptual_index_path, _PH_MANIFEST_SCHEMA):
         pd_ids = (
             probe_perceptual_index(
                 dhash_arrow(
@@ -384,9 +384,7 @@ def classify_batch(
     else:
         # stage off, or bootstrap (no index yet) — nothing is a dup
         flagged = flagged.withColumn("__pd", F.lit(None).cast("boolean"))
-    if semantic_dup_index_path is not None and path_exists(
-        spark, f"{semantic_dup_index_path}/manifest"
-    ):
+    if _built(spark, semantic_dup_index_path, _SEM_MANIFEST_SCHEMA):
         sd_ids = (
             probe_semantic_index(
                 embedded,
@@ -528,9 +526,11 @@ def make_curation_ingest_batch_fn(
     routes every batch's exact-dup probe through it (two-tier: the
     kilobyte bit frame broadcasts, only bloom-positive hashes reach the
     exact semi-join — q252's production shape). The sibling is
-    bootstrapped (or BACKFILLED, when the knob is enabled on an index
-    that predates it) from the content table in one pass, appended
-    per batch after classification commits, and re-widened from the
+    built from the content table in one pass at the start of the first
+    batch that finds the dedup index without it (the second batch of a
+    fresh index, or the first batch after the knob is enabled on an
+    index that predates it), appended per batch after classification
+    commits, and re-widened from the
     content table when its fill ratio drifts past the design load
     (maybe_rewiden_bloom_index — q254's trigger, checked each batch on
     the kilobyte frame). A crash between the content append and the
@@ -577,13 +577,11 @@ def make_curation_ingest_batch_fn(
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Schema gate up front: a replay of a committed batch skips
-        # classify_batch (whose readable ValueError covers the first
-        # run), but append_quality_passers still references the
-        # embedding/payload columns when the matching index is wired —
-        # a schema drift must fail with the same readable error either
-        # way, not as a raw AnalysisException mid-replay (ADVICE round
-        # 12).
+        # The one schema gate, up front: it runs before
+        # commit_batch_once, so a replay of a committed batch (which
+        # skips classify_batch) fails with the same readable error as a
+        # first run, not as a raw AnalysisException from
+        # append_quality_passers (ADVICE round 12).
         needs_emb = (
             semantic_index_path is not None or semantic_dup_index_path is not None
         )
@@ -599,89 +597,72 @@ def make_curation_ingest_batch_fn(
             )
 
         def append_quality_passers() -> None:
+            # every wired growing index admits the same population, the
+            # batch's quality passers, AFTER the classification commits
+            # (membership-monotone, so a replay can redo it blindly); an
+            # index without a manifest is bootstrapped by this append
             t = tokens(F.col("text"))
             passers = batch_df.filter(
                 quality_reason(F.col("doc_id"), t, F.col("lang"), eval_mod).isNull()
             )
             if passers.limit(1).count() == 0:
                 return
-            manifest = _manifest_or_none(spark, index_path)
-            if manifest is None:  # bootstrap (first committed batch)
-                build_dedup_index(
-                    passers, index_path, rows_per_band=rows_per_band, mode="overwrite"
+            built = _built(spark, index_path, _MANIFEST_SCHEMA)
+            build_dedup_index(
+                passers,
+                index_path,
+                rows_per_band=None if built else rows_per_band,
+                mode="append" if built else "overwrite",
+            )
+            bpath = f"{index_path}/bloom"
+            if bloom_prefilter and _built(spark, bpath, _BLOOM_MANIFEST_SCHEMA):
+                # the sibling, once the batch-start backfill has built it,
+                # takes this batch's hashes; then the kilobyte fill check
+                # decides whether the width drifted past its design load
+                build_bloom_index(
+                    passers.select(F.md5(F.col("text")).alias("ch")).distinct(),
+                    bpath,
+                    key_col="ch",
+                    mode="append",
                 )
-            else:
-                build_dedup_index(passers, index_path, mode="append", **manifest)
-            if bloom_prefilter:
-                # the Bloom sibling tracks the content table it filters
-                # for: bootstrap/backfill reads the (already distinct)
-                # content table whole; steady state appends just this
-                # batch's hashes, then the kilobyte fill check decides
-                # whether the width drifted past its design load
-                bpath = f"{index_path}/bloom"
-                if not path_exists(spark, f"{bpath}/manifest"):
-                    build_bloom_index(
-                        spark.read.parquet(f"{index_path}/content").select("ch"),
-                        bpath,
-                        key_col="ch",
-                        mode="overwrite",
-                    )
-                else:
-                    build_bloom_index(
-                        passers.select(F.md5(F.col("text")).alias("ch")).distinct(),
-                        bpath,
-                        key_col="ch",
-                        mode="append",
-                    )
-                    maybe_rewiden_bloom_index(
-                        spark,
-                        bpath,
-                        spark.read.parquet(f"{index_path}/content").select("ch"),
-                    )
+                maybe_rewiden_bloom_index(
+                    spark,
+                    bpath,
+                    spark.read.parquet(f"{index_path}/content").select("ch"),
+                )
             if span_index_path is not None:
-                # the growing span index admits the same population:
-                # every quality passer's window keys, appended AFTER the
-                # batch's classification commits (membership-monotone,
-                # replay-idempotent — the family rule)
-                sboot = not path_exists(spark, f"{span_index_path}/manifest")
                 build_span_index(
                     passers,
                     span_index_path,
-                    mode="overwrite" if sboot else "append",
+                    mode="append"
+                    if _built(spark, span_index_path, _SPAN_MANIFEST_SCHEMA)
+                    else "overwrite",
                 )
             if perceptual_index_path is not None:
-                # the growing perceptual index admits the same population:
-                # every quality passer with a payload, fingerprinted and
-                # appended AFTER the batch's classification commits
-                # (membership-monotone, replay-safe — q247's loop, in
-                # place). Emptiness is checked on the RAW payload column
-                # so the Arrow dHash pass runs once per batch, inside the
-                # build, never a second time just to count (round-13
-                # review).
+                # q247's loop, in place. Emptiness is checked on the RAW
+                # payload column so the Arrow dHash pass runs once per
+                # batch, inside the build, never a second time just to
+                # count (round-13 review).
                 with_payload = passers.filter(F.col("payload").isNotNull()).select(
                     F.col("doc_id").alias("media_id"), "payload"
                 )
                 if with_payload.limit(1).count() > 0:
-                    pboot = not path_exists(
-                        spark, f"{perceptual_index_path}/manifest"
-                    )
                     build_perceptual_index(
                         dhash_arrow(with_payload),
                         perceptual_index_path,
-                        mode="overwrite" if pboot else "append",
+                        mode="append"
+                        if _built(spark, perceptual_index_path, _PH_MANIFEST_SCHEMA)
+                        else "overwrite",
                     )
             if semantic_dup_index_path is None:
                 return
-            # the growing semantic-dup index admits the same population:
-            # every quality passer with an embedding, appended AFTER the
-            # batch's classification commits (membership-monotone, so a
-            # replay can redo it blindly — q242's loop, in place)
+            # q242's loop, in place: passers with an embedding
             emb = passers.filter(F.col("embedding").isNotNull()).select(
                 "doc_id", F.col("embedding")
             )
             if emb.limit(1).count() == 0:
                 return
-            boot = not path_exists(spark, f"{semantic_dup_index_path}/manifest")
+            built = _built(spark, semantic_dup_index_path, _SEM_MANIFEST_SCHEMA)
             build_semantic_index(
                 emb,
                 semantic_dup_index_path,
@@ -689,9 +670,9 @@ def make_curation_ingest_batch_fn(
                 # bootstrap resolves the width (None = auto-size from
                 # THIS batch's count); appends inherit the manifest's
                 # resolved width — build_semantic_index's contract
-                n_bits=sem_dup_n_bits if boot else None,
+                n_bits=None if built else sem_dup_n_bits,
                 expanded=False,
-                mode="overwrite" if boot else "append",
+                mode="append" if built else "overwrite",
             )
 
         def maybe_compact() -> None:
@@ -699,10 +680,10 @@ def make_curation_ingest_batch_fn(
             # per batch; compact EVERY wired index in the inter-batch
             # maintenance window when it trips (membership-only key
             # sets, so verdicts are invariant across the swap)
-            if auto_compact_ratio is None:
-                return
-            if _manifest_or_none(spark, index_path) is None:
-                return  # pre-bootstrap: nothing to estimate or compact
+            if auto_compact_ratio is None or not _built(
+                spark, index_path, _MANIFEST_SCHEMA
+            ):
+                return  # off, or pre-bootstrap: nothing to estimate or compact
             # a parked .compact.aside/.compact.old means a prior
             # compaction crashed mid-swap and THIS loop's appends may
             # since have recreated the table with only recent rows —
@@ -728,26 +709,23 @@ def make_curation_ingest_batch_fn(
             ):
                 return
             compact_dedup_index(spark, index_path)
-            if semantic_dup_index_path is not None and path_exists(
-                spark, f"{semantic_dup_index_path}/manifest"
+            for path, schema, compact in (
+                (semantic_dup_index_path, _SEM_MANIFEST_SCHEMA, compact_semantic_index),
+                (perceptual_index_path, _PH_MANIFEST_SCHEMA, compact_perceptual_index),
+                (span_index_path, _SPAN_MANIFEST_SCHEMA, compact_span_index),
             ):
-                compact_semantic_index(spark, semantic_dup_index_path)
-            if perceptual_index_path is not None and path_exists(
-                spark, f"{perceptual_index_path}/manifest"
-            ):
-                compact_perceptual_index(spark, perceptual_index_path)
-            if span_index_path is not None and path_exists(
-                spark, f"{span_index_path}/manifest"
-            ):
-                compact_span_index(spark, span_index_path)
+                if _built(spark, path, schema):
+                    compact(spark, path)
 
         if (
             bloom_prefilter
-            and _manifest_or_none(spark, index_path) is not None
-            and not path_exists(spark, f"{index_path}/bloom/manifest")
+            and _built(spark, index_path, _MANIFEST_SCHEMA)
+            and not _built(spark, f"{index_path}/bloom", _BLOOM_MANIFEST_SCHEMA)
         ):
-            # knob enabled on an index that predates the Bloom sibling:
-            # backfill from the content table BEFORE the first probe
+            # the one place the Bloom sibling is bootstrapped: from the
+            # content table, before the first probe that uses it — at the
+            # second batch of a fresh index, or at the first batch after
+            # the knob is enabled on an index that predates the sibling
             build_bloom_index(
                 spark.read.parquet(f"{index_path}/content").select("ch"),
                 f"{index_path}/bloom",

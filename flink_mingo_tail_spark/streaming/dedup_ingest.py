@@ -7,8 +7,9 @@ against the index as it stood at batch start (exact_dup / near_dup /
 new — O(batch) membership semi-joins, never O(corpus)), the
 classification is written to an idempotent per-batch output directory,
 and the batch's admitted ('new') documents are appended to the index
-under the round-6 manifest validation (parameters always come from the
-index's own manifest, so a drifted caller cannot misroute the probe).
+under the standing-index manifest protocol (operators/standing_index.py:
+parameters always come from the index's own manifest, so a drifted
+caller cannot misroute the probe).
 
 Restart semantics (the part a naive foreachBatch gets wrong): Spark
 re-runs the last uncommitted batch after a crash, and by then the
@@ -35,11 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_mingo_tail_spark.operators.dedup import (
-    _read_index_manifest,
-    build_dedup_index,
-    probe_dedup_index,
-)
+from flink_mingo_tail_spark.operators.dedup import build_dedup_index, probe_dedup_index
 from flink_mingo_tail_spark.streaming.batch_commit import commit_batch_once
 
 
@@ -53,18 +50,12 @@ def make_dedup_ingest_batch_fn(
     """The foreachBatch body, exposed for direct replay testing.
 
     Requires an index with a manifest (``build_dedup_index`` with
-    ``mode='overwrite'`` writes one); parameters are never taken from
-    the caller.
+    ``mode='overwrite'`` writes one); the probe and the append both take
+    their parameters from it, never from the caller.
     """
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        manifest = _read_index_manifest(spark, index_path)
-        if manifest is None:
-            raise ValueError(
-                f"dedup ingest stream requires a manifest-bearing index at "
-                f"{index_path!r} (build_dedup_index mode='overwrite' first)"
-            )
         batch_dir = f"{output_path}/ingest_batch={batch_id}"
         commit_batch_once(
             spark,
@@ -83,8 +74,6 @@ def make_dedup_ingest_batch_fn(
             "left_semi",
         )
         if admitted.limit(1).count() > 0:
-            build_dedup_index(
-                admitted, index_path, text_col=text_col, mode="append", **manifest
-            )
+            build_dedup_index(admitted, index_path, text_col=text_col, mode="append")
 
     return ingest

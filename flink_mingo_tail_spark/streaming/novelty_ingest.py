@@ -37,13 +37,19 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.operators.dedup import md5_long, tokens, word_shingles
-from flink_mingo_tail_spark.streaming.batch_commit import commit_batch_once, path_exists
+from flink_mingo_tail_spark.operators.standing_index import (
+    require_manifest,
+    resolve_params,
+    write_manifest,
+)
+from flink_mingo_tail_spark.streaming.batch_commit import commit_batch_once
 
 DEFAULT_SHINGLE_K = 5  # q209's granularity
+_NOVELTY_MANIFEST_SCHEMA = "k int"
 
 
 def doc_shingle_hashes(
@@ -73,28 +79,25 @@ def build_novelty_index(
     docs: DataFrame,
     index_path: str,
     *,
-    k: int = DEFAULT_SHINGLE_K,
+    k: int | None = None,
     mode: str = "overwrite",
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
     """Seed (or append to) the standing shingle index. ``overwrite``
-    also writes the manifest; ingest always takes ``k`` FROM the
-    manifest so a drifted caller cannot split the index across shingle
-    sizes (the dedup-index manifest rule)."""
+    also writes the manifest (``k`` defaults to DEFAULT_SHINGLE_K);
+    ``append`` takes ``k`` FROM the manifest and refuses a contradicting
+    one, so a drifted caller cannot split the index across shingle
+    sizes (the standing-index rule, operators/standing_index)."""
     spark = docs.sparkSession
-    hashes = doc_shingle_hashes(docs, k, id_col, text_col).select("h").distinct()
+    params = resolve_params(
+        spark, index_path, _NOVELTY_MANIFEST_SCHEMA, "novelty", mode,
+        {"k": k}, {"k": DEFAULT_SHINGLE_K},
+    )
+    hashes = doc_shingle_hashes(docs, params["k"], id_col, text_col).select("h").distinct()
     hashes.write.mode(mode).parquet(f"{index_path}/shingles")
     if mode == "overwrite":
-        spark.createDataFrame([(int(k),)], "k int").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{index_path}/manifest")
-
-
-def read_novelty_manifest(spark: SparkSession, index_path: str) -> int | None:
-    if not path_exists(spark, f"{index_path}/manifest/_SUCCESS"):
-        return None
-    return int(spark.read.parquet(f"{index_path}/manifest").first()["k"])
+        write_manifest(spark, index_path, _NOVELTY_MANIFEST_SCHEMA, params)
 
 
 def score_batch_novelty(
@@ -142,12 +145,9 @@ def make_novelty_batch_fn(
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        k = read_novelty_manifest(spark, index_path)
-        if k is None:
-            raise ValueError(
-                f"novelty ingest requires a manifest-bearing index at "
-                f"{index_path!r} (build_novelty_index mode='overwrite' first)"
-            )
+        k = require_manifest(
+            spark, index_path, _NOVELTY_MANIFEST_SCHEMA, "novelty"
+        )["k"]
         commit_batch_once(
             spark,
             f"{output_path}/novelty_batch={batch_id}",
@@ -159,12 +159,8 @@ def make_novelty_batch_fn(
                 text_col=text_col,
             ),
         )
-        (
-            doc_shingle_hashes(batch_df, k, id_col, text_col)
-            .select("h")
-            .distinct()
-            .write.mode("append")
-            .parquet(f"{index_path}/shingles")
+        build_novelty_index(
+            batch_df, index_path, mode="append", id_col=id_col, text_col=text_col
         )
 
     return ingest

@@ -185,10 +185,10 @@ def test_bloom_rewiden_trigger_rebuilds_at_fresh_width(spark, tmp_path):
     trips it and is rebuilt at the auto width from the ground-truth
     key frame, after which probes still never miss a member."""
     from flink_mingo_tail_spark.operators.dedup import (
-        _read_index_manifest,
         _BLOOM_MANIFEST_SCHEMA,
         maybe_rewiden_bloom_index,
     )
+    from flink_mingo_tail_spark.operators.standing_index import read_manifest
 
     keys = _keys(spark, F.col("doc_id") % 10 != 7).select("ch").distinct()
     n = keys.count()
@@ -196,7 +196,7 @@ def test_bloom_rewiden_trigger_rebuilds_at_fresh_width(spark, tmp_path):
     # healthy width: no rebuild
     build_bloom_index(keys, path, key_col="ch")
     assert maybe_rewiden_bloom_index(spark, path, keys) is False
-    assert _read_index_manifest(spark, path, _BLOOM_MANIFEST_SCHEMA)[
+    assert read_manifest(spark, path, _BLOOM_MANIFEST_SCHEMA)[
         "m_bits"
     ] == bloom_m_bits(n)
     # overloaded width (1 bit/key rounds down far past design load)
@@ -204,7 +204,7 @@ def test_bloom_rewiden_trigger_rebuilds_at_fresh_width(spark, tmp_path):
     path2 = f"{tmp_path}/bloom_tiny"
     build_bloom_index(keys, path2, key_col="ch", m_bits=tiny)
     assert maybe_rewiden_bloom_index(spark, path2, keys) is True
-    man = _read_index_manifest(spark, path2, _BLOOM_MANIFEST_SCHEMA)
+    man = read_manifest(spark, path2, _BLOOM_MANIFEST_SCHEMA)
     assert man["m_bits"] == bloom_m_bits(n)
     probes = _keys(spark, F.col("doc_id") % 10 != 7)
     hits = probe_bloom_index(probes, path2, id_col="doc_id", key_col="ch")

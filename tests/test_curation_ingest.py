@@ -7,9 +7,13 @@ the hash can't: the streaming wiring, replays, and state bootstrap."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
-from flink_mingo_tail_spark.operators.dedup import _read_index_manifest
+from flink_mingo_tail_spark.operators.dedup import _MANIFEST_SCHEMA
+from flink_mingo_tail_spark.operators.standing_index import read_manifest
 from flink_mingo_tail_spark.streaming.batch_commit import (
     committed_batch_dirs,
     start_batch_stream,
@@ -37,12 +41,17 @@ def _batches(spark, n=3, w=100):
     ]
 
 
-def _drive(spark, tmp, batches, *, replay_batch=None):
-    """Sequential batch-fn drive into a fresh scratch; optionally
-    re-invoke one batch immediately after it commits (crash replay)."""
+def _drive(spark, tmp, batches, *, replay_batch=None, **kw):
+    """Sequential batch-fn drive into a scratch (fresh, or holding an
+    earlier drive's state); optionally re-invoke one batch immediately
+    after it commits (crash replay). ``kw`` goes to
+    make_curation_ingest_batch_fn. Returns every committed verdict."""
     eval_path = f"{tmp}/eval_grams"
-    build_eval_gram_set(_docs(spark), eval_path)
-    ingest = make_curation_ingest_batch_fn(f"{tmp}/index", eval_path, f"{tmp}/out")
+    if not os.path.exists(eval_path):
+        build_eval_gram_set(_docs(spark), eval_path)
+    ingest = make_curation_ingest_batch_fn(
+        f"{tmp}/index", eval_path, f"{tmp}/out", **kw
+    )
     for b, df in batches:
         ingest(df, b)
         if replay_batch == b:
@@ -57,13 +66,20 @@ def _drive(spark, tmp, batches, *, replay_batch=None):
     }
 
 
+@pytest.fixture(scope="module")
+def clean_drive(spark, tmp_path_factory):
+    """The clean 3-batch drive, computed once: the replay, streaming-
+    wiring and Bloom tests compare against it and never write to it."""
+    return _drive(spark, str(tmp_path_factory.mktemp("clean")), _batches(spark, n=3))
+
+
 def test_bootstrap_first_batch_has_no_dups_and_builds_index(spark, tmp_path):
     tmp = str(tmp_path)
     batches = _batches(spark, n=1)
     got = _drive(spark, tmp, batches)
     assert got, "batch 0 must classify"
     assert not {r for r in got.values() if r in ("exact_dup", "near_dup")}
-    assert _read_index_manifest(spark, f"{tmp}/index") is not None
+    assert read_manifest(spark, f"{tmp}/index", _MANIFEST_SCHEMA) is not None
 
 
 def test_later_batches_probe_standing_state(spark, tmp_path):
@@ -86,19 +102,19 @@ def test_later_batches_probe_standing_state(spark, tmp_path):
         assert got1[doc_id] == "exact_dup", (doc_id, r0, got1[doc_id])
 
 
-def test_replayed_batch_is_idempotent_and_run_converges(spark, tmp_path):
+def test_replayed_batch_is_idempotent_and_run_converges(spark, tmp_path, clean_drive):
     batches = _batches(spark, n=3)
-    clean = _drive(spark, str(tmp_path / "clean"), batches)
+    clean = clean_drive
     replayed = _drive(spark, str(tmp_path / "replay"), batches, replay_batch=1)
     assert clean == replayed
 
 
-def test_streaming_wiring_matches_direct_batch_drive(spark, tmp_path):
+def test_streaming_wiring_matches_direct_batch_drive(spark, tmp_path, clean_drive):
     """End-to-end through a real checkpointed foreachBatch stream (one
     file per micro-batch) equals driving the batch fn directly."""
     tmp = str(tmp_path)
     batches = _batches(spark, n=3)
-    direct = _drive(spark, f"{tmp}/direct", batches)
+    direct = clean_drive
 
     src = f"{tmp}/src"
     for b, df in batches:  # one file per batch, arrival order by name
@@ -174,8 +190,6 @@ def test_semantic_stage_flags_match_q224_and_requires_embeddings(spark, tmp_path
     agree with q224's batch election on every quality-passing doc that
     reaches the stage (dup/gram reasons take precedence, so compare
     where the ingest reason is in the semantic stage's scope)."""
-    import pytest
-
     from flink_mingo_tail_spark.queries import load_registry
     from flink_mingo_tail_spark.streaming.curation_ingest import (
         build_eval_semantic_index,
@@ -233,7 +247,6 @@ def test_sem_dup_index_bootstrap_width_knob(spark, tmp_path):
     bucket width from the FIRST batch's embedded-passer count (the
     auto_n_bits occupancy rule) and later appends inherit the manifest
     width; the default (6) stays the oracle spelling."""
-    from flink_mingo_tail_spark.operators.dedup import _read_index_manifest
     from flink_mingo_tail_spark.operators.semantic_index import (
         _SEM_MANIFEST_SCHEMA,
     )
@@ -269,12 +282,12 @@ def test_sem_dup_index_bootstrap_width_knob(spark, tmp_path):
             .filter(F.col("embedding").isNotNull())
             .count()
         )
-        manifest = _read_index_manifest(spark, idx, _SEM_MANIFEST_SCHEMA)
+        manifest = read_manifest(spark, idx, _SEM_MANIFEST_SCHEMA)
         want = auto_n_bits(n0) if knob is None else knob
         assert manifest["n_bits"] == want, (label, n0, manifest)
         # append inherits the resolved width (no re-resolve on growth)
         ingest(docs.filter(F.expr("doc_id DIV 100") == 1), 1)
-        after = _read_index_manifest(spark, idx, _SEM_MANIFEST_SCHEMA)
+        after = read_manifest(spark, idx, _SEM_MANIFEST_SCHEMA)
         assert after["n_bits"] == want, (label, after)
 
 
@@ -292,23 +305,8 @@ def test_auto_compaction_cadence_fires_and_preserves_classification(spark, tmp_p
     batches = _batches(spark, n=3)
 
     def drive(tmp, **kw):
-        eval_path = f"{tmp}/eval_grams"
-        build_eval_gram_set(_docs(spark), eval_path)
-        ingest = make_curation_ingest_batch_fn(
-            f"{tmp}/index", eval_path, f"{tmp}/out", **kw
-        )
-        for b, df in batches:
-            ingest(df, b)
-            if b == 1:
-                ingest(df, 1)  # committed replay: pure index churn
-        return {
-            r.doc_id: r.reason
-            for r in spark.read.schema(
-                "doc_id long, source string, n_toks long, reason string"
-            )
-            .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
-            .collect()
-        }
+        # the committed replay of batch 1 is pure index churn
+        return _drive(spark, tmp, batches, replay_batch=1, **kw)
 
     plain = drive(str(tmp_path / "plain"))
     compacted = drive(str(tmp_path / "auto"), auto_compact_ratio=1.05)
@@ -330,8 +328,6 @@ def test_replay_path_schema_gate_matches_first_run(spark, tmp_path):
     drift (embedding column gone) must surface the SAME readable
     ValueError as a first run — not a raw AnalysisException from
     append_quality_passers (ADVICE round 12)."""
-    import pytest
-
     from flink_mingo_tail_spark.streaming.curation_ingest import (
         build_eval_semantic_index,
     )
@@ -366,8 +362,6 @@ def test_perceptual_dup_stage_grows_with_batches_and_subsets_q247(spark, tmp_pat
     everyone-index — every ingest 'perceptual_dup' doc must also be
     flagged by q247 under the same batching. A batch without a payload
     column is refused on first run AND on replay."""
-    import pytest
-
     from flink_mingo_tail_spark.operators.multimodal import (
         synthesize_media_variants,
     )
@@ -501,39 +495,22 @@ def test_estimated_dup_ratio_falls_back_when_shard0_is_empty(spark, tmp_path):
     assert estimated_dup_ratio(spark, f"{tmp_path}/empty") == 1.0
 
 
-def test_bloom_prefilter_knob_is_classification_invariant(spark, tmp_path):
+def test_bloom_prefilter_knob_is_classification_invariant(spark, tmp_path, clean_drive):
     """bloom_prefilter=True must leave every batch's verdicts identical
-    to the direct-probe run, maintain the Bloom sibling alongside the
-    content table (bootstrap + per-batch appends), and backfill it
-    when the knob is enabled on an index that predates it."""
-    import os
-
+    to the direct-probe run and maintain the Bloom sibling alongside
+    the content table: built from it before the first two-tier probe
+    (batch 1 of a fresh index, or the first batch after the knob is
+    enabled on an index that predates it), then appended per batch."""
     batches = _batches(spark, n=3)
 
-    def drive(tmp, bloom_from=None):
-        """bloom_from=None: never enable; an int: enable the knob from
-        that batch id on (a fresh batch fn per batch, as a restarted
-        stream with changed config would)."""
-        eval_path = f"{tmp}/eval_grams"
-        build_eval_gram_set(_docs(spark), eval_path)
-        for b, df in batches:
-            ingest = make_curation_ingest_batch_fn(
-                f"{tmp}/index",
-                eval_path,
-                f"{tmp}/out",
-                bloom_prefilter=bloom_from is not None and b >= bloom_from,
-            )
-            ingest(df, b)
-        return {
-            r.doc_id: r.reason
-            for r in spark.read.schema(
-                "doc_id long, source string, n_toks long, reason string"
-            )
-            .parquet(*committed_batch_dirs(spark, f"{tmp}/out", "ingest_batch=").values())
-            .collect()
-        }
+    def drive(tmp, bloom_from):
+        """Enable the knob from batch ``bloom_from`` on (a fresh batch fn,
+        as a restarted stream with changed config would)."""
+        if bloom_from:
+            _drive(spark, tmp, batches[:bloom_from])
+        return _drive(spark, tmp, batches[bloom_from:], bloom_prefilter=True)
 
-    plain = drive(str(tmp_path / "plain"))
+    plain = clean_drive
     bloomed = drive(str(tmp_path / "bloom"), bloom_from=0)
     assert plain == bloomed
     assert os.path.exists(f"{tmp_path}/bloom/index/bloom/manifest")
@@ -552,8 +529,6 @@ def test_span_boilerplate_stage_flags_planted_doc(spark, tmp_path):
     distinct tokens), but 50% standing-span coverage. The same overlap
     WITHIN one batch is not flagged (batch-vs-state granularity), and
     a committed replay converges."""
-    import os
-
     t1 = " ".join(f"t{j}" for j in range(20))
     t2 = " ".join(f"u{j}" for j in range(20))
     novel = " ".join(f"n{j}" for j in range(20))

@@ -113,9 +113,6 @@ def test_append_extends_index_and_manifest_is_enforced(spark, tmp_path):
     got = {r.doc_id: r.status for r in probe_dedup_index(probe, idx_path).collect()}
     assert got == {10: "exact_dup", 11: "exact_dup", 12: "new"}
 
-    # probe inherits manifest params; contradicting them is an error
-    with pytest.raises(ValueError, match="contradicts the index manifest"):
-        probe_dedup_index(probe, idx_path, n_shards=4).collect()
     # appending with drifted params is an error
     with pytest.raises(ValueError, match="refusing to append"):
         build_dedup_index(batch2, idx_path, mode="append", k=4)

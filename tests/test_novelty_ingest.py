@@ -6,11 +6,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from flink_mingo_tail_spark.operators.standing_index import read_manifest
 from flink_mingo_tail_spark.streaming.batch_commit import start_batch_stream
 from flink_mingo_tail_spark.streaming.novelty_ingest import (
+    _NOVELTY_MANIFEST_SCHEMA,
     build_novelty_index,
     make_novelty_batch_fn,
-    read_novelty_manifest,
     score_batch_novelty,
 )
 from flink_mingo_tail_spark.tables import load_table
@@ -29,7 +30,7 @@ def test_fresh_batch_is_fully_novel_and_repeat_is_not(spark, tmp_path):
     d = _docs(spark)
     seed = d.filter(F.col("doc_id") % 2 == 0)
     build_novelty_index(seed, idx, k=5, mode="overwrite")
-    assert read_novelty_manifest(spark, idx) == 5
+    assert read_manifest(spark, idx, _NOVELTY_MANIFEST_SCHEMA)["k"] == 5
 
     fn = make_novelty_batch_fn(idx, out)
     # batch 0: exact copies of seeded docs -> zero novelty
@@ -176,3 +177,17 @@ def test_q221_driver_row_matches_streaming_ingest(spark, tmp_path):
     got = sorted(tuple(r) for r in streamed.select(*cols).collect())
     want = sorted(tuple(r) for r in batch.select(*cols).collect())
     assert got == want and len(got) > 0
+
+
+def test_append_refuses_a_contradicting_shingle_size(spark, tmp_path):
+    """An append must not mix shingle sizes in one index: an explicit k
+    that contradicts the manifest is refused, an unset k inherits it."""
+    import pytest
+
+    idx = str(tmp_path / "idx")
+    d = _docs(spark)
+    build_novelty_index(d.limit(5), idx, k=5)
+    with pytest.raises(ValueError, match="refusing to append"):
+        build_novelty_index(d.limit(5), idx, k=7, mode="append")
+    build_novelty_index(d.limit(5), idx, mode="append")
+    assert read_manifest(spark, idx, _NOVELTY_MANIFEST_SCHEMA) == {"k": 5}

@@ -160,7 +160,7 @@ def test_auto_n_bits_knob_resolves_and_persists(spark, tmp_root):
     codified occupancy rule, persists the RESOLVED width in the
     manifest, grows with a larger corpus, and append inherits the
     manifest width instead of re-resolving from the batch."""
-    from flink_mingo_tail_spark.operators.dedup import _read_index_manifest
+    from flink_mingo_tail_spark.operators.standing_index import read_manifest
     from flink_mingo_tail_spark.operators.semantic_index import (
         _SEM_MANIFEST_SCHEMA,
         build_semantic_index,
@@ -171,7 +171,7 @@ def test_auto_n_bits_knob_resolves_and_persists(spark, tmp_root):
     n = e.count()
     p1 = f"{tmp_root}/auto1"
     build_semantic_index(e, p1, n_bits=None)
-    m1 = _read_index_manifest(spark, p1, _SEM_MANIFEST_SCHEMA)
+    m1 = read_manifest(spark, p1, _SEM_MANIFEST_SCHEMA)
     assert m1["n_bits"] == auto_n_bits(n)
     # 10x the rows (id-shifted copies) => wider buckets
     big = e
@@ -179,7 +179,7 @@ def test_auto_n_bits_knob_resolves_and_persists(spark, tmp_root):
         big = big.union(e.select((F.col("vec_id") + 100000 * i).alias("vec_id"), "embedding"))
     p2 = f"{tmp_root}/auto10"
     build_semantic_index(big, p2, n_bits=None)
-    m2 = _read_index_manifest(spark, p2, _SEM_MANIFEST_SCHEMA)
+    m2 = read_manifest(spark, p2, _SEM_MANIFEST_SCHEMA)
     assert m2["n_bits"] == auto_n_bits(10 * n) > m1["n_bits"]
     # append with n_bits=None inherits the manifest width (no re-resolve
     # from the 40-row batch, which would refuse)
@@ -187,7 +187,7 @@ def test_auto_n_bits_knob_resolves_and_persists(spark, tmp_root):
         (F.col("vec_id") + 999999).alias("vec_id"), "embedding"
     )
     build_semantic_index(batch, p1, n_bits=None, mode="append")
-    assert _read_index_manifest(spark, p1, _SEM_MANIFEST_SCHEMA) == m1
+    assert read_manifest(spark, p1, _SEM_MANIFEST_SCHEMA) == m1
 
 
 def test_audit_equals_q245_on_the_same_corpus(spark, tmp_root):
