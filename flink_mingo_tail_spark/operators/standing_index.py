@@ -13,7 +13,8 @@ This module owns the manifest:
 * ``read_manifest`` — the parameters, or None when the index has no
   manifest (it was never built). Any other failure raises: a transient
   IO error read as "not built" would let a caller bootstrap over a live
-  index or override its real parameters.
+  index or override its real parameters, and a manifest that stores
+  another family's columns is refused (``wrong index family?``).
 * ``require_manifest`` — the same, but a missing manifest raises
   ``no {family} index manifest at …`` (probes, compaction, audits).
 * ``resolve_params`` — the one build/append rule. ``overwrite`` fills
@@ -22,17 +23,22 @@ This module owns the manifest:
   from the manifest and refuses any explicit value that contradicts it.
 * ``write_manifest`` — the row an ``overwrite`` build ends with.
 * ``_swap_rewrite`` / ``_swap_rewrite_distinct`` — the crash-safe
-  in-place table rewrite behind compaction and the Bloom OR-merge.
+  in-place table rewrite behind compaction and the Bloom OR-merge;
+  ``has_parked_rewrite`` spots the copy a crashed rewrite parked.
 
-Manifests are parquet rather than a driver-side file, and existence
-checks go through the JVM Hadoop FileSystem (``path_exists``, which the
-per-batch commit protocol in streaming/batch_commit.py also uses), so
-the same code runs on local, HDFS and object-store paths.
+Manifests are parquet tables, and every file access goes through the
+JVM Hadoop FileSystem (``path_exists``, which the per-batch commit
+protocol in streaming/batch_commit.py also uses, and the manifest read
+itself), so the same code runs on local, HDFS and object-store paths.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
+
+# the names _swap_rewrite parks a table's copy under while it swaps
+_PARKED_SUFFIXES = (".compact.aside", ".compact.old")
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -49,24 +55,36 @@ def path_exists(spark: SparkSession, path: str) -> bool:
 
 
 def read_manifest(spark: SparkSession, path: str, schema: str) -> dict | None:
-    """The manifest of the index at ``path`` read with its family's
-    ``schema``, or None when ``{path}/manifest`` does not exist. A
-    manifest directory without rows (an overwrite that crashed before
-    its commit) also reads as None, so the next build bootstraps again.
-    Reading another family's manifest yields NULLs for the columns that
-    family does not write, and raises here rather than downstream."""
-    if not path_exists(spark, f"{path}/manifest"):
+    """The manifest of the index at ``path``, or None when
+    ``{path}/manifest`` holds no data file or no row (the index was
+    never built, or an overwrite crashed before its commit), so the next
+    build bootstraps again. A manifest whose stored columns are not
+    exactly those of the family's ``schema`` is another family's index
+    and raises here rather than downstream. The one-row file is read on
+    the driver, so a read costs no Spark job."""
+    jglob, fs = _hadoop_path(spark, f"{path}/manifest/part-*")
+    parts = fs.globStatus(jglob)
+    if not parts:
         return None
-    row = spark.read.schema(schema).parquet(f"{path}/manifest").head()
-    if row is None:
-        return None
-    params = row.asDict()
-    if any(v is None for v in params.values()):
+    io_utils = spark._jvm.org.apache.commons.io.IOUtils  # noqa: SLF001
+    stream = fs.open(parts[0].getPath())
+    try:
+        data = io_utils.toByteArray(stream)
+    finally:
+        stream.close()
+    # imported here, not at module level: streaming/apply.py imports this
+    # module for its FileSystem handle and reads no manifest
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(pa.BufferReader(data))
+    if set(table.column_names) != set(StructType.fromDDL(schema).fieldNames()):
         raise ValueError(
-            f"manifest at {path!r} does not match the expected schema "
-            f"({schema!r}) — wrong index family?"
+            f"manifest at {path!r} stores columns {table.column_names}, not "
+            f"the expected schema ({schema!r}) — wrong index family?"
         )
-    return params
+    rows = table.to_pylist()
+    return rows[0] if rows else None
 
 
 def require_manifest(spark: SparkSession, path: str, schema: str, family: str) -> dict:
@@ -119,6 +137,17 @@ def write_manifest(spark: SparkSession, path: str, schema: str, params: dict) ->
     ).parquet(f"{path}/manifest")
 
 
+def has_parked_rewrite(spark: SparkSession, index_path: str) -> bool:
+    """Whether a table of the index at ``index_path`` has a copy parked
+    by a ``_swap_rewrite`` that crashed mid-swap (a child named
+    ``{table}.compact.aside`` or ``{table}.compact.old``). The next
+    rewrite of that table folds the parked copy back in."""
+    jpath, fs = _hadoop_path(spark, index_path)
+    return bool(fs.exists(jpath)) and any(
+        st.getPath().getName().endswith(_PARKED_SUFFIXES) for st in fs.listStatus(jpath)
+    )
+
+
 def _swap_rewrite(
     spark, path: str, transform, partition_col: str | None
 ) -> tuple[int, int]:
@@ -165,8 +194,7 @@ def _swap_rewrite(
     pre-transform table (including any recovery re-appends)."""
     jvm = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     jvm_path, fs = _hadoop_path(spark, path)
-    aside_str = f"{path}.compact.aside"
-    old_str = f"{path}.compact.old"
+    aside_str, old_str = (f"{path}{suffix}" for suffix in _PARKED_SUFFIXES)
     tmp = f"{path}.compact.tmp"
     aside, old, jvm_tmp = jvm(aside_str), jvm(old_str), jvm(tmp)
 

@@ -78,102 +78,6 @@ _MODULES = (
 
 # The driver's CORRECTNESS pass checks a bounded prefix of the declared
 # registry (every round so far recorded exactly the first 50 entries).
-#
-# ROTATION, round 14 — steady-state policy, 50 slots:
-#   (a) round-14 newcomers, no driver row yet — inserted as they land;
-#   (b) changed-code re-proofs, per the round-13 deferral list + this
-#       round's maintenance work:
-#       - sql_dhash extraction (the five spelled dHash SQL replays now
-#         interpolate ONE helper): q225/q228 (shared _PH_CORE_SQL),
-#         q246, q247, q248, q249;
-#       - Bloom oracle factoring (_bloom_bits_cte/_bloom_probe_cte) +
-#         the negative probe re-key (ADVICE r13): q252, q254;
-#       - _swap_rewrite rewritten to the reconcile-by-append protocol
-#         (ADVICE r13 medium — closes the tmp-only-merge crash
-#         window): q244 (compaction), q253 (Bloom OR-merge append
-#         rides the same swap);
-#       - classify_batch/probe_dedup_index gained the default-off
-#         bloom_prefilter knob + estimated_dup_ratio gained the
-#         empty-shard/unsharded fallback: q234, q241 (the ingest
-#         twins; q246/q248 already above);
-#   (c) round-8 drain completes — all 24 remaining names, ascending;
-#       after this round no green row predates round 9;
-#   (d) round-9 cohort refresh, ascending query order (first 6 of 49
-#       after the eight newcomers took their slots; the prefix-50 cut
-#       leaves q142+ and the q192+/q201+ tail for r15).
-#
-# ROTATION, round 13 (historical) — steady-state policy, 50 slots:
-#   (a) round-13 newcomers, no driver row yet: q247 (perceptual
-#       standing-index probe — the round-12 verdict's #1 item), q248
-#       (curation ingest with the perceptual-dup stage live), q249
-#       (perceptual occupancy audit off the persisted band table), q250
-#       (cross-modal text-vs-perceptual dup agreement matrix), q251
-#       (semantic standing-index recall vs the dense ground truth),
-#       q252 (Bloom membership sketch + measured FP audit), q253 (the
-#       persisted incremental Bloom index, probe-then-OR-merge), q254
-#       (Bloom load audit: fill ratio, predicted vs measured FP);
-#   (b) changed-code re-proofs: q244 (compaction swap gained entry-time
-#       crash recovery; oracle now interpolates DEFAULT_N_TABLES —
-#       ADVICE items 1+3), q240/q242/q245 (operators/semantic_index
-#       gained the DEFAULT_N_TABLES constant — default value unchanged,
-#       re-proof by the q221 precedent), q225/q228 (_PH_BANDS/_PH_HAM
-#       now alias operators/perceptual_index's constants — values
-#       unchanged), q234/q241/q246 (classify_batch gained the
-#       default-off perceptual stage + the ingest body gained the
-#       replay schema gate and the default-off auto_compact_ratio
-#       knob — ADVICE item 2);
-#   (c) round-7 drain completes — the last 12 names (q177-q189);
-#       after this round no green row predates round 8;
-#   (d) round-8 cohort refresh, ascending query order (first 21 of 45;
-#       the prefix-50 cut leaves q123+ for round 14).
-#
-# ROTATION, round 12 (historical) — steady-state policy, 50 slots:
-#   (a) new round-12 queries with NO driver row yet (front-load-new-first
-#       precedence) — filled as they land;
-#   (b) changed-code re-proofs: q239 (top-token-share term rewritten from
-#       the O(distinct x tokens) per-distinct rescan to array_sort + a
-#       linear run-length fold — the round-11 verdict's #1 item; replica
-#       + plan tests green, sub-linear 1x/10x/25x probe 0.83/1.57/3.70 s),
-#       q193 (scorer extracted to token_weight/_SCORER_SQL for q238 in
-#       round 11 — outputs verified unchanged then, driver row due now);
-#   (c) round-6 drain completes: q168/q169/q170 — after this round no
-#       green row predates round 7;
-#   (d) round-7 cohort refresh, ascending query order (46 names; the
-#       prefix-50 cut leaves the tail for round 13).
-#
-# ROTATION, round 11 (historical) — steady-state policy, 50 slots:
-#   (a) 3 queries with NO driver row yet: q224 (semantic decontamination
-#       vs the held-out eval slice — the round-10 verdict's #1 item),
-#       q225 (perceptual-hash near-dup on the multimodal binary column,
-#       verdict #2), q226 (the composed curation pipeline, verdict #5);
-#   (b) 2 queries whose CODE changed this round (outputs verified
-#       unchanged, re-proof by discipline): q217b (refactored through
-#       mutual_knn_blocked for the n_bits=None auto knob), q221 (oracle
-#       now interpolates DEFAULT_SHINGLE_K — byte-identical SQL);
-#   (c1) the ENTIRE round-6 cohort — 34 names in ascending query order —
-#       after this round no green row predates round 7 (the verdict-#3
-#       drain);
-#   (a2) late-round-11 additions with no driver row either: q227
-#       (the per-stage curation report over q226's reason codes), q228
-#       (perceptual-dup connected components over q225's pairs), q229
-#       (temperature-reweighted source mixing), q230 (bounded
-#       edit-distance confirm over LSH-blocked candidates), q231
-#       (DSIR-style importance scoring), q232 (per-source BPE
-#       fertility), q233 (k-center greedy coreset), q234 (streaming
-#       curation ingest twin), q235 (JL projection distortion audit),
-#       q236 (mixing-plan report — q229's rollup view; q229's code
-#       moved through the shared _mix_walk, re-proof via its (a) slot),
-#       q237 (leakage-aware split), q238 (per-source quality
-#       terciles), q239 (one-pass quality-signal table);
-#   (b2) q73b re-proof (component construction extracted to the shared
-#       dedup_component_frame for q237);
-#   ROUND-12 QUEUE: q193 (scorer extracted to token_weight/_SCORER_SQL
-#       for q238 — outputs verified unchanged, needs its re-proof row),
-#       then q168/q169/q170 and the q100+ round-7 refresh;
-#   SLOT PRESSURE: 16 new + 3 changed fill 19 of 50, so the round-6
-#       drain covers 31/34 this round — q168/q169/q170 and the q100+
-#       round-7 refresh lead round 12 (freshness debt traded for driver
-#       rows on every new operator, front-load-new-first precedence).
 _NEEDS_DRIVER_ROW = (
     # ROUND-15 ROTATION (verdict-r14 item 3: front-load every touched
     # query before any drain/refresh name).

@@ -1278,15 +1278,13 @@ def q246_full_curation_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q260 — streaming curation WITH the standing span index (round 14)
 # ---------------------------------------------------------------------------
 
-_SPAN_DUP_FRAC = 0.5  # the boilerplate threshold (classify_batch default)
-
 
 def _span_curation_oracle() -> str:
     """q234's batch-granular replay extended with the BOILERPLATE stage:
     window keys of quality passers, matched against STRICTLY EARLIER
     batches' passers (y.b < x.b — batch-vs-state granularity), islands-
     merged per doc (the q256/q259 shared spelling pattern), flagged when
-    the merged mass reaches {_SPAN_DUP_FRAC} of the doc's tokens."""
+    the merged mass reaches SPAN_DUP_FRAC of the doc's tokens."""
     from flink_mingo_tail_spark.operators.dedup import (
         DEFAULT_SPAN_L,
         sql_lsh_band_keys,
@@ -1301,6 +1299,7 @@ def _span_curation_oracle() -> str:
         DEFAULT_BUDGET,
         DEFAULT_EVAL_MOD,
         DEFAULT_ROWS_PER_BAND,
+        SPAN_DUP_FRAC,
     )
 
     bands = sql_lsh_band_keys("sig", DEFAULT_ROWS_PER_BAND, MINHASH_K)
@@ -1347,7 +1346,7 @@ def _span_curation_oracle() -> str:
         JOIN swin y ON y.h = x.h AND y.b < x.b
     ), {_sql_span_islands('smark', out='sp')}, bp AS (
         SELECT q.doc_id FROM qp q JOIN sp ON sp.doc_id = q.doc_id
-        WHERE sp.dup_tokens >= {_SPAN_DUP_FRAC} * q.n_toks
+        WHERE sp.dup_tokens >= {SPAN_DUP_FRAC} * q.n_toks
     ), grams AS (
         SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS g
@@ -1398,19 +1397,19 @@ def q260_span_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage live (round 14): a growing standing SPAN index
     (operators/dedup.build_span_index) rides the loop — every batch's
     quality passers probe it AS OF BATCH START and a passer whose
-    standing-dup span mass reaches {_SPAN_DUP_FRAC} of its tokens is
+    standing-dup span mass reaches SPAN_DUP_FRAC of its tokens is
     flagged 'boilerplate' (templated content that survives document
     and near dedup because its novel remainder keeps the signature
     distinct); passers' window keys append after the batch commits
     (membership-monotone, replay-idempotent). Runs streaming/
     curation_ingest's OWN foreachBatch body — the oracle replays the
     batch-granular semantics exactly (y.b < x.b window matches,
-    islands merge, the {_SPAN_DUP_FRAC} threshold, and the budget
+    islands merge, the SPAN_DUP_FRAC threshold, and the budget
     prefix over the reduced gate).
 
     Stage order note: 'boilerplate' sits AFTER the text-dup stages
     (an exact/near dup is reported as such even if also span-covered)
-    and BEFORE decontamination — mirroring classify_batch's reason
+    and BEFORE decontamination — mirroring the ingest classification's reason
     precedence. Scale shape: per batch, O(batch-tokens) window keys
     semi-joined against the sharded standing key set + the bounded
     islands window; the index grows by appends, never re-scanned.
@@ -1424,5 +1423,4 @@ def q260_span_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         d,
         F.expr(f"doc_id DIV {_ING_BATCH_W}"),
         span_index_path="span_index",
-        span_dup_frac=_SPAN_DUP_FRAC,
     )

@@ -12,18 +12,18 @@ Two forms:
 * ``apply_cdc_stream`` — incremental: per micro-batch MERGE emulation
   (no Delta in this environment): existing state anti-joined against
   the batch's keys, then unioned with the batch's surviving upserts.
-  Atomic via write-to-temp + rename; idempotent per epoch because the
-  merge is keyed (re-applying the same batch converges).
+  Atomic via write-to-temp + rename through the Hadoop FileSystem (any
+  path scheme); idempotent per epoch because the merge is keyed
+  (re-applying the same batch converges).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from flink_mingo_tail_spark.operators.standing_index import _hadoop_path
 
 
 def latest_state_batch(
@@ -74,13 +74,21 @@ def apply_cdc_stream(
         compacted = latest_state_batch(batch_df, key, order_by, op_col, delete_op="__none__")
         upserts = compacted.filter(F.col(op_col) != delete_op).select(*data_cols)
         batch_keys = compacted.select(key).distinct()
+        # the swap goes through the Hadoop FileSystem, so a file://, HDFS
+        # or object-store state_dir works like a plain local path
         out_tmp = state_dir + ".tmp"
-        out_old = state_dir + ".old"
+        state, fs = _hadoop_path(spark, state_dir)
+        old, tmp = (_hadoop_path(spark, state_dir + s)[0] for s in (".old", ".tmp"))
+
+        def step(ok: bool, what: str) -> None:
+            if not ok:
+                raise IOError(f"apply_cdc_stream: {what} failed for {state_dir}")
+
         # Crash recovery: if a previous swap renamed state aside but died
         # before renaming tmp in, the .old dir IS the last good state.
-        if not os.path.exists(state_dir) and os.path.exists(out_old):
-            os.rename(out_old, state_dir)
-        if os.path.exists(state_dir):
+        if not fs.exists(state) and fs.exists(old):
+            step(fs.rename(old, state), "restoring .old")
+        if fs.exists(state):
             current = spark.read.parquet(state_dir)
             survivors = current.join(batch_keys, key, "left_anti")
             new_state = survivors.unionByName(upserts)
@@ -91,14 +99,14 @@ def apply_cdc_stream(
         # the old state aside (rename is atomic), rename tmp into place,
         # only then delete the aside copy. A crash at any point leaves
         # either state_dir or state_dir+".old" holding complete state —
-        # never the empty-rebuild hazard of rmtree-then-rename.
-        if os.path.exists(out_old):
-            shutil.rmtree(out_old)
-        if os.path.exists(state_dir):
-            os.rename(state_dir, out_old)
-        os.rename(out_tmp, state_dir)
-        if os.path.exists(out_old):
-            shutil.rmtree(out_old)
+        # never the empty-rebuild hazard of delete-then-rename.
+        if fs.exists(old):
+            step(fs.delete(old, True), "clearing a stale .old")
+        if fs.exists(state):
+            step(fs.rename(state, old), "renaming state aside")
+        step(fs.rename(tmp, state), "renaming the new state in")
+        if fs.exists(old):
+            step(fs.delete(old, True), "deleting the old state")
 
     return (
         deduped.writeStream.outputMode("append")

@@ -3,6 +3,7 @@ micro-batches materialize the correct current state, idempotently."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_mingo_tail_spark.streaming.apply import apply_cdc_stream, latest_state_batch
@@ -14,10 +15,14 @@ def _write(spark, path, rows):
     ).coalesce(1).write.mode("append").parquet(path)
 
 
-def test_apply_cdc_stream_upserts_and_deletes(spark, tmp_path):
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    ck = str(tmp_path / "ck")
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "uri"])
+def test_apply_cdc_stream_upserts_and_deletes(spark, tmp_path, as_uri):
+    """The same run on a plain local path and on a file:// URI: the
+    state swap goes through the Hadoop FileSystem, not os/shutil."""
+    base = tmp_path.as_uri() if as_uri else str(tmp_path)
+    src = f"{base}/src"
+    state = f"{base}/state"
+    ck = f"{base}/ck"
 
     # batch 1: insert k1, k2, k3
     _write(spark, src, [(1, "i", 1, "a1"), (2, "i", 2, "b1"), (3, "i", 3, "c1")])

@@ -8,6 +8,7 @@ the hash can't: the streaming wiring, replays, and state bootstrap."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +21,7 @@ from flink_mingo_tail_spark.streaming.batch_commit import (
 )
 from flink_mingo_tail_spark.streaming.curation_ingest import (
     build_eval_gram_set,
+    build_eval_semantic_index,
     make_curation_ingest_batch_fn,
 )
 from flink_mingo_tail_spark.tables import load_table
@@ -41,14 +43,12 @@ def _batches(spark, n=3, w=100):
     ]
 
 
-def _drive(spark, tmp, batches, *, replay_batch=None, **kw):
+def _drive(spark, tmp, batches, eval_path, *, replay_batch=None, **kw):
     """Sequential batch-fn drive into a scratch (fresh, or holding an
-    earlier drive's state); optionally re-invoke one batch immediately
-    after it commits (crash replay). ``kw`` goes to
-    make_curation_ingest_batch_fn. Returns every committed verdict."""
-    eval_path = f"{tmp}/eval_grams"
-    if not os.path.exists(eval_path):
-        build_eval_gram_set(_docs(spark), eval_path)
+    earlier drive's state) against the eval gram set at ``eval_path``;
+    optionally re-invoke one batch immediately after it commits (crash
+    replay). ``kw`` goes to make_curation_ingest_batch_fn. Returns every
+    committed verdict."""
     ingest = make_curation_ingest_batch_fn(
         f"{tmp}/index", eval_path, f"{tmp}/out", **kw
     )
@@ -67,22 +67,60 @@ def _drive(spark, tmp, batches, *, replay_batch=None, **kw):
 
 
 @pytest.fixture(scope="module")
-def clean_drive(spark, tmp_path_factory):
+def eval_grams(spark, tmp_path_factory):
+    """The eval gram set, built once: every drive in this module reads
+    it and none writes to it."""
+    path = str(tmp_path_factory.mktemp("eval") / "eval_grams")
+    build_eval_gram_set(_docs(spark), path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def embeddings(spark):
+    return load_table(spark, SF_SMOKE, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+
+
+@pytest.fixture(scope="module")
+def embedded_docs(spark, embeddings):
+    """The documents left-joined to their embeddings, computed once."""
+    d = _docs(spark)
+    docs = d.join(embeddings, d.doc_id == embeddings.vec_id, "left").drop("vec_id")
+    docs.persist()
+    yield docs
+    docs.unpersist()
+
+
+@pytest.fixture(scope="module")
+def eval_semantic_index(embeddings, tmp_path_factory):
+    """The static eval-side semantic index, built once (read-only)."""
+    path = str(tmp_path_factory.mktemp("eval_sem") / "sem_index")
+    build_eval_semantic_index(embeddings, path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def clean_drive(spark, tmp_path_factory, eval_grams):
     """The clean 3-batch drive, computed once: the replay, streaming-
     wiring and Bloom tests compare against it and never write to it."""
-    return _drive(spark, str(tmp_path_factory.mktemp("clean")), _batches(spark, n=3))
+    return _drive(
+        spark, str(tmp_path_factory.mktemp("clean")), _batches(spark, n=3), eval_grams
+    )
 
 
-def test_bootstrap_first_batch_has_no_dups_and_builds_index(spark, tmp_path):
+def test_bootstrap_first_batch_has_no_dups_and_builds_index(
+    spark, tmp_path, eval_grams
+):
     tmp = str(tmp_path)
     batches = _batches(spark, n=1)
-    got = _drive(spark, tmp, batches)
+    got = _drive(spark, tmp, batches, eval_grams)
     assert got, "batch 0 must classify"
     assert not {r for r in got.values() if r in ("exact_dup", "near_dup")}
     assert read_manifest(spark, f"{tmp}/index", _MANIFEST_SCHEMA) is not None
 
 
-def test_later_batches_probe_standing_state(spark, tmp_path):
+def test_later_batches_probe_standing_state(spark, tmp_path, eval_grams):
     """Replaying batch 0's docs as batch 1 (shifted ids) must classify
     every quality-passing doc as exact_dup — the index really carries
     state across batches."""
@@ -90,7 +128,7 @@ def test_later_batches_probe_standing_state(spark, tmp_path):
     d = _docs(spark)
     b0 = d.filter(F.expr("doc_id DIV 100") == 0)
     b1 = b0.withColumn("doc_id", F.col("doc_id") + 100_000)  # residues preserved
-    got = _drive(spark, tmp, [(0, b0), (1, b1)])
+    got = _drive(spark, tmp, [(0, b0), (1, b1)], eval_grams)
     got0 = {k: v for k, v in got.items() if k < 100_000}
     got1 = {k - 100_000: v for k, v in got.items() if k >= 100_000}
     for doc_id, r0 in got0.items():
@@ -102,14 +140,20 @@ def test_later_batches_probe_standing_state(spark, tmp_path):
         assert got1[doc_id] == "exact_dup", (doc_id, r0, got1[doc_id])
 
 
-def test_replayed_batch_is_idempotent_and_run_converges(spark, tmp_path, clean_drive):
+def test_replayed_batch_is_idempotent_and_run_converges(
+    spark, tmp_path, eval_grams, clean_drive
+):
     batches = _batches(spark, n=3)
     clean = clean_drive
-    replayed = _drive(spark, str(tmp_path / "replay"), batches, replay_batch=1)
+    replayed = _drive(
+        spark, str(tmp_path / "replay"), batches, eval_grams, replay_batch=1
+    )
     assert clean == replayed
 
 
-def test_streaming_wiring_matches_direct_batch_drive(spark, tmp_path, clean_drive):
+def test_streaming_wiring_matches_direct_batch_drive(
+    spark, tmp_path, eval_grams, clean_drive
+):
     """End-to-end through a real checkpointed foreachBatch stream (one
     file per micro-batch) equals driving the batch fn directly."""
     tmp = str(tmp_path)
@@ -119,8 +163,6 @@ def test_streaming_wiring_matches_direct_batch_drive(spark, tmp_path, clean_driv
     src = f"{tmp}/src"
     for b, df in batches:  # one file per batch, arrival order by name
         df.coalesce(1).write.mode("overwrite").parquet(f"{src}/b{b}")
-    eval_path = f"{tmp}/eval_grams"
-    build_eval_gram_set(_docs(spark), eval_path)
     stream = (
         spark.readStream.schema(DOCS_DDL)
         .option("maxFilesPerTrigger", "1")
@@ -129,7 +171,7 @@ def test_streaming_wiring_matches_direct_batch_drive(spark, tmp_path, clean_driv
     )
     q = start_batch_stream(
         stream,
-        make_curation_ingest_batch_fn(f"{tmp}/index", eval_path, f"{tmp}/out"),
+        make_curation_ingest_batch_fn(f"{tmp}/index", eval_grams, f"{tmp}/out"),
         f"{tmp}/ckpt",
     )
     q.awaitTermination(180)
@@ -149,14 +191,12 @@ def test_streaming_wiring_matches_direct_batch_drive(spark, tmp_path, clean_driv
     assert got == direct
 
 
-def test_budget_accumulates_across_batches(spark, tmp_path):
+def test_budget_accumulates_across_batches(spark, tmp_path, eval_grams):
     """With a budget one batch can exhaust, every later gate-passing
     doc is over_budget."""
     tmp = str(tmp_path)
-    eval_path = f"{tmp}/eval_grams"
-    build_eval_gram_set(_docs(spark), eval_path)
     ingest = make_curation_ingest_batch_fn(
-        f"{tmp}/index", eval_path, f"{tmp}/out", budget=50
+        f"{tmp}/index", eval_grams, f"{tmp}/out", budget=50
     )
     for b, df in _batches(spark, n=2):
         ingest(df, b)
@@ -184,25 +224,19 @@ def test_budget_accumulates_across_batches(spark, tmp_path):
             assert "kept" not in reasons, (b, src)
 
 
-def test_semantic_stage_flags_match_q224_and_requires_embeddings(spark, tmp_path):
+def test_semantic_stage_flags_match_q224_and_requires_embeddings(
+    spark, tmp_path, eval_grams, embedded_docs, eval_semantic_index
+):
     """With the semantic index wired in: (a) a batch without an
     embedding column is refused; (b) the per-batch semantic flags
     agree with q224's batch election on every quality-passing doc that
     reaches the stage (dup/gram reasons take precedence, so compare
     where the ingest reason is in the semantic stage's scope)."""
     from flink_mingo_tail_spark.queries import load_registry
-    from flink_mingo_tail_spark.streaming.curation_ingest import (
-        build_eval_semantic_index,
-    )
 
     tmp = str(tmp_path)
     d = _docs(spark)
-    e = load_table(spark, SF_SMOKE, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    eval_path, sem_path = f"{tmp}/eval_grams", f"{tmp}/sem_index"
-    build_eval_gram_set(d, eval_path)
-    build_eval_semantic_index(e, sem_path)
+    eval_path, sem_path = eval_grams, eval_semantic_index
 
     bad = make_curation_ingest_batch_fn(
         f"{tmp}/index0", eval_path, f"{tmp}/out0", semantic_index_path=sem_path
@@ -210,7 +244,7 @@ def test_semantic_stage_flags_match_q224_and_requires_embeddings(spark, tmp_path
     with pytest.raises(ValueError, match="no 'embedding' column"):
         bad(d.limit(5), 0)
 
-    docs = d.join(e, d.doc_id == e.vec_id, "left").drop("vec_id")
+    docs = embedded_docs
     ingest = make_curation_ingest_batch_fn(
         f"{tmp}/index", eval_path, f"{tmp}/out", semantic_index_path=sem_path
     )
@@ -242,7 +276,7 @@ def test_semantic_stage_flags_match_q224_and_requires_embeddings(spark, tmp_path
             assert doc_id not in sem_hits, doc_id
 
 
-def test_sem_dup_index_bootstrap_width_knob(spark, tmp_path):
+def test_sem_dup_index_bootstrap_width_knob(spark, tmp_path, eval_grams, embedded_docs):
     """sem_dup_n_bits=None auto-sizes the growing semantic-dup index's
     bucket width from the FIRST batch's embedded-passer count (the
     auto_n_bits occupancy rule) and later appends inherit the manifest
@@ -253,13 +287,7 @@ def test_sem_dup_index_bootstrap_width_knob(spark, tmp_path):
     from flink_mingo_tail_spark.operators.similarity import auto_n_bits
 
     tmp = str(tmp_path)
-    d = _docs(spark)
-    e = load_table(spark, SF_SMOKE, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    eval_path = f"{tmp}/eval_grams"
-    build_eval_gram_set(d, eval_path)
-    docs = d.join(e, d.doc_id == e.vec_id, "left").drop("vec_id")
+    eval_path, docs = eval_grams, embedded_docs
 
     for label, knob in (("auto", None), ("pinned", 6)):
         idx = f"{tmp}/semdup_{label}"
@@ -291,7 +319,9 @@ def test_sem_dup_index_bootstrap_width_knob(spark, tmp_path):
         assert after["n_bits"] == want, (label, after)
 
 
-def test_auto_compaction_cadence_fires_and_preserves_classification(spark, tmp_path):
+def test_auto_compaction_cadence_fires_and_preserves_classification(
+    spark, tmp_path, eval_grams
+):
     """auto_compact_ratio wires q244's compaction operator onto the
     ingest loop: a replayed batch churns the index (verbatim re-append),
     the sampled-shard dup-ratio estimate trips the threshold, compaction
@@ -306,7 +336,7 @@ def test_auto_compaction_cadence_fires_and_preserves_classification(spark, tmp_p
 
     def drive(tmp, **kw):
         # the committed replay of batch 1 is pure index churn
-        return _drive(spark, tmp, batches, replay_batch=1, **kw)
+        return _drive(spark, tmp, batches, eval_grams, replay_batch=1, **kw)
 
     plain = drive(str(tmp_path / "plain"))
     compacted = drive(str(tmp_path / "auto"), auto_compact_ratio=1.05)
@@ -323,24 +353,15 @@ def test_auto_compaction_cadence_fires_and_preserves_classification(spark, tmp_p
     assert content_rows("auto") < content_rows("plain")
 
 
-def test_replay_path_schema_gate_matches_first_run(spark, tmp_path):
-    """The replay short-circuit skips classify_batch, but a schema
+def test_replay_path_schema_gate_matches_first_run(
+    spark, tmp_path, eval_grams, embedded_docs, eval_semantic_index
+):
+    """The replay short-circuit skips the classification, but a schema
     drift (embedding column gone) must surface the SAME readable
     ValueError as a first run — not a raw AnalysisException from
     append_quality_passers (ADVICE round 12)."""
-    from flink_mingo_tail_spark.streaming.curation_ingest import (
-        build_eval_semantic_index,
-    )
-
     tmp = str(tmp_path)
-    d = _docs(spark)
-    e = load_table(spark, SF_SMOKE, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    eval_path, sem_path = f"{tmp}/eval_grams", f"{tmp}/sem_index"
-    build_eval_gram_set(d, eval_path)
-    build_eval_semantic_index(e, sem_path)
-    docs = d.join(e, d.doc_id == e.vec_id, "left").drop("vec_id")
+    eval_path, sem_path, docs = eval_grams, eval_semantic_index, embedded_docs
     ingest = make_curation_ingest_batch_fn(
         f"{tmp}/index",
         eval_path,
@@ -354,7 +375,9 @@ def test_replay_path_schema_gate_matches_first_run(spark, tmp_path):
         ingest(b0.drop("embedding"), 0)  # replay with drifted schema
 
 
-def test_perceptual_dup_stage_grows_with_batches_and_subsets_q247(spark, tmp_path):
+def test_perceptual_dup_stage_grows_with_batches_and_subsets_q247(
+    spark, tmp_path, eval_grams
+):
     """Growing perceptual index stage: batch 0 probes an empty index
     (flags nothing), later batches flag docs whose payload dHash sits
     within ham of a PRIOR batch's quality passer, and — because the
@@ -372,8 +395,7 @@ def test_perceptual_dup_stage_grows_with_batches_and_subsets_q247(spark, tmp_pat
         F.col("media_id").alias("doc_id"), "payload"
     )
     docs = d.join(media, "doc_id")
-    eval_path = f"{tmp}/eval_grams"
-    build_eval_gram_set(d, eval_path)
+    eval_path = eval_grams
 
     bad = make_curation_ingest_batch_fn(
         f"{tmp}/index0", eval_path, f"{tmp}/out0",
@@ -416,7 +438,9 @@ def test_perceptual_dup_stage_grows_with_batches_and_subsets_q247(spark, tmp_pat
         ingest(docs.filter(F.col("doc_id") % 3 == 0).drop("payload"), 0)
 
 
-def test_semantic_dup_stage_grows_with_batches_and_subsets_q242(spark, tmp_path):
+def test_semantic_dup_stage_grows_with_batches_and_subsets_q242(
+    spark, tmp_path, eval_grams, embedded_docs
+):
     """Growing-index semantic-dup stage: the index starts empty (batch
     0 flags nothing), later batches flag docs whose embedding sits
     within DEFAULT_SEM_DUP_TAU of a PRIOR batch's quality-passing doc,
@@ -426,13 +450,7 @@ def test_semantic_dup_stage_grows_with_batches_and_subsets_q242(spark, tmp_path)
     from flink_mingo_tail_spark.queries import load_registry
 
     tmp = str(tmp_path)
-    d = _docs(spark)
-    e = load_table(spark, SF_SMOKE, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    eval_path = f"{tmp}/eval_grams"
-    build_eval_gram_set(d, eval_path)
-    docs = d.join(e, d.doc_id == e.vec_id, "left").drop("vec_id")
+    eval_path, docs = eval_grams, embedded_docs
     ingest = make_curation_ingest_batch_fn(
         f"{tmp}/index",
         eval_path,
@@ -495,7 +513,9 @@ def test_estimated_dup_ratio_falls_back_when_shard0_is_empty(spark, tmp_path):
     assert estimated_dup_ratio(spark, f"{tmp_path}/empty") == 1.0
 
 
-def test_bloom_prefilter_knob_is_classification_invariant(spark, tmp_path, clean_drive):
+def test_bloom_prefilter_knob_is_classification_invariant(
+    spark, tmp_path, eval_grams, clean_drive
+):
     """bloom_prefilter=True must leave every batch's verdicts identical
     to the direct-probe run and maintain the Bloom sibling alongside
     the content table: built from it before the first two-tier probe
@@ -507,8 +527,10 @@ def test_bloom_prefilter_knob_is_classification_invariant(spark, tmp_path, clean
         """Enable the knob from batch ``bloom_from`` on (a fresh batch fn,
         as a restarted stream with changed config would)."""
         if bloom_from:
-            _drive(spark, tmp, batches[:bloom_from])
-        return _drive(spark, tmp, batches[bloom_from:], bloom_prefilter=True)
+            _drive(spark, tmp, batches[:bloom_from], eval_grams)
+        return _drive(
+            spark, tmp, batches[bloom_from:], eval_grams, bloom_prefilter=True
+        )
 
     plain = clean_drive
     bloomed = drive(str(tmp_path / "bloom"), bloom_from=0)
@@ -522,7 +544,7 @@ def test_bloom_prefilter_knob_is_classification_invariant(spark, tmp_path, clean
     assert os.path.exists(f"{tmp_path}/late/index/bloom/manifest")
 
 
-def test_span_boilerplate_stage_flags_planted_doc(spark, tmp_path):
+def test_span_boilerplate_stage_flags_planted_doc(spark, tmp_path, eval_grams):
     """A later-batch doc sharing exactly half its tokens (one long
     contiguous span) with an earlier passer is flagged 'boilerplate':
     too little overlap for the 1x8 near-dup band (J ~ 1/3 over
@@ -537,11 +559,9 @@ def test_span_boilerplate_stage_flags_planted_doc(spark, tmp_path):
     a = (11, "web", "de", 80, t1 + " " + t2)
     b = (23, "web", "de", 80, t1 + " " + novel)       # later batch: flagged
     c = (12, "web", "de", 80, t1 + " " + novel2)      # same batch as a: not flagged
-    eval_path = f"{tmp_path}/eval_grams"
-    build_eval_gram_set(_docs(spark), eval_path)
     ingest = make_curation_ingest_batch_fn(
         f"{tmp_path}/index",
-        eval_path,
+        eval_grams,
         f"{tmp_path}/out",
         span_index_path=f"{tmp_path}/span_index",
     )
@@ -560,3 +580,28 @@ def test_span_boilerplate_stage_flags_planted_doc(spark, tmp_path):
     assert got[11] == "kept"
     assert got[12] == "kept"  # intra-batch overlap never flags
     assert os.path.exists(f"{tmp_path}/span_index/manifest")
+
+
+def test_parked_compaction_copy_is_reconciled_by_the_next_batch(
+    spark, tmp_path, eval_grams, clean_drive
+):
+    """A copy parked by a compaction that crashed mid-swap
+    (``content.compact.old``) forces the ingest's compaction at the next
+    batch, even with a churn ratio that never trips: after that batch no
+    parked copy remains under the index, and the verdicts equal the
+    clean drive's."""
+    tmp = str(tmp_path)
+    index = f"{tmp}/index"
+    batches = _batches(spark, n=3)
+    _drive(spark, tmp, batches[:1], eval_grams)
+    shutil.copytree(f"{index}/content", f"{index}/content.compact.old")
+    _drive(spark, tmp, batches[1:2], eval_grams, auto_compact_ratio=100.0)
+    parked = [
+        name
+        for _, dirs, _ in os.walk(index)
+        for name in dirs
+        if name.endswith((".compact.aside", ".compact.old"))
+    ]
+    assert parked == []
+    got = _drive(spark, tmp, batches[2:], eval_grams, auto_compact_ratio=100.0)
+    assert got == clean_drive
