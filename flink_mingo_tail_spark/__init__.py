@@ -18,9 +18,12 @@ Nothing in here is a port of the reference's Java: the reference defines
 WHAT to compute (see SURVEY.md), Spark decides HOW.
 """
 
-__version__ = "0.1.0"
-
+# first, so that every Spark Python worker that unpickles package code
+# refreshes the zip archives on sys.path through it at each task start
+from flink_mingo_tail_spark import _zipcache  # noqa: F401
 from flink_mingo_tail_spark.session import build_session, prepare_session
 from flink_mingo_tail_spark.tables import TABLE_NAMES, load_tables
+
+__version__ = "0.1.0"
 
 __all__ = ["build_session", "prepare_session", "load_tables", "TABLE_NAMES"]

@@ -24,7 +24,9 @@ This module owns the manifest:
 * ``write_manifest`` — the row an ``overwrite`` build ends with.
 * ``_swap_rewrite`` / ``_swap_rewrite_distinct`` — the crash-safe
   in-place table rewrite behind compaction and the Bloom OR-merge;
-  ``has_parked_rewrite`` spots the copy a crashed rewrite parked.
+  ``restore_parked_tables`` puts back a table a crashed rewrite left
+  parked under another name, and ``has_parked_rewrite`` spots a parked
+  copy left beside a present table.
 
 Manifests are parquet tables, and every file access goes through the
 JVM Hadoop FileSystem (``path_exists``, which the per-batch commit
@@ -37,8 +39,10 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
-# the names _swap_rewrite parks a table's copy under while it swaps
+# the names _swap_rewrite parks a table's copy under while it swaps, and
+# the scratch name it writes the rewritten table to
 _PARKED_SUFFIXES = (".compact.aside", ".compact.old")
+_TMP_SUFFIX = ".compact.tmp"
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -137,6 +141,50 @@ def write_manifest(spark: SparkSession, path: str, schema: str, params: dict) ->
     ).parquet(f"{path}/manifest")
 
 
+def _restore_parked_table(spark: SparkSession, path: str) -> None:
+    """``_swap_rewrite``'s entry restore: when the table at ``path`` is
+    missing because a rewrite crashed between its two renames, rename
+    back the newest parked copy — ``{path}.compact.aside``, else the
+    legacy ``{path}.compact.old``, else a COMPLETE ``{path}.compact.tmp``
+    (``_SUCCESS`` present). Raises when nothing can be restored."""
+    jpath, fs = _hadoop_path(spark, path)
+    if fs.exists(jpath):
+        return
+    jvm = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    for suffix in _PARKED_SUFFIXES:
+        parked = jvm(f"{path}{suffix}")
+        if fs.exists(parked):
+            if not fs.rename(parked, jpath):
+                raise IOError(f"compaction: could not restore {path} from {parked}")
+            return
+    tmp = f"{path}{_TMP_SUFFIX}"
+    if not fs.exists(jvm(f"{tmp}/_SUCCESS")):
+        raise IOError(
+            f"compaction: {path} is missing and no {path}.compact.aside, "
+            f"{path}.compact.old, or complete {tmp} exists to recover from"
+        )
+    if not fs.rename(jvm(tmp), jpath):
+        raise IOError(f"compaction: could not restore {path} from {tmp}")
+
+
+def restore_parked_tables(spark: SparkSession, index_path: str) -> None:
+    """Put back every table of the index at ``index_path`` that a
+    rewrite which crashed between its two renames left parked with no
+    table under its own name, so that a probe finds it. A parked copy
+    beside a present table is left for the next rewrite to fold in."""
+    jpath, fs = _hadoop_path(spark, index_path)
+    if not fs.exists(jpath):
+        return
+    tables = {
+        name[: -len(suffix)]
+        for name in (st.getPath().getName() for st in fs.listStatus(jpath))
+        for suffix in (*_PARKED_SUFFIXES, _TMP_SUFFIX)
+        if name.endswith(suffix)
+    }
+    for table in sorted(tables):
+        _restore_parked_table(spark, f"{index_path}/{table}")
+
+
 def has_parked_rewrite(spark: SparkSession, index_path: str) -> bool:
     """Whether a table of the index at ``index_path`` has a copy parked
     by a ``_swap_rewrite`` that crashed mid-swap (a child named
@@ -164,11 +212,13 @@ def _swap_rewrite(
     window ADVICE flagged): RECONCILE parked siblings first, then a
     clean swap whose only deletes happen after rename-in.
 
-    1. Entry restore: if ``path`` is missing, rename back the newest
-       parked canonical — ``{path}.compact.aside`` (pre-swap copy from
-       a crash between the two renames), else the legacy
-       ``{path}.compact.old``, else a COMPLETE ``{path}.compact.tmp``
-       (``_SUCCESS`` present).
+    1. Entry restore (``_restore_parked_table``): if ``path`` is
+       missing, rename back the newest parked canonical —
+       ``{path}.compact.aside`` (pre-swap copy from a crash between the
+       two renames), else the legacy ``{path}.compact.old``, else a
+       COMPLETE ``{path}.compact.tmp`` (``_SUCCESS`` present). The
+       curation ingest runs the same restore at batch start
+       (``restore_parked_tables``), before its probes read the table.
     2. Reconcile-by-append: for each surviving sibling (aside, legacy
        old, complete tmp), APPEND its rows into ``path`` and only then
        delete it. A crash between append and delete re-appends on the
@@ -195,7 +245,7 @@ def _swap_rewrite(
     jvm = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     jvm_path, fs = _hadoop_path(spark, path)
     aside_str, old_str = (f"{path}{suffix}" for suffix in _PARKED_SUFFIXES)
-    tmp = f"{path}.compact.tmp"
+    tmp = f"{path}{_TMP_SUFFIX}"
     aside, old, jvm_tmp = jvm(aside_str), jvm(old_str), jvm(tmp)
 
     def _tmp_complete() -> bool:
@@ -207,26 +257,7 @@ def _swap_rewrite(
             writer = writer.partitionBy(partition_col)
         writer.parquet(path)
 
-    if not fs.exists(jvm_path):
-        # prior run crashed between rename-aside and rename-in: the
-        # canonical table is parked — restore the newest copy before
-        # reading (otherwise re-running fails at spark.read forever)
-        for parked in (aside, old):
-            if fs.exists(parked):
-                if not fs.rename(parked, jvm_path):
-                    raise IOError(
-                        f"compaction: could not restore {path} from {parked}"
-                    )
-                break
-        else:
-            if _tmp_complete():
-                if not fs.rename(jvm_tmp, jvm_path):
-                    raise IOError(f"compaction: could not restore {path} from {tmp}")
-            else:
-                raise IOError(
-                    f"compaction: {path} is missing and no {aside_str}, "
-                    f"{old_str}, or complete {tmp} exists to recover from"
-                )
+    _restore_parked_table(spark, path)
     # reconcile surviving siblings into path (append, THEN delete — a
     # sibling is never removed until its rows are durably in path)
     for sib_jvm, sib_str in ((aside, aside_str), (old, old_str)):

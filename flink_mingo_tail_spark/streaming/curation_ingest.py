@@ -152,6 +152,7 @@ from flink_mingo_tail_spark.operators.standing_index import (
     has_parked_rewrite,
     path_exists,
     read_manifest,
+    restore_parked_tables,
 )
 from flink_mingo_tail_spark.streaming.batch_commit import (
     commit_batch_once,
@@ -578,6 +579,11 @@ def make_curation_ingest_batch_fn(
                 "a perceptual index path is set but the batch has no 'payload' "
                 "column — join the media payloads onto the stream upstream of ingest"
             )
+        # a rewrite that crashed between its two renames left a table
+        # parked under another name: put it back before any probe reads
+        # it (a replay of this batch restores the same way)
+        for path, _, _ in growing:
+            restore_parked_tables(spark, path)
         # the batch-start reading of every wired growing index
         manifests = {
             path: read_manifest(spark, path, schema) for path, schema, _ in growing

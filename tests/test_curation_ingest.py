@@ -605,3 +605,21 @@ def test_parked_compaction_copy_is_reconciled_by_the_next_batch(
     assert parked == []
     got = _drive(spark, tmp, batches[2:], eval_grams, auto_compact_ratio=100.0)
     assert got == clean_drive
+
+
+def test_table_parked_between_compaction_renames_is_restored_at_batch_start(
+    spark, tmp_path, eval_grams, clean_drive
+):
+    """A compaction that crashed between its two renames leaves the
+    content table parked at ``content.compact.aside`` with no
+    ``content``. The next batch puts it back before its probes read it,
+    so the ingest resumes and batch 1's verdicts equal the clean drive's."""
+    tmp = str(tmp_path)
+    index = f"{tmp}/index"
+    batches = _batches(spark, n=2)
+    _drive(spark, tmp, batches[:1], eval_grams)
+    os.rename(f"{index}/content", f"{index}/content.compact.aside")
+    got = _drive(spark, tmp, batches[1:], eval_grams)
+    assert got == {k: v for k, v in clean_drive.items() if k // 100 < 2}
+    assert os.path.isdir(f"{index}/content")
+    assert not os.path.exists(f"{index}/content.compact.aside")
